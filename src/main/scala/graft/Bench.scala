@@ -163,7 +163,7 @@ object Bench {
     // One full measurement pass: times every query with the mid-run control
     // series interleaved. A pass is self-contained (its own start/mid/end
     // probes) so a retry's artifact has one coherent measurement context.
-    def measurePass(): (Seq[(String, Double, Double)], Vector[Double]) = {
+    def measurePass(): (Seq[(String, Double, Double, Option[String])], Vector[Double]) = {
       val controlStart = controlProbe()
       // Mid-run control series: start/end probes alone miss the host's
       // INTERMITTENT stall windows (round-6's driver run had 2.6-42x
@@ -205,8 +205,12 @@ object Bench {
           graft.queries.TableOps.reclaimTempDirs()
           graft.queries.FixtureClock.reset()
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          (name, (System.nanoTime() - t0) / 1e9, graft.queries.FixtureClock.sec)
+          // a gate that throws is a failure, never a (fast) time: its
+          // exception class is reported and it stays out of the totals
+          val error =
+            try { fn(spark, sfDir).count(); None }
+            catch { case e: Throwable => Some(e.getClass.getName) }
+          (name, (System.nanoTime() - t0) / 1e9, graft.queries.FixtureClock.sec, error)
         }
       controls += controlProbe()
       (results, controls.toVector)
@@ -225,10 +229,10 @@ object Bench {
       controls.zipWithIndex.collect {
         case (c, j) if median > 0 && c > 1.8 * median && c - median > 0.15 => j
       }.toSet
-    def suspectsOf(results: Seq[(String, Double, Double)],
+    def suspectsOf(results: Seq[(String, Double, Double, Option[String])],
         spiked: Set[Int]): Seq[String] =
       results.zipWithIndex.collect {
-        case ((name, _, _), i) if spiked.contains(i / 12) || spiked.contains(i / 12 + 1) => name
+        case ((name, _, _, _), i) if spiked.contains(i / 12) || spiked.contains(i / 12 + 1) => name
       }
     // Self-policing (round-8 verdict #1): two consecutive rounds the
     // RECORDED driver bench was a stalled-host capture (r7 hf 4.54, r8 hf
@@ -261,16 +265,20 @@ object Bench {
     // is ~1.8 kB. The subset filter (if any) is recorded so a partial local
     // run is distinguishable from a full gate run.
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
+    val timed = results.collect { case (k, v, f, None) => (k, v, f) }
+    val failed = results.collect { case (k, _, _, Some(err)) =>
+      s"""{"name":"$k","error":"$err"}""" }.mkString("[", ",", "]")
+    val qs = timed.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     // fixture-build seconds INCLUDED in each query's number above, reported
     // for the instrumented builders (only entries >= 0.1s, 2dp, to keep the
     // one-line JSON under the driver's log-tail budget): query-time deltas
     // across rounds should be read net of this column.
     def fmt2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val fx = results.collect { case (k, _, f) if f >= 0.1 => "\"" + k + "\":" + fmt2(f) }
+    val fx = timed.collect { case (k, _, f) if f >= 0.1 => "\"" + k + "\":" + fmt2(f) }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = if (timed.nonEmpty) timed.map(_._2).sum else 0.0
+    val nFailed = results.size - timed.size
     val filter = only.map(s => s""","filter":"${s.toSeq.sorted.mkString(",")}"""").getOrElse("")
     // host_factor spans the whole series: max/median flags a stall ANYWHERE
     // in the run (end/start alone reads 1.0 when a mid-run window has closed
@@ -324,7 +332,7 @@ object Bench {
         }
       } else headRef.take(12)
     } catch { case scala.util.control.NonFatal(_) => "unknown" }
-    val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"fixture_sec":$fx,"control_start_sec":${fmt(controls.head)},"control_end_sec":${fmt(controls.last)},"controls":$ctl,"host_factor":${fmt(hostFactor)},"stall_suspects":$sus,"captured_at":"$capturedAt","git_head":"$gitHead","sf":"$sfDir"$filter$verdict}"""
+    val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${timed.size},"queries":$qs,"failed":$failed,"fixture_sec":$fx,"control_start_sec":${fmt(controls.head)},"control_end_sec":${fmt(controls.last)},"controls":$ctl,"host_factor":${fmt(hostFactor)},"stall_suspects":$sus,"captured_at":"$capturedAt","git_head":"$gitHead","sf":"$sfDir"$filter$verdict}"""
     println(fullJson)
     // Persist the full line to a FILE as well (round-9 verdict #6): the
     // driver's log-tail capture truncates the ~165-query map (BENCH_r09
@@ -409,7 +417,7 @@ object Bench {
     // contains a complete parseable summary (total / n / host_factor /
     // suspect count / verdict), so a round gate is never blind on the
     // headline even when the per-query map is lost.
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"host_factor":${fmt(hostFactor)},"n_stall_suspects":${suspects.size},"summary_of":"full JSON on previous line","sf":"$sfDir"$filter$verdict}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${timed.size},"n_failed":$nFailed,"host_factor":${fmt(hostFactor)},"n_stall_suspects":${suspects.size},"summary_of":"full JSON on previous line","sf":"$sfDir"$filter$verdict}""")
     spark.stop()
     // Exit nonzero AFTER printing (round-8 verdict #1): the driver still
     // records the numbers, but a stalled capture can never again be

@@ -1157,7 +1157,7 @@ object MaintenanceOps {
     // planning the fact read; here the SAME prune happens INSIDE one
     // executing SQL plan — Spark's dynamic-pruning subquery reuses the
     // join's broadcast exchange, hands the collected o_orderkey set to the
-    // SPJ batch scan's SupportsRuntimeFiltering.filter, and the scan
+    // key-grouped batch scan's SupportsRuntimeFiltering.filter, and the scan
     // empties every bucket those keys cannot murmur3-hash into (the write
     // path's own transform, so a pruned file provably holds no match).
     // The dim's selective filter sits on a NON-join column (o_custkey), so
@@ -1223,11 +1223,9 @@ object MaintenanceOps {
     // for NON-bucket partition layouts — the reference's flagship
     // medallion shape (docs/12-lakehouse-patterns.md:107-126): a
     // month-partitioned fact joined to a selective date dim. g_dpp_join
-    // covers the bucket-SPJ scan; here the fact is PARTITIONED BY
-    // months(o_orderdate), served by the generalized GraftDppScan
-    // WITH NO CONF SET (r16 verdict #1: the shape-routed default read
-    // path — this gate is the proof the flag is gone), and the dim's
-    // selective filter sits on
+    // covers the key-grouped (bucket) layout; here the fact is PARTITIONED BY
+    // months(o_orderdate), served by GraftDppScan on the shape-routed
+    // default read path, and the dim's selective filter sits on
     // d_quarter, a DERIVED non-join column Catalyst cannot statically
     // infer through — only the dynamic-pruning subquery's collected
     // d_date keys can prune, mapped through the table's MONTH transform
@@ -1242,80 +1240,79 @@ object MaintenanceOps {
       (s: SparkSession, d: String) => {
         import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
         registerSqlCatalog(s)
-        require(s.conf.getOption("graft.dpp.enabled").isEmpty,
-          "g_dpp_partition_join certifies the DEFAULT route — no conf may be set");
-        {
-          val sfx = java.util.UUID.randomUUID().toString.take(8)
-          val fact = s"dppm_$sfx"
-          FixtureClock.timed {
-            Tables.orders(s, d).createOrReplaceTempView("orders_src_dppm")
-            s.sql(s"""CREATE TABLE graft_sql.db.$fact (
-              |  o_orderdate DATE, o_totalprice DOUBLE)
-              |PARTITIONED BY (months(o_orderdate))""".stripMargin)
-            s.sql(s"INSERT INTO graft_sql.db.$fact " +
-              "SELECT CAST(o_orderdate AS DATE), o_totalprice FROM orders_src_dppm")
-          }
-          s.sql("""SELECT DISTINCT CAST(o_orderdate AS DATE) AS d_date,
-            |  concat(year(o_orderdate), 'Q', quarter(o_orderdate)) AS d_quarter
-            |FROM orders_src_dppm""".stripMargin)
-            .createOrReplaceTempView("dates_dim_dppm")
-          graft.table.QueryHistory.clear()
-          val probe = s.sql(
-            s"""SELECT d.d_quarter, count(*) AS n,
-               |  CAST(SUM(CAST(f.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-               |FROM graft_sql.db.$fact f JOIN dates_dim_dppm d
-               |  ON f.o_orderdate = d.d_date
-               |WHERE d.d_quarter = '1996Q2'
-               |GROUP BY 1 ORDER BY 1""".stripMargin)
-          probe.collect()
-          val top = probe.queryExecution.executedPlan
-          val plans = top +: top.collect { case a: AdaptiveSparkPlanExec => a.executedPlan }
-          val dppInPlan = plans.exists(_.toString.contains("dynamicpruning"))
-          val dppScan = plans.exists(_.toString.contains("graft-dpp"))
-          val rf = graft.table.QueryHistory.all.filter(m =>
-            m.table == s"db.$fact" && m.predicate.startsWith("runtime-in"))
-          val pruned = rf.nonEmpty &&
-            rf.forall(m => m.filesTotal > 1 && m.filesScanned < m.filesTotal)
-
-          // AS-OF leg (r17 verdict #5): the docs/05 audit-then-join pattern —
-          // a star join over VERSION AS OF keeps execution-time pruning.
-          // Decoy rows land AFTER the pinned snapshot, so a travel-broken
-          // read (serving the head) would surface them and fail the oracle;
-          // the traveled probe must still route graft-dpp, prune, and stay
-          // row-identical to the substitution path (triple equality).
-          val snap = s.sql(s"SELECT max(snapshot_id) FROM graft_sql.db.$fact.snapshots")
-            .head().getLong(0)
+        val sfx = java.util.UUID.randomUUID().toString.take(8)
+        val fact = s"dppm_$sfx"
+        FixtureClock.timed {
+          Tables.orders(s, d).createOrReplaceTempView("orders_src_dppm")
+          s.sql(s"""CREATE TABLE graft_sql.db.$fact (
+            |  o_orderdate DATE, o_totalprice DOUBLE)
+            |PARTITIONED BY (months(o_orderdate))""".stripMargin)
           s.sql(s"INSERT INTO graft_sql.db.$fact " +
-            "SELECT date_add(DATE'1990-01-01', CAST(id * 31 AS INT)), CAST(0.0 AS DOUBLE) " +
-            "FROM range(0, 12)")
-          graft.table.QueryHistory.clear()
-          val asofSql =
-            s"""SELECT d.d_quarter, count(*) AS n,
-               |  CAST(SUM(CAST(f.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-               |FROM graft_sql.db.$fact VERSION AS OF $snap f JOIN dates_dim_dppm d
-               |  ON f.o_orderdate = d.d_date
-               |WHERE d.d_quarter = '1996Q2'
-               |GROUP BY 1 ORDER BY 1""".stripMargin
-          val probeAsof = s.sql(asofSql)
-          val asofRows = probeAsof.collect()
-          val topA = probeAsof.queryExecution.executedPlan
-          val plansA = topA +: topA.collect { case a: AdaptiveSparkPlanExec => a.executedPlan }
-          val dppAsof = plansA.exists(_.toString.contains("dynamicpruning")) &&
-            plansA.exists(_.toString.contains("graft-dpp"))
-          val rfA = graft.table.QueryHistory.all.filter(m =>
-            m.table == s"db.$fact" && m.predicate.startsWith("runtime-in"))
-          val prunedAsof = rfA.nonEmpty &&
-            rfA.forall(m => m.filesTotal > 1 && m.filesScanned < m.filesTotal)
-          s.conf.set("graft.dpp.enabled", "false")
-          val nativeRows =
-            try s.sql(asofSql).collect()
-            finally s.conf.unset("graft.dpp.enabled")
-          val tripleEqual = asofRows.toSeq == nativeRows.toSeq
-
-          probeAsof
-            .withColumn("dpp_pruned", lit(dppInPlan && dppScan && pruned))
-            .withColumn("dpp_pruned_asof", lit(dppAsof && prunedAsof && tripleEqual))
+            "SELECT CAST(o_orderdate AS DATE), o_totalprice FROM orders_src_dppm")
         }
+        s.sql("""SELECT DISTINCT CAST(o_orderdate AS DATE) AS d_date,
+          |  concat(year(o_orderdate), 'Q', quarter(o_orderdate)) AS d_quarter
+          |FROM orders_src_dppm""".stripMargin)
+          .createOrReplaceTempView("dates_dim_dppm")
+        graft.table.QueryHistory.clear()
+        val probe = s.sql(
+          s"""SELECT d.d_quarter, count(*) AS n,
+             |  CAST(SUM(CAST(f.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
+             |FROM graft_sql.db.$fact f JOIN dates_dim_dppm d
+             |  ON f.o_orderdate = d.d_date
+             |WHERE d.d_quarter = '1996Q2'
+             |GROUP BY 1 ORDER BY 1""".stripMargin)
+        probe.collect()
+        val top = probe.queryExecution.executedPlan
+        val plans = top +: top.collect { case a: AdaptiveSparkPlanExec => a.executedPlan }
+        val dppInPlan = plans.exists(_.toString.contains("dynamicpruning"))
+        val dppScan = plans.exists(_.toString.contains("graft-dpp"))
+        val rf = graft.table.QueryHistory.all.filter(m =>
+          m.table == s"db.$fact" && m.predicate.startsWith("runtime-in"))
+        val pruned = rf.nonEmpty &&
+          rf.forall(m => m.filesTotal > 1 && m.filesScanned < m.filesTotal)
+
+        // AS-OF leg (r17 verdict #5): the docs/05 audit-then-join pattern —
+        // a star join over VERSION AS OF keeps execution-time pruning.
+        // Decoy rows land AFTER the pinned snapshot, so a travel-broken
+        // read (serving the head) would surface them and fail the oracle;
+        // the traveled probe must still route graft-dpp, prune, and stay
+        // row-identical to the substitution path (triple equality).
+        val snap = s.sql(s"SELECT max(snapshot_id) FROM graft_sql.db.$fact.snapshots")
+          .head().getLong(0)
+        s.sql(s"INSERT INTO graft_sql.db.$fact " +
+          "SELECT date_add(DATE'1990-01-01', CAST(id * 31 AS INT)), CAST(0.0 AS DOUBLE) " +
+          "FROM range(0, 12)")
+        graft.table.QueryHistory.clear()
+        val asofSql =
+          s"""SELECT d.d_quarter, count(*) AS n,
+             |  CAST(SUM(CAST(f.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
+             |FROM graft_sql.db.$fact VERSION AS OF $snap f JOIN dates_dim_dppm d
+             |  ON f.o_orderdate = d.d_date
+             |WHERE d.d_quarter = '1996Q2'
+             |GROUP BY 1 ORDER BY 1""".stripMargin
+        val probeAsof = s.sql(asofSql)
+        val asofRows = probeAsof.collect()
+        val topA = probeAsof.queryExecution.executedPlan
+        val plansA = topA +: topA.collect { case a: AdaptiveSparkPlanExec => a.executedPlan }
+        val dppAsof = plansA.exists(_.toString.contains("dynamicpruning")) &&
+          plansA.exists(_.toString.contains("graft-dpp"))
+        val rfA = graft.table.QueryHistory.all.filter(m =>
+          m.table == s"db.$fact" && m.predicate.startsWith("runtime-in"))
+        val prunedAsof = rfA.nonEmpty &&
+          rfA.forall(m => m.filesTotal > 1 && m.filesScanned < m.filesTotal)
+        // reference rows: the DSv1 read at the same snapshot, which the
+        // substitution rule rewrites to the native plan
+        s.read.format("graft").option("warehouse", sqlWarehouse)
+          .option("table", s"db.$fact").option("snapshotId", snap.toString).load()
+          .createOrReplaceTempView("fact_asof_dppm")
+        val nativeRows = s.sql(asofSql.replace(
+          s"graft_sql.db.$fact VERSION AS OF $snap", "fact_asof_dppm")).collect()
+        val tripleEqual = asofRows.toSeq == nativeRows.toSeq
+
+        probeAsof
+          .withColumn("dpp_pruned", lit(dppInPlan && dppScan && pruned))
+          .withColumn("dpp_pruned_asof", lit(dppAsof && prunedAsof && tripleEqual))
       },
       """WITH dim AS (
         |  SELECT DISTINCT CAST(o_orderdate AS DATE) AS d_date,
@@ -1329,10 +1326,9 @@ object MaintenanceOps {
         |WHERE d.d_quarter = '1996Q2'
         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    // S15 refined (r16, closing the r15 verdict's "bucket membership
-    // only" edge on the SPJ scan itself): the SPJ runtime filter now
-    // probes each kept bucket's files with per-key Eq predicates through
-    // the native phase-2 rule, so min/max stats prune WITHIN buckets. The
+    // S15 refined: the key-grouped scan's runtime filter probes the
+    // bucket's files with per-key Eq predicates through the native
+    // phase-2 rule, so min/max stats prune WITHIN buckets. The
     // fixture makes the refinement observable: FOUR commits with DISJOINT
     // l_orderkey quartile ranges (a bucket holds one file per commit, so
     // bucket-only keeping reads 4 files per kept bucket), then a

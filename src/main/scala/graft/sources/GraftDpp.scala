@@ -1,91 +1,56 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics, SupportsRuntimeFiltering}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, Statistics, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeFiltering}
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.sources.{EqualTo, Filter, In => SourceIn}
-import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StructType}
 import java.util.OptionalLong
 
-import graft.format.{DataFile, GraftSchema, GraftUtil, TableProperties}
+import graft.format.{Canonical, DataFile, GraftSchema, GraftUtil, TableProperties}
 import graft.table.GraftScan
 
-/** Generalized DSv2 runtime filtering (r15 verdict #1): execution-time
-  * dynamic pruning for ANY Graft partition layout, not just the SPJ bucket
-  * shape. The reference's flagship medallion pattern — a date- or
+/** The one DSv2 batch read of a Graft table: execution-time runtime
+  * filtering for any partition layout, plus storage-partitioned joins for
+  * bucketed tables. The reference's medallion pattern — a date- or
   * identity-partitioned fact joined to a selective dim
   * (docs/12-lakehouse-patterns.md:107-126) — needs the dim's join keys to
-  * prune the fact read INSIDE the executing plan; the SPJ scan only serves
-  * single-bucket tables, and the substituted native plan cannot receive
-  * runtime filters at all (it is a plain parquet scan by execution time).
+  * prune the fact read INSIDE the executing plan, and the substituted
+  * native plan cannot receive runtime filters at all (it is a plain
+  * parquet scan by execution time).
   *
-  * This scan stays a real DSv2 Batch ([[GraftScanSubstitution]] leaves it
-  * in place), reports every PRUNABLE-plane column through
-  * `filterAttributes`, and when Spark's dynamic-pruning subquery hands it
-  * the build side's `In`/`EqualTo` keys it re-prunes the planned file list
-  * through the native scan's indexed per-key rule
-  * ([[GraftScan.keepForKeys]]) — so the hidden-partition transforms
-  * (identity/day/month/year/hour/bucket/truncate), the per-file
-  * min/max/null stats AND the equality-probe blooms all participate,
-  * exactly as they do for static predicates. Soundness never depends on
-  * the prune: Spark re-applies the join, and the keep rule is the sound
-  * may-contain test the 800-case seeded property pins (S3).
-  *
-  * DEFAULT-ON since r17 (r16 verdict #1 — previously opt-in): the scan now
-  * decodes COLUMNAR (`GraftSpj.readerFactory` reports batch reads wherever
-  * the native plan would), so there is no row-surface penalty left to
-  * protect the native substitution path from. Routing stays shape-aware:
-  * only tables that carry a prunable plane a runtime key set could
-  * actually cut — a partition spec, clustering (range-disjoint stats) or
-  * bloom columns, all metadata-only checks — are served; a plain
-  * unpartitioned, unclustered, bloomless table keeps the substituted
+  * Routing is a metadata-shape rule with no knob: a table that carries a
+  * plane a runtime key set could prune on — a partition spec, clustering
+  * (range-disjoint stats) or bloom columns — is served by [[GraftDppScan]];
+  * a plain unpartitioned, unclustered, bloomless table keeps the substituted
   * native plan, where a runtime filter could never drop a file and the
-  * dynamic-pruning subquery would be pure overhead (the r16 ADVICE
-  * posture). Engages only when provably equivalent to the native path
-  * (no position deletes, every file readable verbatim under the scan's
-  * OWN resolved schema — [[GraftDpp.planEligible]], which since r18 also
-  * serves TIME-TRAVELED scans under the snapshot's schema and
-  * PARTITION-EVOLVED tables with mixed spec IDs); everything else falls
-  * back to the substitution path.
-  * SPJ keeps precedence: a bucket-SPJ-shaped table still reports
-  * KeyGroupedPartitioning so co-bucketed joins stay exchange-free.
-  * `graft.dpp.enabled=false` restores the old routing.
+  * dynamic-pruning subquery would be pure overhead. The scan engages only
+  * when provably equivalent to the native path ([[planEligible]]);
+  * everything else falls back to the substitution path.
+  *
+  * The scan has two layouts. A key-grouped snapshot ([[GraftSpj.shapeOf]])
+  * reports `KeyGroupedPartitioning(bucket(n, col))` with one input
+  * partition per bucket value, so co-bucketed joins plan without
+  * exchanges; every other snapshot range-splits and bin-packs its files
+  * like the native plan. Both layouts share one eligibility rule, one
+  * runtime keep rule, one metrics record and one reader factory.
   */
 object GraftDpp {
-  /** Three-state routing conf: unset (the default) shape-routes — serve
-    * the runtime-filterable scan only where the table's METADATA shows a
-    * plane a runtime key set could prune on (partition spec, cluster-by's
-    * range-disjoint stats, declared bloom columns — never a per-file
-    * stats scan, so the routing decision cannot force a snapshot plan for
-    * tables that will be substituted anyway). An explicit `true` force-
-    * serves every eligible table (e.g. a table whose commits happen to be
-    * range-disjoint without a cluster-by declaration); `false` restores
-    * the pure native-substitution routing.
-    */
-  def route(spark: SparkSession, tbl: GraftSparkTable): Boolean =
-    spark.conf.getOption("graft.dpp.enabled") match {
-      case Some(v) => v.toBoolean
-      case None =>
-        val meta = tbl.graftTable.meta
-        meta.defaultSpec.isPartitioned ||
-          meta.properties.get(TableProperties.ClusterBy).exists(_.nonEmpty) ||
-          meta.properties.get(TableProperties.BloomColumns).exists(_.nonEmpty)
-    }
+  def route(tbl: GraftSparkTable): Boolean = {
+    val meta = tbl.graftTable.meta
+    meta.defaultSpec.isPartitioned ||
+      meta.properties.get(TableProperties.ClusterBy).exists(_.nonEmpty) ||
+      meta.properties.get(TableProperties.BloomColumns).exists(_.nonEmpty)
+  }
 
-  /** DPP-route eligibility, generalized past [[GraftSpj.planEligible]] to
-    * TIME-TRAVELED scans (r17 verdict #5 — the docs/05 audit-then-join
-    * pattern joins over `VERSION AS OF`, which used to fall back to the
-    * substitution path and lose execution-time pruning) and to
-    * PARTITION-EVOLVED tables (r18 — files under MIXED spec IDs are fine:
-    * partition specs are metadata-plane only, every data file physically
-    * carries all its columns, and the runtime-filter keep rule
-    * [[graft.table.GraftScan.keepForKeys]] already prunes each file under
-    * the spec it was written with, so a table that moved from months() to
-    * days() keeps execution-time pruning across BOTH epochs instead of
-    * silently falling back to the substitution path). The planned files
-    * must be readable VERBATIM under the scan's OWN resolved schema (the
-    * snapshot's schema for travel, the current schema otherwise) and
-    * carry no position deletes.
+  /** The planned files must be readable VERBATIM under the scan's OWN
+    * resolved schema (the snapshot's schema for travel, the current schema
+    * otherwise) and carry no position deletes. Mixed partition spec IDs are
+    * fine: specs are metadata-plane only, every data file physically
+    * carries all its columns, and [[graft.table.GraftScan.keepForKeys]]
+    * prunes each file under the spec it was written with.
     */
   def planEligible(scan: graft.table.GraftScan): Option[Seq[DataFile]] = {
     val (files, deletes, _) = scan.plan
@@ -95,11 +60,13 @@ object GraftDpp {
   }
 }
 
-/** DSv2 Batch scan over one pinned Graft snapshot with generalized
-  * execution-time runtime filtering. Surviving files are range-split by
-  * `spark.sql.files.maxPartitionBytes` into [[GraftDppPartition]]s (the
-  * native plan's split rule — at 100 TB a 1 GB file must not become one
-  * task), each decoding columnar through Spark's own vectorized reader.
+/** DSv2 Batch scan over one pinned Graft snapshot with execution-time
+  * runtime filtering. Key-grouped snapshots plan one [[GraftBucketPartition]]
+  * per bucket value (whole files: a bucket group must stay one partition);
+  * otherwise surviving files are range-split by
+  * `spark.sql.files.maxPartitionBytes` into packed [[GraftDppPartition]]s.
+  * Either way each partition decodes columnar through Spark's own
+  * vectorized reader.
   */
 class GraftDppScan(
     val tbl: GraftSparkTable,
@@ -108,45 +75,50 @@ class GraftDppScan(
     val pushed: Array[Filter],
     val required: StructType,
     location: String) extends Scan with Batch
-    with SupportsRuntimeFiltering with SupportsReportStatistics {
+    with SupportsRuntimeFiltering with SupportsReportStatistics
+    with SupportsReportPartitioning {
+
+  /** The bucket layout, when the snapshot is key-grouped. */
+  private val bucketing: Option[GraftSpj.SpjInfo] =
+    GraftSpj.shapeOf(SparkSession.active, tbl, files)
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-dpp ${tbl.name()} [${pushed.mkString(", ")}]"
+  override def description(): String = bucketing match {
+    case Some(b) => s"graft-spj ${tbl.name()} bucket(${b.numBuckets}, ${b.colName})"
+    case None => s"graft-dpp ${tbl.name()} [${pushed.mkString(", ")}]"
+  }
 
   /** Files surviving the runtime filter; None until [[filter]] runs. */
   @volatile private var allowed: Option[Seq[DataFile]] = None
 
   /** Metrics staged by [[filter]], recorded by the first
-    * [[planInputPartitions]] that follows (the [[GraftSpjScan]] discipline:
-    * the ledger reflects reads that were actually planned, not filters AQE
-    * then discarded).
+    * [[planInputPartitions]] that follows: the ledger reflects reads that
+    * were actually planned, not filters AQE then discarded.
     */
   private val pendingMetrics =
     new java.util.concurrent.atomic.AtomicReference[graft.table.ScanMetrics](null)
 
   /** Read-schema columns that actually carry a prunable plane in the pinned
-    * snapshot (r16 ADVICE): partition-spec source columns plus columns with
-    * min/max stats or a bloom in SOME file. Reporting a plane-less column
-    * would make Spark plan a dynamic-pruning subquery (re-executing the
-    * build side when exchange reuse doesn't apply) whose filter() then
-    * keeps every file — pure overhead. One pass over the planned file
-    * list, computed only if Spark asks. Resolution uses the SCAN's own
-    * schema and the planned files' (eligibility-pinned single) spec, not
-    * the table head's — a time-traveled scan prunes under the snapshot's
-    * schema/spec (r17 verdict #5).
+    * snapshot: partition-spec source columns plus columns with min/max
+    * stats or a bloom in SOME file. Reporting a plane-less column would
+    * make Spark plan a dynamic-pruning subquery (re-executing the build
+    * side when exchange reuse doesn't apply) whose filter() then keeps
+    * every file — pure overhead. One pass over the planned file list,
+    * computed only if Spark asks. Resolution uses the SCAN's own schema and
+    * the planned files' specs, not the table head's — a time-traveled scan
+    * prunes under the snapshot's schema/spec.
     */
   private lazy val prunableCols: Set[String] = {
     val meta = tbl.graftTable.meta
     val byId = native.scanSchema.fields
       .map(f => GraftSchema.fieldId(f) -> f.name).toMap
-    // the UNION over the planned files' specs (r18: partition-evolved
-    // tables serve mixed spec IDs — a column carrying a transform plane
-    // in ANY epoch's files is worth a runtime filter there; files under
-    // a spec without it simply keep, the conservative default of
-    // keepForKeys' per-file-spec rule). A source column of NO planned
-    // spec stays unreported — it would invite a no-op pruning subquery.
+    // the UNION over the planned files' specs (partition-evolved tables
+    // serve mixed spec IDs — a column carrying a transform plane in ANY
+    // epoch's files is worth a runtime filter there; files under a spec
+    // without it simply keep, the conservative default of keepForKeys'
+    // per-file-spec rule). A source column of NO planned spec stays
+    // unreported — it would invite a no-op pruning subquery.
     val partCols = files.iterator.map(_.specId).toSet
       .flatMap((sid: Int) => meta.specs.getOrElse(sid,
         graft.format.PartitionSpec.unpartitioned).fields)
@@ -170,14 +142,19 @@ class GraftDppScan(
         prunableCols(f.name) => Expressions.column(f.name)
     }
 
+  /** Spark's dynamic-pruning subquery collects the build side's join keys
+    * and calls this before input partitions are planned. Soundness never
+    * depends on the prune: Spark re-applies the join, and the keep rule is
+    * the sound may-contain test the seeded property spec pins.
+    */
   override def filter(filters: Array[Filter]): Unit = {
     var kept = files
     var applied = false
     filters.foreach {
       // equality-shaped runtime filters (the dynamic-pruning subquery's
       // shape) go through the indexed per-key rule: partition-value hash
-      // lookups + per-candidate stats/bloom probes, O(files + keys +
-      // candidates) driver time (r16 verdict #2)
+      // lookups (bucket values included) + per-candidate stats/bloom
+      // probes, O(files + keys + candidates) driver time
       case SourceIn(c, vs) =>
         kept = native.keepForKeys(kept, c, vs.toSeq); applied = true
       case EqualTo(c, v) if v != null =>
@@ -201,8 +178,8 @@ class GraftDppScan(
       val partsOf = (fs: Seq[DataFile]) => fs.map(_.partition).distinct.size.toLong
       pendingMetrics.set(graft.table.ScanMetrics(
         tbl.graftTable.name,
-        // the scan's PINNED snapshot (r18: travel is served — the ledger
-        // must attribute the prune to the snapshot actually read)
+        // the scan's PINNED snapshot: a traveled read attributes the prune
+        // to the snapshot actually read
         native.snapshot.map(_.snapshotId).getOrElse(-1L),
         s"runtime-in($cols, $keyCount keys)",
         manifestsTotal = 0, manifestsScanned = 0,
@@ -216,6 +193,42 @@ class GraftDppScan(
     }
   }
 
+  /** Files grouped by stored bucket value (null partition last, for a stable
+    * display order; Spark re-groups by key itself). Empty unless key-grouped.
+    */
+  private lazy val groups: Seq[(Any, Seq[DataFile])] = bucketing.toSeq.flatMap { b =>
+    files.groupBy(_.partition.get(b.partFieldName).flatten
+        .map(s => Canonical.fromJsonString(LongType, s)))
+      .toSeq
+      .sortBy { case (k, _) => k.map(_.asInstanceOf[Long]).getOrElse(Long.MaxValue) }
+      .map { case (k, fs) => (k.orNull, fs) }
+  }
+
+  override def outputPartitioning(): Partitioning = bucketing match {
+    case Some(b) => new KeyGroupedPartitioning(
+      Array(Expressions.bucket(b.numBuckets, b.colName)), groups.size)
+    case None => new UnknownPartitioning(0)
+  }
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    Option(pendingMetrics.getAndSet(null)).foreach(graft.table.QueryHistory.record)
+    if (bucketing.isDefined) bucketPartitions() else packedPartitions()
+  }
+
+  /** One partition per bucket value. A runtime-filtered scan must not
+    * change the reported partition VALUES, so pruned buckets keep their
+    * group key and drop to zero files instead of disappearing.
+    */
+  private def bucketPartitions(): Array[InputPartition] = {
+    val keep = allowed.map(_.iterator.map(_.path).toSet)
+    groups.map { case (key, fs) =>
+      GraftBucketPartition(
+        new GenericInternalRow(Array[Any](key)),
+        fs.filter(f => keep.forall(_(f.path))).map(f =>
+          (GraftUtil.resolve(location, f.path), 0L, f.fileSizeBytes, f.fileSizeBytes)))
+    }.toArray
+  }
+
   /** The native plan's split-and-pack rule (FileSourceScanExec /
     * FilePartition semantics), re-derived for this scan's slice shape:
     * maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
@@ -223,12 +236,9 @@ class GraftDppScan(
     * slices BIN-PACKED (largest-first, openCost charged per slice) into
     * shared partitions. Without the packing this default read path would
     * hand Spark one task per file — a table of 500k small files becomes
-    * 500k tasks of scheduling overhead exactly where the substituted
-    * native scan used to pack them (r17 ADVICE). SPJ bucket partitions
-    * keep whole-file-per-bucket semantics; only this scan packs.
+    * 500k tasks of scheduling overhead.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
-    Option(pendingMetrics.getAndSet(null)).foreach(graft.table.QueryHistory.record)
+  private def packedPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     val conf = spark.sessionState.conf
     val maxBytes = conf.filesMaxPartitionBytes
@@ -265,7 +275,7 @@ class GraftDppScan(
   override def createReaderFactory(): PartitionReaderFactory =
     // the SCAN's resolved schema: a time-traveled read decodes under the
     // snapshot's schema, which eligibility pinned as every file's write
-    // schema (the current schema for a head read — same value as before)
+    // schema (the current schema for a head read)
     GraftSpj.readerFactory(native.scanSchema, pushed, required)
 
   /** Post-filter size/rows from the manifests' own accounting — after a

@@ -41,7 +41,10 @@ import scala.jdk.CollectionConverters._
   * logical v2 relation into the native [[graft.table.GraftScan]] plan:
   * manifest/file pruning happens driver-side with the pushed filters, and
   * what executes is Spark's own parquet scan (vectorized, codegen,
-  * row-group pushdown). A [[V1Scan]] fallback keeps plain sessions correct.
+  * row-group pushdown). Tables with a prunable plane are instead served by
+  * one DSv2 batch scan, [[GraftDppScan]], which stays in the plan so it can
+  * take runtime filters and, for bucketed tables, report storage
+  * partitioning. A [[V1Scan]] fallback keeps plain sessions correct.
   */
 class GraftTableCatalog extends TableCatalog with SupportsNamespaces with ProcedureCatalog
     with FunctionCatalog with StagingTableCatalog {
@@ -445,43 +448,30 @@ class GraftV2ScanBuilder(val tbl: GraftSparkTable) extends ScanBuilder
   }
   override def pushedFilters(): Array[Filter] = accepted
 
-  // Column pruning is consumed by the SPJ batch path only; the substituted
+  // Column pruning is consumed by the DSv2 batch scan only; the substituted
   // native plan and the V1 fallback do their own pruning, so GraftV2Scan
   // keeps reporting the full schema (Spark projects above it either way).
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = Some(requiredSchema)
 
-  /** SPJ batch scan when provably equivalent to the native path (see
-    * [[GraftSpj]]); else the generalized runtime-filter scan — DEFAULT
-    * since r17 for tables whose metadata shows a prunable plane
-    * (partition spec / cluster-by / bloom columns) and that are equally
-    * provably equivalent (see [[GraftDpp]]); otherwise the V1Scan whose
-    * relation the substitution rule replaces. ONE pinned native scan is
-    * shared by whichever route wins — the fallback V1Scan carries it too,
-    * so the substitution rule reuses the already-planned snapshot instead
-    * of planning (and QUERY_HISTORY-recording) a second one.
+  /** The runtime-filtering batch scan ([[GraftDppScan]]) for tables whose
+    * metadata shows a prunable plane (partition spec / cluster-by / bloom
+    * columns) when it is provably equivalent to the native path (see
+    * [[GraftDpp]]); otherwise the V1Scan whose relation the substitution
+    * rule replaces. ONE pinned native scan is shared by whichever route
+    * wins — the fallback V1Scan carries it too, so the substitution rule
+    * reuses the already-planned snapshot instead of planning (and
+    * QUERY_HISTORY-recording) a second one.
     */
   override def build(): Scan = {
-    val spark = SparkSession.active
     val native = tbl.nativeScan(preds) // cheap: planning is lazy inside
-    val spj =
-      if (!GraftSpj.enabled(spark)) None
-      else GraftSpj.shapeOf(tbl).flatMap { info =>
-        GraftSpj.planEligible(native).map { files =>
-          new GraftSpjScan(tbl, info, files, accepted,
-            required.getOrElse(tbl.schema()), native.meta.location, Some(native))
-        }
-      }
-    // time travel is SERVED since r18 (r17 verdict #5): the docs/05
-    // audit-then-join pattern keeps execution-time pruning — eligibility
-    // and plane resolution pin the snapshot's own schema/spec
-    def dpp =
-      if (!GraftDpp.route(spark, tbl)) None
+    val dpp =
+      if (!GraftDpp.route(tbl)) None
       else GraftDpp.planEligible(native).map { files =>
         new GraftDppScan(tbl, native, files, accepted,
           required.getOrElse(tbl.schema()), native.meta.location)
       }
-    spj.orElse(dpp).getOrElse(new GraftV2Scan(tbl, preds, Some(native)))
+    dpp.getOrElse(new GraftV2Scan(tbl, preds, Some(native)))
   }
 }
 
@@ -590,12 +580,11 @@ case class GraftScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] 
     case _ => plan.transformWithSubqueries {
       case agg: Aggregate if agg.groupingExpressions.isEmpty =>
         tryMetadataAggregate(agg).getOrElse(agg)
-      // SPJ batch scans stay v2 (their KeyGroupedPartitioning is what lets
-      // EnsureRequirements drop the exchanges under co-bucketed joins), and
-      // so do the generalized runtime-filter scans (a substituted relation
-      // could never receive the dynamic-pruning subquery's keys).
+      // the DSv2 batch scan stays v2: a substituted relation could never
+      // receive the dynamic-pruning subquery's keys, nor report the
+      // KeyGroupedPartitioning that drops co-bucketed join exchanges
       case r: DataSourceV2ScanRelation if r.relation.table.isInstanceOf[GraftSparkTable] &&
-          !r.scan.isInstanceOf[GraftSpjScan] && !r.scan.isInstanceOf[GraftDppScan] =>
+          !r.scan.isInstanceOf[GraftDppScan] =>
         val g = unwrap(r.scan)
         substitute(r.output, g.flatMap(_.pinned).getOrElse(
           r.relation.table.asInstanceOf[GraftSparkTable]

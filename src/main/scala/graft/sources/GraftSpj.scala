@@ -5,86 +5,57 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, Murmur3Hash}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, SupportsReportPartitioning, SupportsRuntimeFiltering}
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
+import org.apache.spark.sql.connector.read.{HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.sources.{EqualTo, Filter, In => SourceIn}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, Metadata, StructType}
 
-import graft.format.{Canonical, DataFile, GraftSchema, GraftUtil, PartitionField, Transform}
-import graft.table.GraftScan
+import graft.format.{DataFile, GraftSchema, PartitionField, Transform}
 
 /** Storage-partitioned (shuffle-free) join support (reference
   * docs/07-partitioning.md:151 bucket guidance + docs/09-query-performance
-  * .md:178 join distribution): a Graft table bucket-partitioned on its join
-  * key reports `KeyGroupedPartitioning(bucket(n, col))` from a real DSv2
-  * Batch scan, one `InputPartition` per present bucket value. Two tables
-  * bucketed identically then join with ZERO exchanges — at 100 TB this
-  * removes both full-table shuffles from every co-bucketed fact-fact join,
-  * the single largest plan win bucketing can buy.
+  * .md:178 join distribution) for the one DSv2 batch scan, [[GraftDppScan]]:
+  * a Graft table bucket-partitioned on its join key reports
+  * `KeyGroupedPartitioning(bucket(n, col))`, one `InputPartition` per
+  * bucket value. Two tables bucketed identically then join with ZERO
+  * exchanges — at 100 TB this removes both full-table shuffles from every
+  * co-bucketed fact-fact join.
   *
-  * The batch path reads parquet through Spark's own vectorized reader
-  * (`ParquetFileFormat.buildReaderWithPartitionValues`), so codegen/row
-  * decode matches the substituted native path. It engages only when it is
-  * provably equivalent to that path: current-snapshot scan, a single
-  * bucket partition field, no outstanding position deletes, and every file
-  * written under the current schema + spec (no read-time resolution needed).
-  * Everything else falls back to [[GraftV2Scan]] → native substitution.
+  * A snapshot is key-grouped when the read is not time-traveled, the
+  * default spec is a single `bucket` field, every planned file is under
+  * that spec, and `spark.sql.sources.v2.bucketing.enabled` is `true`.
+  * Otherwise the same scan packs its files like the native plan.
   */
 object GraftSpj {
 
   /** The table's single bucket partition field, when shaped for SPJ. */
-  final case class SpjInfo(colName: String, srcType: DataType, numBuckets: Int,
-                           partFieldName: String)
+  final case class SpjInfo(colName: String, numBuckets: Int, partFieldName: String)
 
-  def enabled(spark: SparkSession): Boolean =
-    spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean &&
-      spark.conf.get("graft.spj.enabled", "true").toBoolean
-
-  def shapeOf(tbl: GraftSparkTable): Option[SpjInfo] = {
-    if (tbl.travel != TimeTravel.None) return None
+  def shapeOf(spark: SparkSession, tbl: GraftSparkTable,
+              files: Seq[DataFile]): Option[SpjInfo] = {
+    if (tbl.travel != TimeTravel.None ||
+        !spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean)
+      return None
     val meta = tbl.graftTable.meta
     meta.defaultSpec.fields match {
-      case Seq(PartitionField(srcId, pname, Transform.Bucket(n))) =>
+      case Seq(PartitionField(srcId, pname, Transform.Bucket(n)))
+          if files.forall(_.specId == meta.defaultSpecId) =>
         meta.currentSchema.fields
           .find(f => GraftSchema.fieldId(f) == srcId)
-          .map(src => SpjInfo(src.name, src.dataType, n, pname))
+          .map(src => SpjInfo(src.name, n, pname))
       case _ => None
     }
   }
 
-  /** Key-count cap on the per-file stats/bloom refinement inside
-    * [[GraftSpjScan.filter]]: beyond it the probe cost (k bloom hash pairs
-    * x kept files) stops paying for itself and the keep rule falls back to
-    * bucket membership alone — the same cost-bound posture as the eager
-    * API's CrawlProbeMaxKeys.
-    */
-  val RefineMaxKeys = 1024
-
-  /** All files readable verbatim under the current schema/spec, none deleted
-    * away by position deletes, and at least one file (an empty key-grouped
-    * scan would report zero partitions).
-    */
-  def planEligible(scan: GraftScan): Option[Seq[DataFile]] = {
-    val (files, deletes, _) = scan.plan
-    val ok = deletes.isEmpty && files.nonEmpty &&
-      files.forall(f => f.schemaId == scan.meta.currentSchemaId &&
-        f.specId == scan.meta.defaultSpecId)
-    if (ok) Some(files) else None
-  }
-
   /** Spark's own vectorized parquet reader behind the DSv2 reader
-    * contract — shared by the SPJ and generalized-DPP batch scans. When the
-    * required schema supports batch decode (all-atomic columns, vectorized
-    * reader on — `ParquetFileFormat.supportBatch`'s own rule), the factory
-    * reports COLUMNAR reads and hands Spark whole `ColumnarBatch`es, so the
-    * DSv2 scans decode exactly like the substituted native plan
-    * (vectorized + whole-stage codegen above a ColumnarToRow) — closing the
-    * row-surface decode gap that kept generalized DPP opt-in (r16 verdict
-    * #1). Nested schemas keep the row surface (vectorized decode inside,
-    * row-at-a-time outside).
+    * contract. When the required schema supports batch decode (all-atomic
+    * columns, vectorized reader on — `ParquetFileFormat.supportBatch`'s own
+    * rule), the factory reports COLUMNAR reads and hands Spark whole
+    * `ColumnarBatch`es, so the DSv2 scan decodes exactly like the
+    * substituted native plan (vectorized + whole-stage codegen above a
+    * ColumnarToRow). Nested schemas keep the row surface (vectorized
+    * decode inside, row-at-a-time outside).
     */
   def readerFactory(dataSchema: StructType, pushed: Array[Filter],
                     required: StructType): PartitionReaderFactory = {
@@ -105,173 +76,10 @@ object GraftSpj {
   }
 }
 
-/** DSv2 Batch scan over one pinned Graft snapshot, grouped by bucket value.
-  * Reports [[KeyGroupedPartitioning]] so `EnsureRequirements` plans
-  * co-bucketed joins without exchanges (requires
-  * `spark.sql.sources.v2.bucketing.enabled=true`).
-  */
-class GraftSpjScan(
-    val tbl: GraftSparkTable,
-    val info: GraftSpj.SpjInfo,
-    val files: Seq[DataFile],
-    val pushed: Array[Filter],
-    val required: StructType,
-    location: String,
-    native: Option[GraftScan] = None) extends Scan with Batch
-    with SupportsReportPartitioning with SupportsRuntimeFiltering {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-spj ${tbl.name()} bucket(${info.numBuckets}, ${info.colName})"
-
-  /** DSv2 RUNTIME FILTERING (S15's execution-time form, r14 verdict #3):
-    * a broadcast join's dim-side key set reaches this scan INSIDE the
-    * executing plan — Spark's dynamic-pruning subquery collects the build
-    * side's join keys and calls [[filter]] before input partitions are
-    * planned — so the fact read prunes to the buckets those keys hash
-    * into with no extra driver job (the eager
-    * [[graft.table.GraftTable.scanWithRuntimeFilter]] collect is the
-    * API-level twin; this is the SQL-plan-native one, composing with AQE
-    * via the reused broadcast exchange). Bucket values come from the
-    * write path's own transform ([[GraftBucketFunction]] — murmur3 seed
-    * 42, pmod), so a pruned-away file provably holds no matching key.
-    *
-    * KeyGroupedPartitioning constraint: the filtered scan must not
-    * change the reported partition VALUES, so pruned buckets keep their
-    * group key and drop to zero files instead of disappearing. The null
-    * bucket also empties — an equi-join In filter matches no null key.
-    * Each prune records a QUERY_HISTORY row (predicate `runtime-in(...)`)
-    * with the file/byte cut, the same observability surface as the
-    * native scans.
-    *
-    * The runtime keep rule: buckets the collected keys hash into, plus —
-    * when the key set is small enough to refine (r16, closing the r15
-    * verdict's "bucket membership only" edge) — the file paths the
-    * native phase-2 rule keeps for `In(col, keys)`, so per-file min/max
-    * stats and blooms prune WITHIN kept buckets too (a bucket holds one
-    * file per commit; a point probe usually lives in one of them).
-    */
-  private case class RuntimeKeep(buckets: Set[Long], paths: Option[Set[String]])
-  @volatile private var allowedKeep: Option[RuntimeKeep] = None
-
-  /** Metrics staged by [[filter]] and recorded by the FIRST
-    * [[planInputPartitions]] that follows it (r15 ADVICE: recording at
-    * filter time could ledger a prune for a read AQE then discards; the
-    * partitions-planned moment is when the pruned read is actually real).
-    */
-  private val pendingMetrics =
-    new java.util.concurrent.atomic.AtomicReference[graft.table.ScanMetrics](null)
-
-  override def filterAttributes(): Array[NamedReference] =
-    Array(Expressions.column(info.colName))
-
-  override def filter(filters: Array[Filter]): Unit = {
-    val keys = filters.collectFirst {
-      case SourceIn(c, vs) if c.equalsIgnoreCase(info.colName) => vs.toSeq
-      case EqualTo(c, v) if c.equalsIgnoreCase(info.colName) => Seq(v)
-    }
-    keys.foreach { vs =>
-      val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(info.srcType)
-      val fn = GraftBucketFunction(info.srcType)
-      val buckets = vs.filter(_ != null).flatMap { v =>
-        Option(fn.produceResult(new GenericInternalRow(
-          Array[Any](info.numBuckets, toCatalyst(v))))).map(_.longValue)
-      }.toSet
-      // per-key Eq probes, not one In: mayMatch evaluates an In's planes
-      // independently (a file whose RANGE holds key A and whose BUCKET
-      // holds key B would survive), while Eq ties bucket + stats + bloom
-      // to the SAME value — strictly sharper keep set. keepForKeys (r16
-      // verdict #2) hash-indexes the files by stored bucket value and
-      // derives each key ONCE, so the refinement costs O(files + keys +
-      // candidates) driver time instead of the O(files × keys) sweep.
-      val refined: Option[Set[String]] =
-        native.filter(_ => vs.size <= GraftSpj.RefineMaxKeys).map { sc =>
-          sc.keepForKeys(files, info.colName, vs).map(_.path).toSet
-        }
-      val keep = RuntimeKeep(buckets, refined)
-      allowedKeep = Some(keep)
-      val fg = filteredGroups(Some(keep))
-      val kept = fg.flatMap(_._2)
-      pendingMetrics.set(graft.table.ScanMetrics(
-        tbl.graftTable.name,
-        tbl.graftTable.meta.currentSnapshotId.getOrElse(-1L),
-        s"runtime-in(${info.colName}, ${vs.size} keys)",
-        manifestsTotal = 0, manifestsScanned = 0,
-        filesTotal = files.size.toLong, filesScanned = kept.size.toLong,
-        partitionsTotal = groups.size.toLong,
-        partitionsScanned = fg.count(_._2.nonEmpty).toLong,
-        bytesTotal = files.map(_.fileSizeBytes).sum,
-        bytesScanned = kept.map(_.fileSizeBytes).sum,
-        rowsInScannedFiles = kept.map(_.recordCount).sum,
-        timestampMs = System.currentTimeMillis()))
-    }
-  }
-
-  /** Bucket groups with the runtime filter applied — the ONE keep rule
-    * both the planned partitions and the recorded metrics derive from
-    * (r15 self-review: two independent copies of the keep decision could
-    * drift the observability ledger from what the scan actually reads).
-    * Group keys are always preserved; pruned and null-key buckets drop
-    * to zero files (an equi-join In filter matches no null key).
-    */
-  private def filteredGroups(allowed: Option[RuntimeKeep]): Seq[(Any, Seq[DataFile])] =
-    groups.map { case (key, fs) =>
-      val keep = allowed match {
-        case Some(rk) => key match {
-          // bucket values materialize via Canonical.fromJsonString(LongType)
-          // today; match the NUMBER contract (r15 ADVICE) and fail loudly on
-          // any non-numeric representation rather than silently over-pruning
-          case k: java.lang.Number if rk.buckets.contains(k.longValue) =>
-            rk.paths match {
-              case Some(ps) => fs.filter(f => ps.contains(f.path))
-              case None => fs
-            }
-          case null => Seq.empty // an equi-join In filter matches no null key
-          case k if !k.isInstanceOf[java.lang.Number] =>
-            throw new IllegalStateException(
-              s"bucket group key must be numeric, got ${k.getClass.getName}")
-          case _ => Seq.empty
-        }
-        case None => fs
-      }
-      (key, keep)
-    }
-
-  /** Files grouped by stored bucket value (null partition last, for a stable
-    * display order; Spark re-groups by key itself).
-    */
-  private lazy val groups: Seq[(Any, Seq[DataFile])] =
-    files.groupBy(_.partition.get(info.partFieldName).flatten
-        .map(s => Canonical.fromJsonString(LongType, s)))
-      .toSeq
-      .sortBy { case (k, _) => k.map(_.asInstanceOf[Long]).getOrElse(Long.MaxValue) }
-      .map { case (k, fs) => (k.orNull, fs) }
-
-  override def outputPartitioning(): Partitioning =
-    new KeyGroupedPartitioning(
-      Array(Expressions.bucket(info.numBuckets, info.colName)), groups.size)
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    Option(pendingMetrics.getAndSet(null)).foreach(graft.table.QueryHistory.record)
-    filteredGroups(allowedKeep).map { case (key, keep) =>
-      GraftBucketPartition(
-        new GenericInternalRow(Array[Any](key)),
-        keep.map(f => (GraftUtil.resolve(location, f.path),
-          0L, f.fileSizeBytes, f.fileSizeBytes)))
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    GraftSpj.readerFactory(tbl.graftTable.schema, pushed, required)
-}
-
 /** An input partition that is a plain list of parquet slices
   * (path, start, length, fileSize) — the shape [[GraftSpjReaderFactory]]
-  * reads; implemented by the SPJ bucket partitions (whole files: a bucket
-  * group must stay one partition) and the generalized runtime-filter
-  * scan's range-split file partitions.
+  * reads; implemented by the bucket partitions (whole files: a bucket
+  * group must stay one partition) and the packed range-split partitions.
   */
 trait GraftFilesPartition extends InputPartition {
   def files: Seq[(String, Long, Long, Long)]

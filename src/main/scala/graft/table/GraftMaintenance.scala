@@ -44,8 +44,10 @@ trait GraftMaintenance { self: GraftTable =>
     val target = targetFileSizeBytes
       .orElse(m0.properties.get(TableProperties.TargetFileSize).map(_.toLong))
       .getOrElse(128L * 1024 * 1024) // docs/10:40-41 example target
-    // Binpack: only undersized files are rewritten — a compact of a huge,
-    // mostly-healthy table must be O(small files), not O(table). Exceptions
+    // Binpack: only undersized files that share their partition with
+    // another undersized file are rewritten — a compact of a huge,
+    // mostly-healthy table must be O(small files), not O(table), and a
+    // file alone in its partition has nothing to merge with. Exceptions
     // that force a full rewrite of the scan's files: outstanding position
     // deletes (folding them rewrites their targets) and CLUSTER BY (the
     // point is re-sorting everything).
@@ -53,8 +55,13 @@ trait GraftMaintenance { self: GraftTable =>
     val rewriteAll = clustered || scan0.deleteFiles.nonEmpty
     val candidates =
       if (rewriteAll) scan0.dataFiles
-      else scan0.dataFiles.filter(_.fileSizeBytes < (target * 3) / 4)
-    if (candidates.isEmpty || (candidates.size == 1 && !rewriteAll))
+      else {
+        val small = scan0.dataFiles.filter(_.fileSizeBytes < (target * 3) / 4)
+        val shared = small.groupBy(f => (f.specId, f.partition))
+          .filter(_._2.size > 1).keySet
+        small.filter(f => shared((f.specId, f.partition)))
+      }
+    if (candidates.isEmpty)
       return commitSnapshot("replace", statementId, Map("compacted-data-files" -> "0")) { m =>
         m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil)
       }

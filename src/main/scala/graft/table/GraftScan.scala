@@ -5,7 +5,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Paths
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 /** Name-safe column references: schema field names are LITERAL (a name may
@@ -42,12 +41,19 @@ object GraftScan {
   val MorBroadcastMaxBytes: Long = 64L * 1024 * 1024
 }
 
-/** In-process QUERY_HISTORY (docs/09:180-194). */
+/** In-process QUERY_HISTORY (docs/09:180-194): the newest [[Capacity]]
+  * scans, oldest dropped first, so a long-lived session holds a bounded
+  * ledger.
+  */
 object QueryHistory {
-  private val entries = new ConcurrentLinkedQueue[ScanMetrics]()
-  def record(m: ScanMetrics): Unit = entries.add(m)
-  def clear(): Unit = entries.clear()
-  def all: Seq[ScanMetrics] = entries.asScala.toVector
+  val Capacity = 10000
+  private val entries = new java.util.ArrayDeque[ScanMetrics]()
+  def record(m: ScanMetrics): Unit = entries.synchronized {
+    if (entries.size >= Capacity) entries.pollFirst()
+    entries.addLast(m)
+  }
+  def clear(): Unit = entries.synchronized(entries.clear())
+  def all: Seq[ScanMetrics] = entries.synchronized(entries.asScala.toVector)
   def toDF(spark: SparkSession): DataFrame = {
     import spark.implicits._
     all.toDF()
@@ -221,7 +227,7 @@ class GraftScan(
   /** Sound per-file "may contain matching rows" test against this scan's
     * FULL phase-2 context — partition transforms, column min/max/null
     * stats AND the equality-probe blooms all participate (the same rule
-    * [[plan]] prunes with). The generalized DSv2 runtime-filter scan
+    * [[plan]] prunes with). The DSv2 runtime-filter scan
     * ([[graft.sources.GraftDppScan]]) re-prunes its planned file list
     * through this when a join's build-side keys arrive at execution time.
     */
@@ -266,7 +272,7 @@ class GraftScan(
     * (KeepForKeysSpec pins the equivalence property-style) but built so
     * runtime-filter planning cost is O(files + keys + candidates) when the
     * column carries a partition transform, instead of the O(files × keys)
-    * sweep the DSv2 scans' `filter` used to do — at contract-19 scale
+    * sweep a per-file runtime `filter` would do — at contract-19 scale
     * (500k files × 1024 collected join keys) the sweep is ~5·10⁸ driver-side
     * leaf evaluations. Files are hashed ONCE by their stored partition value
     * for the first partition field sourced from the column; each key derives
@@ -279,7 +285,7 @@ class GraftScan(
     * to. Columns with no partition plane (stats/bloom only) keep a key-major
     * sweep — the range-shaped planes are inherently linear — with the bloom
     * hash pair still memoized scan-wide. Null keys are dropped: an
-    * equality/join probe matches no null (the SPJ null-bucket rule).
+    * equality/join probe matches no null (the null bucket keeps no file).
     */
   private[graft] def keepForKeys(files: Seq[DataFile], colName: String,
                                  rawKeys: Seq[Any]): Seq[DataFile] = {

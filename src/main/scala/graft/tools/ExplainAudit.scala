@@ -67,9 +67,9 @@ object ExplainAudit {
       spark.sql("SELECT event_id, value FROM g_audit.db.ev WHERE event_type = 'click' AND value > 1.0")
     }
 
-    // r14 verdict #3: the runtime-filter subquery must sit ON the DSv2
-    // batch scan — the dim's selective filter is on a non-join column, so
-    // only dynamic pruning can cut the fact read
+    // the runtime-filter subquery must sit ON the DSv2 batch scan, here in
+    // its key-grouped (bucket) layout — the dim's selective filter is on a
+    // non-join column, so only dynamic pruning can cut the fact read
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.sql(
       "CREATE TABLE g_audit.db.fact (k BIGINT, v DOUBLE) PARTITIONED BY (bucket(8, k))")
@@ -85,11 +85,10 @@ object ExplainAudit {
           |WHERE d.name = 'd7' GROUP BY f.k""".stripMargin)
     }
 
-    // r15 verdict #1 / r16 #1: GENERALIZED runtime filtering — a
-    // month-partitioned (non-bucket) fact joined to a dim filtered on a
-    // DERIVED non-join column; the dynamic-pruning subquery must sit on
-    // the graft-dpp scan, and since r17 that route is the DEFAULT (no
-    // conf set here — this audit exercises the out-of-the-box path)
+    // the same scan in its packed layout: a month-partitioned (non-bucket)
+    // fact joined to a dim filtered on a DERIVED non-join column; the
+    // dynamic-pruning subquery must sit on the graft-dpp scan, which the
+    // partition spec alone routes to (there is no routing conf)
     {
       spark.sql(
         "CREATE TABLE g_audit.db.factm (d DATE, v DOUBLE) PARTITIONED BY (months(d))")

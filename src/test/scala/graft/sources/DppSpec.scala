@@ -4,13 +4,13 @@ import graft.SparkSpec
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** DSv2 runtime filtering (r14 verdict #3): a broadcast join's dim keys
-  * prune a bucket-partitioned Graft fact scan AT EXECUTION TIME inside one
-  * plan — Spark's dynamic-pruning subquery calls the SPJ scan's
-  * SupportsRuntimeFiltering.filter with the collected build-side keys, and
-  * the scan empties every bucket those keys cannot hash into. No extra
-  * driver job, no eager collect (the scanWithRuntimeFilter API twin does
-  * that); observability lands in QUERY_HISTORY as a `runtime-in` row.
+/** DSv2 runtime filtering: a broadcast join's dim keys prune a Graft fact
+  * scan AT EXECUTION TIME inside one plan — Spark's dynamic-pruning
+  * subquery calls GraftDppScan's SupportsRuntimeFiltering.filter with the
+  * collected build-side keys, in both its key-grouped (bucket) and packed
+  * layouts. No extra driver job, no eager collect (the
+  * scanWithRuntimeFilter API twin does that); observability lands in
+  * QUERY_HISTORY as a `runtime-in` row.
   */
 class DppSpec extends SparkSpec {
 
@@ -93,9 +93,15 @@ class DppSpec extends SparkSpec {
     // unpartitioned fact whose files carry DISJOINT key ranges (one commit
     // per range), so only the min/max stats plane can prune it
     spark.sql("CREATE TABLE dppg.db.facts (k BIGINT, v DOUBLE)")
+    // the same ranges under a cluster-by declaration, which routes the
+    // table to the DSv2 scan by its metadata
+    spark.sql("CREATE TABLE dppg.db.factc (k BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('cluster-by'='k')")
     (0 until 4).foreach { c =>
-      spark.sql(s"INSERT INTO dppg.db.facts SELECT id AS k, CAST(id AS DOUBLE) AS v " +
-        s"FROM range(${c * 1000}, ${c * 1000 + 1000})")
+      Seq("facts", "factc").foreach { t =>
+        spark.sql(s"INSERT INTO dppg.db.$t SELECT id AS k, CAST(id AS DOUBLE) AS v " +
+          s"FROM range(${c * 1000}, ${c * 1000 + 1000})")
+      }
     }
     // unpartitioned bloom-indexed fact with INTERLEAVED keys (every file
     // spans the full min/max range), so only the bloom plane can prune it
@@ -109,23 +115,21 @@ class DppSpec extends SparkSpec {
       .createOrReplaceTempView("dppg_dim")
   }
 
-  /** Explicit FORCE-serve (r17: the conf is three-state — unset shape-
-    * routes by metadata, true serves any eligible table): the stats-plane
-    * fixture below is range-disjoint only by commit accident, with no
-    * cluster-by declaration the default route could see. Restores by
-    * UNSET, never by writing "false" (that would leak the opt-out).
+  /** The native-path control leg: runs `sqlText` with `table` (as written
+    * in the SQL, `<catalog>.db.<name>`) read through the DSv1
+    * `format("graft")` source, optionally pinned to a snapshot — a read the
+    * substitution rule rewrites to the native plan, never the DSv2 scan.
     */
-  private def withDppForced[A](f: => A): A = {
-    spark.conf.set("graft.dpp.enabled", "true")
-    try f finally spark.conf.unset("graft.dpp.enabled")
-  }
-
-  /** Explicit opt-out: the pure native-substitution routing (the pre-r17
-    * default), used as the no-DPP-scan control leg.
-    */
-  private def withDppDisabled[A](f: => A): A = {
-    spark.conf.set("graft.dpp.enabled", "false")
-    try f finally spark.conf.unset("graft.dpp.enabled")
+  private def nativeRows(sqlText: String, table: String,
+                         snapshot: Option[Long] = None): Seq[org.apache.spark.sql.Row] = {
+    val Array(catalog, db, name) = table.split('.')
+    val reader = spark.read.format("graft")
+      .option("warehouse", spark.conf.get(s"spark.sql.catalog.$catalog.warehouse"))
+      .option("table", s"$db.$name")
+    snapshot.fold(reader)(id => reader.option("snapshotId", id.toString)).load()
+      .createOrReplaceTempView(s"native_$name")
+    val inSql = snapshot.fold(table)(id => s"$table VERSION AS OF $id")
+    spark.sql(sqlText.replace(inSql, s"native_$name")).collect().toSeq
   }
 
   private def lastRuntimeIn(table: String): graft.table.ScanMetrics = {
@@ -164,17 +168,16 @@ class DppSpec extends SparkSpec {
 
   test("min/max stats plane: dim keys prune an unpartitioned fact's files") {
     dppGeneralReady
-    // unpartitioned, no cluster-by, no blooms: the metadata route cannot
-    // see the per-commit range disjointness, so this plane needs the
-    // explicit force (the documented three-state conf)
-    withDppForced {
+    // unpartitioned, no blooms: the cluster-by declaration routes the
+    // table, and only the per-commit disjoint key ranges can prune it
+    locally {
       graft.table.QueryHistory.clear()
       val q = spark.sql(
         """SELECT count(*) AS n
-          |FROM dppg.db.facts f JOIN dppg_dim d ON f.k = d.k
+          |FROM dppg.db.factc f JOIN dppg_dim d ON f.k = d.k
           |WHERE d.name IN ('n42', 'n57', 'n2042')""".stripMargin)
       assert(q.collect().head.getLong(0) == 3L)
-      val m = lastRuntimeIn("db.facts")
+      val m = lastRuntimeIn("db.factc")
       // keys 42/57/2042 live in the [0,1000) and [2000,3000) range files
       assert(m.filesTotal >= 4 && m.filesScanned < m.filesTotal,
         s"stats plane must prune disjoint-range files: ${m.filesScanned}/${m.filesTotal}")
@@ -248,25 +251,22 @@ class DppSpec extends SparkSpec {
     val without =
       try spark.sql(q).collect()
       finally spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-    val native = withDppDisabled { spark.sql(q).collect() } // substituted path, no DPP scan at all
+    val native = nativeRows(q, "dppg.db.factm") // substituted path, no DPP scan at all
     assert(withDpp.toSeq == without.toSeq)
-    assert(withDpp.toSeq == native.toSeq)
+    assert(withDpp.toSeq == native)
   }
 
   test("route choice per shape: partitioned serves dpp, bare stays native, bucket keeps spj") {
-    // r16 verdict #1's done-condition: the generalized scan is the DEFAULT
-    // read path exactly where a runtime filter could prune, with no conf
-    // set anywhere in this test
+    // the DSv2 scan is the read path exactly where a runtime filter could
+    // prune — a metadata-shape rule with no routing conf
     dppGeneralReady
     fixtureReady
-    assert(spark.conf.getOption("graft.dpp.enabled").isEmpty,
-      "route test certifies the conf-free default")
     def executed(sqlText: String): String = {
       val q = spark.sql(sqlText)
       q.collect()
       allPlans(q.queryExecution.executedPlan).map(_.toString).mkString("\n")
     }
-    // partitioned table: shape-routes to the generalized DSv2 scan
+    // partitioned table: shape-routes to the DSv2 scan
     val part = executed(
       "SELECT sum(v) AS s FROM dppg.db.factm WHERE d >= DATE'2023-02-03'")
     assert(part.contains("graft-dpp"), s"partitioned table must serve graft-dpp:\n$part")
@@ -278,11 +278,60 @@ class DppSpec extends SparkSpec {
     val bare = executed("SELECT sum(v) AS s FROM dppg.db.facts WHERE k >= 17")
     assert(!bare.contains("graft-dpp") && !bare.contains("graft-spj"),
       s"bare table must keep the native substitution:\n$bare")
-    // bucket-SPJ shape keeps precedence (KeyGroupedPartitioning must
-    // survive for exchange-free co-bucketed joins)
+    // bucket shape under Spark's v2 bucketing: the key-grouped layout
+    // (KeyGroupedPartitioning must survive for exchange-free co-bucketed joins)
     val bucketed = executed("SELECT sum(v) AS s FROM dpp.db.fact WHERE k >= 17")
     assert(bucketed.contains("graft-spj"),
       s"bucket table under the bucketing conf must keep graft-spj:\n$bucketed")
+
+    // the same bucket table with v2 bucketing UNSET: the packed layout
+    val bucketingKey = "spark.sql.sources.v2.bucketing.enabled"
+    val prior = spark.conf.getOption(bucketingKey)
+    spark.conf.unset(bucketingKey)
+    try {
+      val q = spark.sql("SELECT sum(v) AS s FROM dpp.db.fact WHERE k >= 17")
+      q.collect()
+      val plans = allPlans(q.queryExecution.executedPlan)
+      assert(plans.exists(_.toString.contains("graft-dpp")) &&
+        !plans.exists(_.toString.contains("graft-spj")),
+        s"bucket table without v2 bucketing must serve graft-dpp:\n${plans.head}")
+      val parts = q.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+      }.collect { case g: GraftDppScan => g.planInputPartitions().toSeq }.flatten
+      assert(parts.nonEmpty && parts.forall(_.isInstanceOf[GraftDppPartition]),
+        s"packed layout must plan packed partitions: ${parts.map(_.getClass.getSimpleName)}")
+    } finally prior.foreach(spark.conf.set(bucketingKey, _))
+
+    // key-grouped runtime filter with MORE than 1024 collected keys: every
+    // bucket holds a key, so only the per-file stats plane can prune — the
+    // keep rule must not cap large key sets to bucket membership. Four
+    // commits of disjoint key ranges; the 1500 g0 keys live in two of them.
+    spark.sql(
+      "CREATE TABLE dpp.db.factk (k BIGINT, v DOUBLE) PARTITIONED BY (bucket(8, k))")
+    (0 until 4).foreach { c =>
+      spark.sql("INSERT INTO dpp.db.factk SELECT id AS k, CAST(id AS DOUBLE) AS v " +
+        s"FROM range(${c * 1000}, ${c * 1000 + 1000})")
+    }
+    // the group label hides the key range from Catalyst, so nothing is
+    // statically inferrable onto the fact key
+    spark.range(0, 4000).selectExpr("id AS k", "concat('g', CAST(id DIV 1500 AS STRING)) AS grp")
+      .createOrReplaceTempView("dppk_dim")
+    val manyKeys =
+      """SELECT count(*) AS n, sum(f.v) AS sv
+        |FROM dpp.db.factk f JOIN dppk_dim d ON f.k = d.k
+        |WHERE d.grp = 'g0'""".stripMargin
+    graft.table.QueryHistory.clear()
+    val q = spark.sql(manyKeys)
+    val rows = q.collect().toSeq
+    assert(allPlans(q.queryExecution.executedPlan).exists(_.toString.contains("graft-spj")),
+      s"bucket table must serve the key-grouped layout:\n${q.queryExecution.executedPlan}")
+    assert(rows == nativeRows(manyKeys, "dpp.db.factk"),
+      s"many-key runtime filter diverged from the native path: $rows")
+    assert(rows.head.getLong(0) == 1500L)
+    val m = lastRuntimeIn("db.factk")
+    assert(m.predicate.contains("1500 keys"), m.predicate)
+    assert(m.filesScanned < m.filesTotal,
+      s"stats plane must prune under > 1024 keys: ${m.filesScanned}/${m.filesTotal}")
   }
 
   test("time travel: VERSION AS OF keeps execution-time pruning under the snapshot's schema") {
@@ -329,8 +378,8 @@ class DppSpec extends SparkSpec {
     val noSubquery =
       try spark.sql(sql).collect()
       finally spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-    val native = withDppDisabled { spark.sql(sql).collect() }
-    assert(Seq(row) == noSubquery.toSeq && Seq(row) == native.toSeq)
+    val native = nativeRows(sql, "dppt.db.factt", Some(snap))
+    assert(Seq(row) == noSubquery.toSeq && Seq(row) == native)
     // and the head read still sees the decoy (travel is a pin, not a mask)
     assert(spark.sql("SELECT count(*) FROM dppt.db.factt WHERE v < 0").head().getLong(0) == 1L)
   }
@@ -341,9 +390,7 @@ class DppSpec extends SparkSpec {
     // reader decodes files verbatim — applying deletes belongs to the
     // substitution path's merge-read anti-join. This leg makes the
     // fallback DELIBERATE: a MOR star join must (a) not serve graft-dpp,
-    // (b) return delete-correct rows, (c) stay on the substitution path
-    // even under force-serve (eligibility is a correctness gate the conf
-    // cannot override).
+    // (b) return delete-correct rows.
     dppGeneralReady
     spark.sql(
       "CREATE TABLE dppg.db.factmor (d DATE, v DOUBLE) PARTITIONED BY (months(d)) " +
@@ -370,15 +417,6 @@ class DppSpec extends SparkSpec {
     assert(!allPlans(q.queryExecution.executedPlan)
         .exists(_.toString.contains("graft-dpp")),
       s"MOR scans must fall back to substitution:\n${q.queryExecution.executedPlan}")
-    spark.conf.set("graft.dpp.enabled", "true")
-    try {
-      val qf = spark.sql(sql)
-      assert(qf.collect().head.getLong(0) == 1810L,
-        "force-served MOR read must stay delete-correct")
-      assert(!allPlans(qf.queryExecution.executedPlan)
-          .exists(_.toString.contains("graft-dpp")),
-        "force-serve must not override the position-delete eligibility gate")
-    } finally spark.conf.unset("graft.dpp.enabled")
   }
 
   test("partition evolution: mixed-spec files keep execution-time pruning on the default route") {
@@ -425,9 +463,9 @@ class DppSpec extends SparkSpec {
     assert(m.filesTotal > 1 && m.filesScanned < m.filesTotal,
       s"mixed-spec runtime filter must prune files: ${m.filesScanned}/${m.filesTotal}")
     // no over-pruning: row-identical to the substitution path
-    val native = withDppDisabled { spark.sql(sql).collect() }
-    assert(Seq(row) == native.toSeq,
-      s"mixed-spec DPP route diverged from the native path: $row vs ${native.toSeq}")
+    val native = nativeRows(sql, "dppe.db.factpe")
+    assert(Seq(row) == native,
+      s"mixed-spec DPP route diverged from the native path: $row vs $native")
   }
 
   test("small files bin-pack into shared input partitions (native split rule)") {

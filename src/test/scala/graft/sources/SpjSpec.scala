@@ -32,7 +32,7 @@ class SpjSpec extends SparkSpec {
   }
 
   test("co-bucketed join plans with zero exchanges and matches the shuffled result") {
-    setup()
+    val wh = setup()
     val q =
       """SELECT /*+ MERGE(d) */ f.k, count(*) AS n, sum(f.v) AS sv
         |FROM spj.db.fact f JOIN spj.db.dim d ON f.k = d.k
@@ -46,10 +46,14 @@ class SpjSpec extends SparkSpec {
     // sort-merge join is none — count exchanges under the join node.
     val spjRows = df.collect()
 
-    // reference result: SPJ disabled → substituted native path + shuffles
-    spark.conf.set("graft.spj.enabled", "false")
-    val ref = spark.sql(q).collect()
-    spark.conf.set("graft.spj.enabled", "true")
+    // reference result: the DSv1 reads, which the substitution rule
+    // rewrites to the native plan (+ shuffles)
+    Seq("fact", "dim").foreach { t =>
+      spark.read.format("graft").option("warehouse", wh).option("table", s"db.$t")
+        .load().createOrReplaceTempView(s"spj_ref_$t")
+    }
+    val ref = spark.sql(q.replace("spj.db.fact", "spj_ref_fact")
+      .replace("spj.db.dim", "spj_ref_dim")).collect()
     assert(spjRows.toSeq == ref.toSeq)
 
     // no shuffle between the two scans and the join: the aggregate above

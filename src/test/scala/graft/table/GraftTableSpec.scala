@@ -430,6 +430,33 @@ class GraftTableSpec extends SparkSpec {
     assert(bigFiles.subsetOf(after), "right-sized file must be reused, not rewritten")
     assert(after.size < bigFiles.size + 3, "small files must consolidate")
     assert(t.toDF(spark).count() == 2003)
+
+    // an already-compacted partitioned table: every small file is alone in
+    // its partition, so a second compaction has nothing to merge
+    val p = newTable("t_binpack_part", partitioned = true)
+    (0 until 2).foreach(_ => p.append(spark, mkDf(base)))
+    val first = p.compact(spark)
+    assert(first.summary("compacted-data-files").toInt > 0)
+    val compacted = p.scan().dataFiles.map(_.path).toSet
+    assert(compacted.size == 3, s"one file per partition: $compacted")
+    val second = p.compact(spark)
+    assert(second.summary("compacted-data-files") == "0")
+    assert(p.scan().dataFiles.map(_.path).toSet == compacted,
+      "a file alone in its partition must not be rewritten")
+    assert(contents(p) == base.toSet)
+  }
+
+  test("query history is bounded: the oldest entries drop first") {
+    val cap = QueryHistory.Capacity
+    val stamp = (i: Int) => ScanMetrics("db.hist", -1L, s"p$i", 0, 0, 0L, 0L, 0L, 0L,
+      0L, 0L, 0L, i.toLong)
+    QueryHistory.clear()
+    try {
+      (0 until cap + 100).foreach(i => QueryHistory.record(stamp(i)))
+      val all = QueryHistory.all
+      assert(all.size == cap)
+      assert(all.head.predicate == "p100" && all.last.predicate == s"p${cap + 99}")
+    } finally QueryHistory.clear()
   }
 
   test("cherry-pick replays an append after rollback; refuses rewrites and double-apply") {
