@@ -19,8 +19,8 @@ object Bench {
     spark.range(0, 1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
     // Variant kernel: first evaluation JIT-compiles ~3s of one-time codepath
-    // (measured via tools.VariantProbe: cold 2.96s vs warm 0.36s at sf0.1) —
-    // large enough sample that C2, not just C1, compiles the hot loop.
+    // (measured cold 2.96s vs warm 0.36s at sf0.1) — large enough sample
+    // that C2, not just C1, compiles the hot loop.
     spark.range(0, 200000)
       .selectExpr("variant_get(parse_json('{\"k\":' || id || '}'), '$.k', 'int') AS k")
       .selectExpr("sum(k % 10)").collect()
@@ -94,8 +94,7 @@ object Bench {
     // Structured Streaming warmup: the first streaming gate used to absorb
     // the micro-batch subsystem's one-time cost (state-store provider,
     // streaming codegen, progress machinery — measured ~7s extra on
-    // whichever of g_stream_* iterates first vs ~7s alone; per-batch
-    // breakdown in tools.StreamProbe). One tiny
+    // whichever of g_stream_* iterates first vs ~7s alone). One tiny
     // file-source stream through a watermarked stateful op takes it out.
     locally {
       import org.apache.spark.sql.functions.{col, expr}
@@ -163,7 +162,7 @@ object Bench {
     // One full measurement pass: times every query with the mid-run control
     // series interleaved. A pass is self-contained (its own start/mid/end
     // probes) so a retry's artifact has one coherent measurement context.
-    def measurePass(): (Seq[(String, Double, Double, Option[String])], Vector[Double]) = {
+    def measurePass(): (Seq[(String, Double, Double, Option[(String, String)])], Vector[Double]) = {
       val controlStart = controlProbe()
       // Mid-run control series: start/end probes alone miss the host's
       // INTERMITTENT stall windows (round-6's driver run had 2.6-42x
@@ -206,10 +205,14 @@ object Bench {
           graft.queries.FixtureClock.reset()
           val t0 = System.nanoTime()
           // a gate that throws is a failure, never a (fast) time: its
-          // exception class is reported and it stays out of the totals
+          // exception class and the first line of its message are
+          // reported, and it stays out of the totals
           val error =
             try { fn(spark, sfDir).count(); None }
-            catch { case e: Throwable => Some(e.getClass.getName) }
+            catch { case e: Throwable =>
+              Some((e.getClass.getName,
+                Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")))
+            }
           (name, (System.nanoTime() - t0) / 1e9, graft.queries.FixtureClock.sec, error)
         }
       controls += controlProbe()
@@ -229,7 +232,7 @@ object Bench {
       controls.zipWithIndex.collect {
         case (c, j) if median > 0 && c > 1.8 * median && c - median > 0.15 => j
       }.toSet
-    def suspectsOf(results: Seq[(String, Double, Double, Option[String])],
+    def suspectsOf(results: Seq[(String, Double, Double, Option[(String, String)])],
         spiked: Set[Int]): Seq[String] =
       results.zipWithIndex.collect {
         case ((name, _, _, _), i) if spiked.contains(i / 12) || spiked.contains(i / 12 + 1) => name
@@ -266,8 +269,9 @@ object Bench {
     // run is distinguishable from a full gate run.
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val timed = results.collect { case (k, v, f, None) => (k, v, f) }
-    val failed = results.collect { case (k, _, _, Some(err)) =>
-      s"""{"name":"$k","error":"$err"}""" }.mkString("[", ",", "]")
+    val failed = results.collect { case (k, _, _, Some((cls, msg))) =>
+      s"""{"name":"$k","error":"$cls","message":${graft.interop.Json.q(msg)}}"""
+    }.mkString("[", ",", "]")
     val qs = timed.map { case (k, v, _) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     // fixture-build seconds INCLUDED in each query's number above, reported
@@ -332,7 +336,7 @@ object Bench {
         }
       } else headRef.take(12)
     } catch { case scala.util.control.NonFatal(_) => "unknown" }
-    val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${timed.size},"queries":$qs,"failed":$failed,"fixture_sec":$fx,"control_start_sec":${fmt(controls.head)},"control_end_sec":${fmt(controls.last)},"controls":$ctl,"host_factor":${fmt(hostFactor)},"stall_suspects":$sus,"captured_at":"$capturedAt","git_head":"$gitHead","sf":"$sfDir"$filter$verdict}"""
+    val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${timed.size},"queries":$qs,"failed":$failed,"fixture_sec":$fx,"control_start_sec":${fmt(controls.head)},"control_end_sec":${fmt(controls.last)},"controls":$ctl,"host_factor":${fmt(hostFactor)},"stall_suspects":$sus,"captured_at":"$capturedAt","git_head":"$gitHead","sf":"$sfDir","cpus":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},"heap_bytes":${Runtime.getRuntime.maxMemory}$filter$verdict}"""
     println(fullJson)
     // Persist the full line to a FILE as well (round-9 verdict #6): the
     // driver's log-tail capture truncates the ~165-query map (BENCH_r09

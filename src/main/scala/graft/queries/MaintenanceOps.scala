@@ -42,7 +42,7 @@ object MaintenanceOps {
     // Missing #1 / DSv2: the reference's user surface is SQL (docs/08:83-141,
     // docs/12:94-126) — CREATE TABLE / INSERT INTO / DELETE FROM / SELECT /
     // VERSION AS OF all through spark.sql against the Graft TableCatalog.
-    // The read is the substituted native plan (vectorized parquet), and the
+    // The read is the DSv2 batch scan (vectorized parquet), and the
     // time-travel count proves VERSION AS OF resolves the pre-DELETE state.
     ("g_sql_dml",
       (s: SparkSession, d: String) => {
@@ -1277,7 +1277,7 @@ object MaintenanceOps {
         // Decoy rows land AFTER the pinned snapshot, so a travel-broken
         // read (serving the head) would surface them and fail the oracle;
         // the traveled probe must still route graft-dpp, prune, and stay
-        // row-identical to the substitution path (triple equality).
+        // row-identical to the native GraftTable reader (triple equality).
         val snap = s.sql(s"SELECT max(snapshot_id) FROM graft_sql.db.$fact.snapshots")
           .head().getLong(0)
         s.sql(s"INSERT INTO graft_sql.db.$fact " +
@@ -1301,10 +1301,10 @@ object MaintenanceOps {
           m.table == s"db.$fact" && m.predicate.startsWith("runtime-in"))
         val prunedAsof = rfA.nonEmpty &&
           rfA.forall(m => m.filesTotal > 1 && m.filesScanned < m.filesTotal)
-        // reference rows: the DSv1 read at the same snapshot, which the
-        // substitution rule rewrites to the native plan
-        s.read.format("graft").option("warehouse", sqlWarehouse)
-          .option("table", s"db.$fact").option("snapshotId", snap.toString).load()
+        // reference rows: the native GraftTable reader at the same
+        // snapshot — Spark's own parquet scan over the pinned file list
+        new graft.catalog.GraftCatalog(sqlWarehouse).loadTable(s"db.$fact")
+          .atSnapshot(snap).toDF(s)
           .createOrReplaceTempView("fact_asof_dppm")
         val nativeRows = s.sql(asofSql.replace(
           s"graft_sql.db.$fact VERSION AS OF $snap", "fact_asof_dppm")).collect()

@@ -12,23 +12,21 @@ import java.util.OptionalLong
 import graft.format.{Canonical, DataFile, GraftSchema, GraftUtil, TableProperties}
 import graft.table.GraftScan
 
-/** The one DSv2 batch read of a Graft table: execution-time runtime
-  * filtering for any partition layout, plus storage-partitioned joins for
-  * bucketed tables. The reference's medallion pattern — a date- or
+/** The one DSv2 batch read of a Graft table, for every table shape:
+  * plan-time manifest/file pruning, execution-time runtime filtering for
+  * any partition layout, and storage-partitioned joins for bucketed
+  * tables. The reference's medallion pattern — a date- or
   * identity-partitioned fact joined to a selective dim
   * (docs/12-lakehouse-patterns.md:107-126) — needs the dim's join keys to
-  * prune the fact read INSIDE the executing plan, and the substituted
-  * native plan cannot receive runtime filters at all (it is a plain
-  * parquet scan by execution time).
+  * prune the fact read INSIDE the executing plan, which only a scan that
+  * stays in the plan can receive.
   *
-  * Routing is a metadata-shape rule with no knob: a table that carries a
-  * plane a runtime key set could prune on — a partition spec, clustering
-  * (range-disjoint stats) or bloom columns — is served by [[GraftDppScan]];
-  * a plain unpartitioned, unclustered, bloomless table keeps the substituted
-  * native plan, where a runtime filter could never drop a file and the
-  * dynamic-pruning subquery would be pure overhead. The scan engages only
-  * when provably equivalent to the native path ([[planEligible]]);
-  * everything else falls back to the substitution path.
+  * The scan serves every snapshot whose files can be read verbatim
+  * ([[planEligible]]); the rest (position deletes, files under an older
+  * write schema, no files) fall back to the substituted native plan. Which
+  * columns take runtime filters is a metadata-shape rule with no knob
+  * ([[runtimePrunable]]): a bare table offers none, so its plans never
+  * carry a dynamic-pruning subquery that could not drop a file.
   *
   * The scan has two layouts. A key-grouped snapshot ([[GraftSpj.shapeOf]])
   * reports `KeyGroupedPartitioning(bucket(n, col))` with one input
@@ -38,7 +36,10 @@ import graft.table.GraftScan
   * runtime keep rule, one metrics record and one reader factory.
   */
 object GraftDpp {
-  def route(tbl: GraftSparkTable): Boolean = {
+  /** Does the table carry a plane a runtime key set could prune on — a
+    * partition spec, clustering (range-disjoint stats) or bloom columns?
+    */
+  def runtimePrunable(tbl: GraftSparkTable): Boolean = {
     val meta = tbl.graftTable.meta
     meta.defaultSpec.isPartitioned ||
       meta.properties.get(TableProperties.ClusterBy).exists(_.nonEmpty) ||
@@ -73,8 +74,7 @@ class GraftDppScan(
     val native: GraftScan,
     val files: Seq[DataFile],
     val pushed: Array[Filter],
-    val required: StructType,
-    location: String) extends Scan with Batch
+    val required: StructType) extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics
     with SupportsReportPartitioning {
 
@@ -132,10 +132,12 @@ class GraftDppScan(
   /** Prunable-plane columns of the PRUNED read schema (Spark resolves these
     * against the scan relation's output, so a projected-away column would
     * fail analysis). A join key is always in the read schema, so the
-    * medallion fact-dim shapes are always served.
+    * medallion fact-dim shapes are always served. None for a bare table
+    * ([[GraftDpp.runtimePrunable]]).
     */
   override def filterAttributes(): Array[NamedReference] =
-    required.fields.collect {
+    if (!GraftDpp.runtimePrunable(tbl)) Array.empty
+    else required.fields.collect {
       case f if !f.dataType.isInstanceOf[StructType] &&
         !f.dataType.isInstanceOf[ArrayType] &&
         !f.dataType.isInstanceOf[MapType] &&
@@ -159,7 +161,7 @@ class GraftDppScan(
         kept = native.keepForKeys(kept, c, vs.toSeq); applied = true
       case EqualTo(c, v) if v != null =>
         kept = native.keepForKeys(kept, c, Seq(v)); applied = true
-      case other => GraftRelation.toPredicate(other).foreach { p =>
+      case other => CatalystPredicates.toPredicate(other).foreach { p =>
         kept = kept.filter(f => native.fileMayMatch(f, p)); applied = true
       }
     }
@@ -225,7 +227,7 @@ class GraftDppScan(
       GraftBucketPartition(
         new GenericInternalRow(Array[Any](key)),
         fs.filter(f => keep.forall(_(f.path))).map(f =>
-          (GraftUtil.resolve(location, f.path), 0L, f.fileSizeBytes, f.fileSizeBytes)))
+          (GraftUtil.resolve(native.meta.location, f.path), 0L, f.fileSizeBytes, f.fileSizeBytes)))
     }.toArray
   }
 
@@ -251,7 +253,7 @@ class GraftDppScan(
     val maxSplit = math.min(maxBytes,
       math.max(openCost, totalBytes / minPartitionNum)).max(1L)
     val slices = read.flatMap { f =>
-      val path = GraftUtil.resolve(location, f.path)
+      val path = GraftUtil.resolve(native.meta.location, f.path)
       val n = math.max(1L, (f.fileSizeBytes + maxSplit - 1) / maxSplit)
       (0L until n).map { i =>
         val start = i * maxSplit
@@ -280,12 +282,19 @@ class GraftDppScan(
 
   /** Post-filter size/rows from the manifests' own accounting — after a
     * runtime prune AQE sees the PRUNED size, so a fact cut to broadcast
-    * scale can re-plan its next join as a broadcast.
+    * scale can re-plan its next join as a broadcast. A bare table is sized
+    * by its pruned read schema like Spark's own `FileScan`, so a narrow read
+    * of a wide dimension keeps its broadcast; a runtime-prunable table
+    * reports whole files, so the dimension feeding its runtime filter stays
+    * the broadcast side.
     */
   override def estimateStatistics(): Statistics = new Statistics {
     private val fs = allowed.getOrElse(files)
-    override def sizeInBytes(): OptionalLong =
-      OptionalLong.of(fs.map(_.fileSizeBytes).sum)
+    private val bytes = fs.map(_.fileSizeBytes).sum
+    override def sizeInBytes(): OptionalLong = OptionalLong.of(
+      if (GraftDpp.runtimePrunable(tbl)) bytes
+      else (SparkSession.active.sessionState.conf.fileCompressionFactor * bytes /
+        native.scanSchema.defaultSize * required.defaultSize).toLong)
     override def numRows(): OptionalLong =
       OptionalLong.of(fs.map(_.recordCount).sum)
   }

@@ -1,12 +1,14 @@
 package graft.sources
 
 import graft.catalog.GraftCatalog
-import graft.format.Predicate
-import graft.table.{GraftScan, GraftTable}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.connector.catalog.{Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.{Transform => VTransform}
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import java.util
+import scala.jdk.CollectionConverters._
 
 /** Spark DataSource integration for Graft tables:
   *
@@ -15,42 +17,70 @@ import org.apache.spark.sql.types.StructType
   *   .option("warehouse", "/wh").option("table", "db.events")
   *   .option("snapshotId", "3")          // optional time travel
   *   .option("asOfTimestampMs", "...")   // optional time travel
+  *   .option("ref", "audit")             // optional branch/tag
   *   .load()
   * df.write.format("graft").mode("append")
   *   .option("warehouse", "/wh").option("table", "db.events").save()
   * }}}
   *
-  * The read path implements `PrunedFilteredScan`: Spark pushes column
-  * pruning + `sources.Filter`s here, the filters translate to Graft
-  * [[Predicate]]s, and the scan goes through the normal two-phase
-  * manifest/file pruning before reading parquet — so `spark.read` and SQL
-  * over it (`createOrReplaceTempView`) get the same planning I/O profile as
-  * the native `GraftTable.scan` API. Unconvertible filters are simply not
-  * pushed; Spark re-applies every filter on top, so this is always sound.
+  * Reads are DSv2: `getTable` hands Spark the same [[GraftSparkTable]] the
+  * catalog serves, pinned by the time-travel options, so `format("graft")`
+  * and catalog SQL share one scan builder, one runtime-filtering scan and
+  * one substitution fallback. Writes stay on `createRelation(mode)`: the
+  * table reports only `V1_BATCH_WRITE`, so Spark's writer falls back to
+  * this provider's V1 path in every save mode.
   */
-class GraftSource extends RelationProvider with CreatableRelationProvider
+class GraftSource extends TableProvider with CreatableRelationProvider
     with DataSourceRegister {
 
   override def shortName(): String = "graft"
 
-  private def load(parameters: Map[String, String]): GraftTable = {
-    val wh = parameters.getOrElse("warehouse", sys.error("option 'warehouse' is required"))
-    val name = parameters.getOrElse("table", sys.error("option 'table' is required"))
-    new GraftCatalog(wh).loadTable(name)
-  }
+  private def required(options: util.Map[String, String], key: String): String =
+    Option(new CaseInsensitiveStringMap(options).get(key))
+      .getOrElse(sys.error(s"option '$key' is required"))
 
-  override def createRelation(ctx: SQLContext, parameters: Map[String, String]): BaseRelation = {
-    // reads through this relation get rewritten to the native scan plan
-    // (vectorized parquet + codegen) by the substitution rule
-    GraftExtensions.install(ctx.sparkSession)
-    GraftRelation(ctx, load(parameters), parameters)
+  // the write path hands getTable the frame's schema without inferring one
+  // (a save may target a table that does not exist yet); a read without a
+  // user schema infers here, which fails cleanly for a missing table
+  override def supportsExternalMetadata(): Boolean = true
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    getTable(null, Array.empty, options) match {
+      case t: GraftSparkTable => t.schema()
+      case _ => sys.error(s"graft table ${options.get("table")} does not exist")
+    }
+
+  override def getTable(schema: StructType, partitioning: Array[VTransform],
+                        properties: util.Map[String, String]): Table = {
+    val opts = new CaseInsensitiveStringMap(properties)
+    val cat = new GraftCatalog(required(opts, "warehouse"))
+    val tableName = required(opts, "table")
+    if (!cat.tableExists(tableName)) {
+      // a save target that does not exist yet: writable only through
+      // createRelation, which creates it
+      val target = Option(schema).getOrElse(new StructType())
+      return new Table {
+        override def name(): String = tableName
+        override def schema(): StructType = target
+        override def capabilities(): util.Set[TableCapability] =
+          util.EnumSet.of(TableCapability.V1_BATCH_WRITE)
+      }
+    }
+    // Spark resolves format("graft") reads during analysis of the reading
+    // session, so the active session is the one that plans this read
+    GraftExtensions.install(SparkSession.active)
+    val travel: TimeTravel =
+      Option(opts.get("snapshotId")).map(id => TimeTravel.AtSnapshot(id.toLong))
+        .orElse(Option(opts.get("asOfTimestampMs")).map(ts => TimeTravel.AsOf(ts.toLong)))
+        .orElse(Option(opts.get("ref")).map(TimeTravel.AtRef))
+        .getOrElse(TimeTravel.None)
+    new GraftSparkTable(cat.loadTable(tableName), travel)
   }
 
   override def createRelation(ctx: SQLContext, mode: SaveMode,
                               parameters: Map[String, String], data: DataFrame): BaseRelation = {
-    val wh = parameters.getOrElse("warehouse", sys.error("option 'warehouse' is required"))
-    val name = parameters.getOrElse("table", sys.error("option 'table' is required"))
-    val cat = new GraftCatalog(wh)
+    val cat = new GraftCatalog(required(parameters.asJava, "warehouse"))
+    val name = required(parameters.asJava, "table")
     val spark = ctx.sparkSession
     val table =
       if (!cat.tableExists(name)) cat.createTableAs(spark, name, data)
@@ -60,66 +90,9 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
         case SaveMode.ErrorIfExists => sys.error(s"table $name already exists")
         case SaveMode.Ignore => cat.loadTable(name)
       }
-    GraftRelation(ctx, table, parameters)
-  }
-}
-
-case class GraftRelation(ctx: SQLContext, table: GraftTable,
-                         parameters: Map[String, String])
-    extends BaseRelation with PrunedFilteredScan with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-  private def spark: SparkSession = ctx.sparkSession
-
-  /** Time-travel-pinned scan; also the entry point for the optimizer
-    * substitution that replaces this relation with the native plan.
-    */
-  def pinnedScan(preds: Seq[Predicate]): GraftScan =
-    (parameters.get("snapshotId"), parameters.get("asOfTimestampMs"),
-      parameters.get("ref")) match {
-      case (Some(sid), _, _) => table.atSnapshot(sid.toLong, preds: _*)
-      case (_, Some(ts), _) => table.asOf(ts.toLong, preds: _*)
-      case (_, _, Some(r)) => table.atRef(r, preds: _*)
-      case _ => table.scan(preds: _*)
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = table.schema
     }
-
-  // Scans resolve rows to the PINNED snapshot's schema by column ID (see
-  // GraftScan.readResolved) — the table as of then, which may predate a
-  // CREATE OR REPLACE; unpinned reads use the current schema.
-  override def schema: StructType = pinnedScan(Nil).scanSchema
-
-  override def buildScan(): RDD[Row] = buildScan(schema.fieldNames, Array.empty)
-
-  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val preds = filters.flatMap(GraftRelation.toPredicate)
-    val df0 = pinnedScan(preds.toSeq).toDF(spark)
-    // empty requiredColumns = a column-free query (COUNT(*)): project to
-    // ZERO columns so the scan decodes nothing, instead of every column
-    val df = df0.select(requiredColumns.map(org.apache.spark.sql.functions.col): _*)
-    df.rdd
-  }
-}
-
-object GraftRelation {
-  /** Translate Spark source filters into Graft predicates; None = cannot
-    * push (Spark still applies the filter post-scan — soundness preserved).
-    */
-  def toPredicate(f: Filter): Option[Predicate] = f match {
-    case EqualTo(c, v) => Some(Predicate.Eq(c, v))
-    case GreaterThan(c, v) => Some(Predicate.Gt(c, v))
-    case GreaterThanOrEqual(c, v) => Some(Predicate.GtEq(c, v))
-    case LessThan(c, v) => Some(Predicate.Lt(c, v))
-    case LessThanOrEqual(c, v) => Some(Predicate.LtEq(c, v))
-    case In(c, vs) => Some(Predicate.In(c, vs.toSeq))
-    case IsNull(c) => Some(Predicate.IsNull(c))
-    case IsNotNull(c) => Some(Predicate.NotNull(c))
-    case StringStartsWith(c, p) => Some(Predicate.StartsWith(c, p))
-    case And(l, r) => (toPredicate(l), toPredicate(r)) match {
-      case (Some(a), Some(b)) => Some(Predicate.And(a, b))
-      case (a, b) => a.orElse(b) // half-pushable AND is still sound
-    }
-    case Or(l, r) => for (a <- toPredicate(l); b <- toPredicate(r))
-      yield Predicate.Or(a, b)
-    case _ => None
   }
 }

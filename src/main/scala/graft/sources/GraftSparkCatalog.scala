@@ -2,20 +2,19 @@ package graft.sources
 
 import graft.catalog.GraftCatalog
 import graft.format.{Predicate, Transform => GTransform}
-import graft.table.GraftTable
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import graft.table.{GraftScan, GraftTable}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal => CLiteral, And => CAnd, Or => COr, EqualTo => CEq, GreaterThan => CGt, GreaterThanOrEqual => CGtEq, LessThan => CLt, LessThanOrEqual => CLtEq, In => CIn, IsNull => CIsNull, IsNotNull => CIsNotNull, StartsWith => CStartsWith}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter => LFilter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Literal => VLiteral, NamedReference, Transform => VTransform}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
-import org.apache.spark.sql.sources.{Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.sources
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.util
@@ -34,17 +33,17 @@ import scala.jdk.CollectionConverters._
   * spark.sql("ALTER TABLE g.db.events ADD COLUMN note STRING")
   * }}}
   *
-  * Read-path design: a custom DSv2 `PartitionReader` would bypass Spark's
-  * vectorized parquet reader and whole-stage codegen (the DSv1 `df.rdd`
-  * problem in a new coat). Instead, [[GraftScanSubstitution]] — installed
-  * automatically when the catalog or source is first used — rewrites the
-  * logical v2 relation into the native [[graft.table.GraftScan]] plan:
-  * manifest/file pruning happens driver-side with the pushed filters, and
-  * what executes is Spark's own parquet scan (vectorized, codegen,
-  * row-group pushdown). Tables with a prunable plane are instead served by
-  * one DSv2 batch scan, [[GraftDppScan]], which stays in the plan so it can
-  * take runtime filters and, for bucketed tables, report storage
-  * partitioning. A [[V1Scan]] fallback keeps plain sessions correct.
+  * Read-path design: every read of a snapshot whose files can be read
+  * verbatim — catalog SQL, time travel and `format("graft")` alike — is
+  * served by one DSv2 batch scan, [[GraftDppScan]]: manifest/file pruning
+  * happens driver-side with the pushed filters, each partition decodes
+  * through Spark's own vectorized parquet reader, and the scan stays in the
+  * plan so it can take runtime filters and, for bucketed tables, report
+  * storage partitioning. A snapshot that cannot be read verbatim (position
+  * deletes, files under an older write schema, no files) is rewritten by
+  * [[GraftScanSubstitution]] — installed when the catalog or source is
+  * first used in a session — into the native [[graft.table.GraftScan]]
+  * plan, which merges deletes and resolves columns by field id.
   */
 class GraftTableCatalog extends TableCatalog with SupportsNamespaces with ProcedureCatalog
     with FunctionCatalog with StagingTableCatalog {
@@ -349,9 +348,10 @@ object TimeTravel {
   final case class AtRef(name: String) extends TimeTravel
 }
 
-/** DSv2 Table over a [[GraftTable]]: batch read (substituted to the native
-  * scan; V1Scan fallback), V1 batch write (append/overwrite), filter-based
-  * DELETE, truncate.
+/** DSv2 Table over a [[GraftTable]], pinned in time: batch read (the DSv2
+  * scan, or the substitution fallback — see [[GraftV2ScanBuilder.build]]),
+  * V1 batch write (append/overwrite), filter-based DELETE, truncate. Both
+  * the catalog and the `format("graft")` source serve this table.
   */
 class GraftSparkTable(val graftTable: GraftTable, val travel: TimeTravel) extends Table
     with SupportsRead with SupportsWrite with SupportsDelete {
@@ -399,7 +399,7 @@ class GraftSparkTable(val graftTable: GraftTable, val travel: TimeTravel) extend
   }
 
   /** The pinned native scan (current snapshot unless time-traveling). */
-  def nativeScan(preds: Seq[Predicate]): _root_.graft.table.GraftScan = travel match {
+  def nativeScan(preds: Seq[Predicate]): GraftScan = travel match {
     case TimeTravel.AtSnapshot(id) => graftTable.atSnapshot(id, preds: _*)
     case TimeTravel.AsOf(ts) => graftTable.asOf(ts, preds: _*)
     case TimeTravel.AtRef(r) => graftTable.atRef(r, preds: _*)
@@ -425,10 +425,11 @@ class GraftSparkTable(val graftTable: GraftTable, val travel: TimeTravel) extend
     }
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(f => GraftRelation.toPredicate(f).isDefined)
+    filters.forall(f => CatalystPredicates.toPredicate(f).isDefined)
 
   override def deleteWhere(filters: Array[Filter]): Unit =
-    graftTable.delete(SparkSession.active, filters.flatMap(GraftRelation.toPredicate).toSeq)
+    graftTable.delete(SparkSession.active,
+      filters.flatMap(f => CatalystPredicates.toPredicate(f)).toSeq)
 }
 
 class GraftV2ScanBuilder(val tbl: GraftSparkTable) extends ScanBuilder
@@ -438,9 +439,8 @@ class GraftV2ScanBuilder(val tbl: GraftSparkTable) extends ScanBuilder
   private var required: Option[StructType] = None
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, _) = filters.partition(f => GraftRelation.toPredicate(f).isDefined)
-    preds = ok.flatMap(GraftRelation.toPredicate).toSeq
-    accepted = ok
+    accepted = filters.filter(f => CatalystPredicates.toPredicate(f).isDefined)
+    preds = accepted.flatMap(f => CatalystPredicates.toPredicate(f)).toSeq
     // every filter stays post-scan (Spark re-applies them all): the pushed
     // predicates only drive Graft's driver-side manifest/file pruning, so
     // soundness never depends on the translation.
@@ -448,65 +448,67 @@ class GraftV2ScanBuilder(val tbl: GraftSparkTable) extends ScanBuilder
   }
   override def pushedFilters(): Array[Filter] = accepted
 
-  // Column pruning is consumed by the DSv2 batch scan only; the substituted
-  // native plan and the V1 fallback do their own pruning, so GraftV2Scan
-  // keeps reporting the full schema (Spark projects above it either way).
+  // Column pruning is consumed by the DSv2 batch scan; the substituted
+  // native plan does its own, so GraftV2Scan keeps reporting the full
+  // schema (Spark projects above it either way).
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = Some(requiredSchema)
 
-  /** The runtime-filtering batch scan ([[GraftDppScan]]) for tables whose
-    * metadata shows a prunable plane (partition spec / cluster-by / bloom
-    * columns) when it is provably equivalent to the native path (see
-    * [[GraftDpp]]); otherwise the V1Scan whose relation the substitution
-    * rule replaces. ONE pinned native scan is shared by whichever route
-    * wins — the fallback V1Scan carries it too, so the substitution rule
-    * reuses the already-planned snapshot instead of planning (and
+  /** One route for every table shape: the runtime-filtering batch scan
+    * ([[GraftDppScan]]) whenever the pinned snapshot's files can be read
+    * verbatim ([[GraftDpp.planEligible]]); otherwise a [[GraftV2Scan]]
+    * whose relation the substitution rule replaces with the native plan.
+    * ONE pinned native scan serves either: the fallback carries it, so the
+    * rule reuses the already-planned snapshot instead of planning (and
     * QUERY_HISTORY-recording) a second one.
     */
   override def build(): Scan = {
     val native = tbl.nativeScan(preds) // cheap: planning is lazy inside
-    val dpp =
-      if (!GraftDpp.route(tbl)) None
-      else GraftDpp.planEligible(native).map { files =>
-        new GraftDppScan(tbl, native, files, accepted,
-          required.getOrElse(tbl.schema()), native.meta.location)
-      }
-    dpp.getOrElse(new GraftV2Scan(tbl, preds, Some(native)))
+    GraftDpp.planEligible(native) match {
+      case Some(files) =>
+        new GraftDppScan(tbl, native, files, accepted, required.getOrElse(tbl.schema()))
+      case None => new GraftV2Scan(tbl, native)
+    }
   }
 }
 
-/** The v2 Scan. Normally never executed — [[GraftScanSubstitution]] replaces
-  * the enclosing relation with the native plan. The [[V1Scan]] conversion is
-  * the correctness fallback for sessions without the rule (row-based, no
-  * codegen — same profile as the plain DSv1 path).
+/** A snapshot the DSv2 scan cannot read verbatim. Never executed:
+  * [[GraftScanSubstitution]] replaces its relation with the native plan of
+  * the ScanBuilder's pinned scan, `native`.
   */
-class GraftV2Scan(val tbl: GraftSparkTable, val preds: Seq[Predicate],
-                  /** The ScanBuilder's pinned native scan, reused by the
-                    * substitution rule so one query plans (and records) the
-                    * snapshot once even when a DSv2 route was probed first. */
-                  val pinned: Option[_root_.graft.table.GraftScan] = None)
-    extends Scan with V1Scan {
+class GraftV2Scan(val tbl: GraftSparkTable, val native: GraftScan) extends Scan {
   override def readSchema(): StructType = tbl.schema()
   override def description(): String =
-    s"graft ${tbl.name()} [${preds.mkString(", ")}]"
-  override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val params = tbl.travel match {
-      case TimeTravel.AtSnapshot(id) => Map("snapshotId" -> id.toString)
-      case TimeTravel.AsOf(ts) => Map("asOfTimestampMs" -> ts.toString)
-      case TimeTravel.AtRef(r) => Map("ref" -> r)
-      case TimeTravel.None => Map.empty[String, String]
-    }
-    GraftRelation(context, tbl.graftTable, params).asInstanceOf[T]
-  }
+    s"graft ${tbl.name()} [${native.predicates.mkString(", ")}]"
 }
 
-/** Catalyst-expression → Graft predicate translation for the DSv1
-  * `LogicalRelation` substitution path (the v2 path gets `sources.Filter`s
-  * from Spark's own pushdown instead). Partial on purpose: untranslatable
-  * conjuncts just don't prune — the full filter is always re-applied.
+/** Spark → Graft predicate translation, for both shapes Spark hands a
+  * Graft read: `sources.Filter`s (pushed into the scan builder, DELETE's
+  * `SupportsDelete`, the DSv2 scan's runtime filters) and Catalyst
+  * expressions (SQL DML conditions, metadata aggregates). Partial on
+  * purpose: untranslatable conjuncts just don't prune — Spark re-applies
+  * the full filter, so soundness never depends on the translation.
   */
 object CatalystPredicates {
+  def toPredicate(f: Filter): Option[Predicate] = f match {
+    case sources.EqualTo(c, v) => Some(Predicate.Eq(c, v))
+    case sources.GreaterThan(c, v) => Some(Predicate.Gt(c, v))
+    case sources.GreaterThanOrEqual(c, v) => Some(Predicate.GtEq(c, v))
+    case sources.LessThan(c, v) => Some(Predicate.Lt(c, v))
+    case sources.LessThanOrEqual(c, v) => Some(Predicate.LtEq(c, v))
+    case sources.In(c, vs) => Some(Predicate.In(c, vs.toSeq))
+    case sources.IsNull(c) => Some(Predicate.IsNull(c))
+    case sources.IsNotNull(c) => Some(Predicate.NotNull(c))
+    case sources.StringStartsWith(c, p) => Some(Predicate.StartsWith(c, p))
+    case sources.And(l, r) => (toPredicate(l), toPredicate(r)) match {
+      case (Some(a), Some(b)) => Some(Predicate.And(a, b))
+      case (a, b) => a.orElse(b) // half-pushable AND is still sound
+    }
+    case sources.Or(l, r) => for (a <- toPredicate(l); b <- toPredicate(r))
+      yield Predicate.Or(a, b)
+    case _ => None
+  }
+
   def toPredicate(e: Expression): Option[Predicate] = e match {
     case CEq(a: AttributeReference, l: CLiteral) => lit(l).map(Predicate.Eq(a.name, _))
     case CEq(l: CLiteral, a: AttributeReference) => lit(l).map(Predicate.Eq(a.name, _))
@@ -555,11 +557,13 @@ object CatalystPredicates {
   }
 }
 
-/** Optimizer rule replacing Graft relations (v2 and v1) with the native
-  * GraftScan logical plan: driver-side manifest/file pruning with the
-  * pushed predicates, then Spark's own vectorized parquet scan + codegen.
-  * Output attributes are aliased back to the original relation's exprIds so
-  * upstream references stay bound.
+/** Optimizer rule for Graft relations: SQL DML becomes native commands,
+  * exact global aggregates collapse to metadata, and a [[GraftV2Scan]] — a
+  * snapshot the DSv2 scan cannot read verbatim — is replaced by the native
+  * GraftScan logical plan (driver-side manifest/file pruning with the
+  * pushed predicates, deletes merged, then Spark's own vectorized parquet
+  * scan + codegen). Output attributes are aliased back to the original
+  * relation's exprIds so upstream references stay bound.
   */
 case class GraftScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -580,22 +584,10 @@ case class GraftScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] 
     case _ => plan.transformWithSubqueries {
       case agg: Aggregate if agg.groupingExpressions.isEmpty =>
         tryMetadataAggregate(agg).getOrElse(agg)
-      // the DSv2 batch scan stays v2: a substituted relation could never
-      // receive the dynamic-pruning subquery's keys, nor report the
-      // KeyGroupedPartitioning that drops co-bucketed join exchanges
-      case r: DataSourceV2ScanRelation if r.relation.table.isInstanceOf[GraftSparkTable] &&
-          !r.scan.isInstanceOf[GraftDppScan] =>
-        val g = unwrap(r.scan)
-        substitute(r.output, g.flatMap(_.pinned).getOrElse(
-          r.relation.table.asInstanceOf[GraftSparkTable]
-            .nativeScan(g.map(_.preds).getOrElse(Nil))))
-      case r: DataSourceV2Relation if r.table.isInstanceOf[GraftSparkTable] =>
-        substitute(r.output, r.table.asInstanceOf[GraftSparkTable].nativeScan(Nil))
-      case f @ LFilter(cond, lr @ LogicalRelation(gr: GraftRelation, _, _, _, _)) =>
-        val pushed = splitConjuncts(cond).flatMap(CatalystPredicates.toPredicate)
-        LFilter(cond, substitute(lr.output, gr.pinnedScan(pushed)))
-      case lr @ LogicalRelation(gr: GraftRelation, _, _, _, _) =>
-        substitute(lr.output, gr.pinnedScan(Nil))
+      // the DSv2 batch scan stays v2; only the non-verbatim fallback is
+      // rewritten to the native plan
+      case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[GraftV2Scan] =>
+        substitute(r.output, r.scan.asInstanceOf[GraftV2Scan].native)
     }
   }
 
@@ -612,19 +604,17 @@ case class GraftScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] 
     import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
     import org.apache.spark.sql.catalyst.InternalRow
 
-    def unwrapChild(p: LogicalPlan, conds: Seq[Expression]): Option[(Seq[Expression], LogicalPlan)] =
+    def unwrapChild(p: LogicalPlan, conds: Seq[Expression]): Option[(Seq[Expression], GraftSparkTable)] =
       p match {
         case Project(ps, child) if ps.forall(_.isInstanceOf[AttributeReference]) =>
           unwrapChild(child, conds)
-        case LFilter(c, child) => unwrapChild(child, conds ++ splitConjuncts(c))
+        case LFilter(c, child) => unwrapChild(child, conds ++ GraftSqlDml.splitConjuncts(c))
         case r: DataSourceV2ScanRelation if r.relation.table.isInstanceOf[GraftSparkTable] =>
-          Some((conds, r))
-        case r: DataSourceV2Relation if r.table.isInstanceOf[GraftSparkTable] => Some((conds, r))
-        case lr @ LogicalRelation(_: GraftRelation, _, _, _, _) => Some((conds, lr))
+          Some((conds, r.relation.table.asInstanceOf[GraftSparkTable]))
         case _ => None
       }
 
-    val (conds, rel) = unwrapChild(agg.child, Nil).getOrElse(return None)
+    val (conds, tbl) = unwrapChild(agg.child, Nil).getOrElse(return None)
     // EXACT translation only: a weakened predicate here would overcount.
     // The already-pushed (possibly half-translated) v2-scan preds are
     // deliberately NOT used — pushFilters keeps every filter post-scan, so
@@ -632,13 +622,7 @@ case class GraftScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] 
     val translated = conds.map(CatalystPredicates.toPredicateExact)
     if (translated.exists(_.isEmpty)) return None // residual filter would change the result
     val pushed = translated.flatten
-    val scan = rel match {
-      case r: DataSourceV2ScanRelation =>
-        r.relation.table.asInstanceOf[GraftSparkTable].nativeScan(pushed)
-      case r: DataSourceV2Relation => r.table.asInstanceOf[GraftSparkTable].nativeScan(pushed)
-      case lr: LogicalRelation => lr.relation.asInstanceOf[GraftRelation].pinnedScan(pushed)
-      case _ => return None
-    }
+    val scan = tbl.nativeScan(pushed)
 
     def internalOf(dt: org.apache.spark.sql.types.DataType, canonical: Any): Any = {
       import org.apache.spark.sql.types._
@@ -678,27 +662,7 @@ case class GraftScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] 
       Seq(InternalRow.fromSeq(values.map(_.get)))))
   }
 
-  /** The pushdown batch wraps a V1Scan in a (private[sql]) V1ScanWrapper;
-    * recover our scan — and its pruning predicates — through its `v1Scan`
-    * accessor.
-    */
-  private def unwrap(scan: org.apache.spark.sql.connector.read.Scan): Option[GraftV2Scan] =
-    scan match {
-      case g: GraftV2Scan => Some(g)
-      case other =>
-        try other.getClass.getMethod("v1Scan").invoke(other) match {
-          case g: GraftV2Scan => Some(g)
-          case _ => None
-        } catch { case _: NoSuchMethodException => None }
-    }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case CAnd(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
-    case other => Seq(other)
-  }
-
-  private def substitute(out: Seq[AttributeReference],
-                         scan: _root_.graft.table.GraftScan): LogicalPlan = {
+  private def substitute(out: Seq[AttributeReference], scan: GraftScan): LogicalPlan = {
     // independently optimized so the native subplan (casts, unions, MOR
     // anti-join) gets the full standard batch treatment even though the
     // outer plan is already past those batches
@@ -711,9 +675,11 @@ case class GraftScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] 
 }
 
 /** Installs [[GraftScanSubstitution]] into a session at runtime (idempotent).
-  * Invoked automatically by [[GraftTableCatalog.initialize]] and the
-  * `format("graft")` source, so any session that touches Graft data gets the
-  * native read path; `V1Scan`/DSv1 remain as the uninstalled fallback.
+  * Invoked by [[GraftTableCatalog.initialize]] and [[GraftSource.getTable]],
+  * both of which run while the reading session analyzes its first Graft
+  * relation, so every session that can name a Graft table also has the
+  * rule that SQL DML, metadata aggregates and the non-verbatim fallback
+  * ([[GraftV2Scan]], which cannot execute on its own) depend on.
   */
 object GraftExtensions {
   def install(spark: SparkSession): Unit = synchronized {

@@ -10,6 +10,8 @@ import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, Metadata, StructType}
+import org.apache.spark.sql.vectorized.ColumnarBatch
+import scala.jdk.CollectionConverters._
 
 import graft.format.{DataFile, GraftSchema, PartitionField, Transform}
 
@@ -105,42 +107,31 @@ case class GraftSpjReaderFactory(read: PartitionedFile => Iterator[InternalRow],
           start, len, Array.empty, 0L, total, Map.empty))
     }
 
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+  // a batch-decoding readFunc hands out ColumnarBatches behind the row type;
+  // whole-iterator cast, not a per-element lambda — a typed lambda param
+  // would make scalac cast each ColumnarBatch to InternalRow first
+  private def batches(partition: InputPartition): Iterator[ColumnarBatch] =
+    raw(partition).asInstanceOf[Iterator[ColumnarBatch]]
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    // row surface even under a batch-decoding readFunc (Spark won't call
-    // this when supportColumnarReads, but stay total): flatten the batches.
-    // Whole-iterator cast, not per-element lambda — a typed lambda param
-    // would make scalac cast each ColumnarBatch to InternalRow first.
-    val rows =
-      if (columnar) {
-        import scala.jdk.CollectionConverters._
-        raw(partition)
-          .asInstanceOf[Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]]
-          .flatMap(_.rowIterator().asScala)
-      }
-      else raw(partition)
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (rows.hasNext) { cur = rows.next(); true } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
+  private def readerOf[T](it: Iterator[T]): PartitionReader[T] = new PartitionReader[T] {
+    private var cur: T = _
+    override def next(): Boolean = if (it.hasNext) { cur = it.next(); true } else false
+    override def get(): T = cur
+    override def close(): Unit = ()
   }
 
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+
+  // row surface even under a batch-decoding readFunc (Spark won't call
+  // this when supportColumnarReads, but stay total): flatten the batches
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    readerOf(
+      if (columnar) batches(partition).flatMap(_.rowIterator().asScala)
+      else raw(partition))
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     require(columnar, "columnar reads not supported for this schema")
-    val batches = raw(partition)
-      .asInstanceOf[Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]]
-    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      private var cur: org.apache.spark.sql.vectorized.ColumnarBatch = _
-      override def next(): Boolean =
-        if (batches.hasNext) { cur = batches.next(); true } else false
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = cur
-      override def close(): Unit = ()
-    }
+    readerOf(batches(partition))
   }
 }
 

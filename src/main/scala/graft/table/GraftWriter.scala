@@ -130,18 +130,21 @@ object GraftWriter {
       val driverMaxBytes = spark.conf
         .getOption("graft.write.driver-max-bytes").map(_.toLong)
         .getOrElse(8L * 1024 * 1024)
+      val driverMaxRows = spark.conf.getOption("graft.write.driver-max-rows")
+        .map(_.toLong).getOrElse(100000L)
       val driverWritten =
         driverMaxBytes > 0 && clusterBy.isEmpty &&
         graft.io.DriverParquet.eligibleTypes(schema) &&
         spec.fields.forall(pf => graft.io.DriverParquet.safeName(pf.name)) &&
         graft.io.DriverParquet.isLocalPlan(withParts.queryExecution.optimizedPlan) && {
-          val rows = withParts.collect()
+          // a bounded probe, never a full collect: a local plan may still
+          // expand (a join or generator over local leaves) far past the
+          // caps, and one row over the row cap already means the job path
+          val rows = withParts.limit((driverMaxRows + 1).min(Int.MaxValue).toInt).collect()
           val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
             spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
           graft.io.DriverParquet.tryWrite(rows, schema, partNames, writeDir,
-            maxRecordsPerFile(meta), advisory, driverMaxBytes,
-            spark.conf.getOption("graft.write.driver-max-rows").map(_.toLong)
-              .getOrElse(100000L),
+            maxRecordsPerFile(meta), advisory, driverMaxBytes, driverMaxRows,
             spark.sparkContext.hadoopConfiguration)
         }
       if (!driverWritten) {

@@ -54,8 +54,9 @@ object ExplainAudit {
         .select("event_id", "event_type", "value")
     }
 
-    // DSv2 catalog SQL read: the substitution must yield a native FileScan
-    // (vectorized parquet, PushedFilters) — NOT a RowDataSourceScan.
+    // DSv2 catalog SQL read of a bare table: the one DSv2 batch scan
+    // (graft-dpp, columnar under a ColumnarToRow, filters pushed) — NOT a
+    // RowDataSourceScan, and no runtime-filter subquery for a bare table.
     spark.conf.set("spark.sql.catalog.g_audit",
       classOf[graft.sources.GraftTableCatalog].getName)
     spark.conf.set("spark.sql.catalog.g_audit.warehouse",
@@ -63,7 +64,7 @@ object ExplainAudit {
     spark.sql("CREATE TABLE g_audit.db.ev (event_id BIGINT, event_type STRING, value DOUBLE)")
     events.select("event_id", "event_type", "value").createOrReplaceTempView("ev_src")
     spark.sql("INSERT INTO g_audit.db.ev SELECT * FROM ev_src")
-    audit("DSv2 SQL read (expect FileScan parquet + PushedFilters, no RowDataSourceScan)") {
+    audit("DSv2 SQL read (expect graft-dpp BatchScan + ColumnarToRow + pushed filters, no RowDataSourceScan)") {
       spark.sql("SELECT event_id, value FROM g_audit.db.ev WHERE event_type = 'click' AND value > 1.0")
     }
 
@@ -87,8 +88,8 @@ object ExplainAudit {
 
     // the same scan in its packed layout: a month-partitioned (non-bucket)
     // fact joined to a dim filtered on a DERIVED non-join column; the
-    // dynamic-pruning subquery must sit on the graft-dpp scan, which the
-    // partition spec alone routes to (there is no routing conf)
+    // dynamic-pruning subquery must sit on the graft-dpp scan, whose
+    // partition spec alone offers the runtime filter (there is no conf)
     {
       spark.sql(
         "CREATE TABLE g_audit.db.factm (d DATE, v DOUBLE) PARTITIONED BY (months(d))")

@@ -116,17 +116,16 @@ class DppSpec extends SparkSpec {
   }
 
   /** The native-path control leg: runs `sqlText` with `table` (as written
-    * in the SQL, `<catalog>.db.<name>`) read through the DSv1
-    * `format("graft")` source, optionally pinned to a snapshot — a read the
-    * substitution rule rewrites to the native plan, never the DSv2 scan.
+    * in the SQL, `<catalog>.db.<name>`) read through the native
+    * `GraftTable.scan` / `atSnapshot` API in a temp view — Spark's own
+    * parquet scan over the pruned file list, never the DSv2 scan.
     */
   private def nativeRows(sqlText: String, table: String,
                          snapshot: Option[Long] = None): Seq[org.apache.spark.sql.Row] = {
     val Array(catalog, db, name) = table.split('.')
-    val reader = spark.read.format("graft")
-      .option("warehouse", spark.conf.get(s"spark.sql.catalog.$catalog.warehouse"))
-      .option("table", s"$db.$name")
-    snapshot.fold(reader)(id => reader.option("snapshotId", id.toString)).load()
+    val t = new graft.catalog.GraftCatalog(
+      spark.conf.get(s"spark.sql.catalog.$catalog.warehouse")).loadTable(s"$db.$name")
+    snapshot.fold(t.scan())(id => t.atSnapshot(id)).toDF(spark)
       .createOrReplaceTempView(s"native_$name")
     val inSql = snapshot.fold(table)(id => s"$table VERSION AS OF $id")
     spark.sql(sqlText.replace(inSql, s"native_$name")).collect().toSeq
@@ -257,8 +256,8 @@ class DppSpec extends SparkSpec {
   }
 
   test("route choice per shape: partitioned serves dpp, bare stays native, bucket keeps spj") {
-    // the DSv2 scan is the read path exactly where a runtime filter could
-    // prune — a metadata-shape rule with no routing conf
+    // the DSv2 scan is the read path for every shape; where a runtime
+    // filter could prune is a metadata-shape rule with no routing conf
     dppGeneralReady
     fixtureReady
     def executed(sqlText: String): String = {
@@ -273,11 +272,19 @@ class DppSpec extends SparkSpec {
     // bloom-declared table: the property alone shape-routes it
     val bloomed = executed("SELECT sum(v) AS s FROM dppg.db.factb WHERE k = 402")
     assert(bloomed.contains("graft-dpp"), s"bloom'd table must serve graft-dpp:\n$bloomed")
-    // bare unpartitioned/unclustered/bloomless: nothing a runtime key set
-    // could prune — the substituted native plan stays the route
+    // bare unpartitioned/unclustered/bloomless: the same columnar DSv2
+    // scan with the static filter pushed, but nothing a runtime key set
+    // could prune — a star join over it plans no dynamic-pruning subquery
     val bare = executed("SELECT sum(v) AS s FROM dppg.db.facts WHERE k >= 17")
-    assert(!bare.contains("graft-dpp") && !bare.contains("graft-spj"),
-      s"bare table must keep the native substitution:\n$bare")
+    assert(bare.contains("graft-dpp") && bare.contains("ColumnarToRow") &&
+      bare.contains("GreaterThanOrEqual(k,17)"),
+      s"bare table must serve the columnar DSv2 scan with its filter pushed:\n$bare")
+    val bareJoin = executed(
+      """SELECT count(*) AS n
+        |FROM dppg.db.facts f JOIN dppg_dim d ON f.k = d.k
+        |WHERE d.name IN ('n42', 'n57', 'n2042')""".stripMargin)
+    assert(bareJoin.contains("graft-dpp") && !bareJoin.contains("dynamicpruning"),
+      s"a bare table must not invite a dynamic-pruning subquery:\n$bareJoin")
     // bucket shape under Spark's v2 bucketing: the key-grouped layout
     // (KeyGroupedPartitioning must survive for exchange-free co-bucketed joins)
     val bucketed = executed("SELECT sum(v) AS s FROM dpp.db.fact WHERE k >= 17")

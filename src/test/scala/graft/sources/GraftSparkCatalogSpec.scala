@@ -117,16 +117,16 @@ class GraftSparkCatalogSpec extends SparkSpec {
     val m = graft.table.QueryHistory.all.filter(_.table == "db.p").last
     assert(m.filesScanned < m.filesTotal, s"no manifest pruning: ${m.filesScanned}/${m.filesTotal}")
 
-    // BARE table (no partition spec / cluster-by / blooms): the substituted
-    // native parquet plan stays the route — nothing to runtime-prune
+    // BARE table (no partition spec / cluster-by / blooms): the same
+    // columnar DSv2 scan, static filter pushed
     spark.sql("CREATE TABLE gfast.db.q (id BIGINT, v DOUBLE)")
     spark.sql("INSERT INTO gfast.db.q VALUES (1, 1.0), (2, 2.0)")
     val dfq = spark.sql("SELECT id FROM gfast.db.q WHERE v > 0.5")
     assert(dfq.collect().map(_.getLong(0)).toSet == Set(1L, 2L))
     val planQ = dfq.queryExecution.executedPlan.toString
-    assert(planQ.contains("FileScan parquet"), s"expected native parquet scan:\n$planQ")
-    assert(!planQ.contains("RowDataSourceScan") && !planQ.contains("graft-dpp"),
-      s"bare table must keep the substitution:\n$planQ")
+    assert(planQ.contains("graft-dpp") && planQ.contains("ColumnarToRow"),
+      s"bare table must serve the columnar DSv2 scan:\n$planQ")
+    assert(!planQ.contains("RowDataSourceScan"), s"read fell back to the V1 row path:\n$planQ")
     assert(planQ.contains("GreaterThan(v,0.5)"), s"no parquet pushdown:\n$planQ")
   }
 
@@ -265,8 +265,33 @@ class GraftSparkCatalogSpec extends SparkSpec {
       .filter("cat = 'b'").select("id")
     assert(back.collect().map(_.getLong(0)).toSet == Set(2L, 3L))
     val plan = back.queryExecution.executedPlan.toString
-    assert(plan.contains("FileScan parquet"), s"expected substituted parquet scan:\n$plan")
+    assert(plan.contains("graft-dpp") && plan.contains("ColumnarToRow"),
+      s"format(graft) must read through the columnar DSv2 scan:\n$plan")
     assert(!plan.contains("RowDataSourceScan"), s"still on the V1 row path:\n$plan")
+    assert(plan.contains("EqualTo(cat,b)"), s"no parquet pushdown:\n$plan")
+  }
+
+  test("a fresh session installs the substitution on first use: MOR reads via catalog and format(graft)") {
+    // a MOR snapshot is the one shape the DSv2 scan refuses; its fallback
+    // scan cannot execute without the substitution rule, so correct rows in
+    // a brand-new session show that each entry point installs the rule
+    val wh = tempWarehouse()
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.catalog.gnew", classOf[GraftTableCatalog].getName)
+    s2.conf.set("spark.sql.catalog.gnew.warehouse", wh)
+    s2.sql("CREATE TABLE gnew.db.m (id BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('enable-iceberg-merge-on-read'='true')")
+    s2.sql("INSERT INTO gnew.db.m SELECT id, CAST(id AS DOUBLE) FROM range(0, 100)")
+    s2.sql("DELETE FROM gnew.db.m WHERE id < 10")
+    assert(s2.sql("SELECT count(*) FROM gnew.db.m.files WHERE content <> 'data'")
+      .head().getLong(0) > 0, "the DELETE must have written position-delete files")
+    assert(s2.sql("SELECT count(*), sum(v) FROM gnew.db.m WHERE v >= 0").head() ==
+      Row(90L, (10 until 100).sum.toDouble))
+    val s3 = spark.newSession()
+    val viaSource = s3.read.format("graft")
+      .option("warehouse", wh).option("table", "db.m").load()
+      .filter("v >= 0")
+    assert(viaSource.collect().map(_.getLong(0)).sorted.toSeq == (10L until 100L))
   }
 
   test("CALL procedures: the SQL maintenance surface (docs/03:184-206, docs/10)") {

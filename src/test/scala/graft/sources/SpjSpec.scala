@@ -46,11 +46,11 @@ class SpjSpec extends SparkSpec {
     // sort-merge join is none — count exchanges under the join node.
     val spjRows = df.collect()
 
-    // reference result: the DSv1 reads, which the substitution rule
-    // rewrites to the native plan (+ shuffles)
+    // reference result: the native GraftTable.scan reads — Spark's own
+    // parquet scan over the pruned file list (+ shuffles)
+    val cat = new graft.catalog.GraftCatalog(wh)
     Seq("fact", "dim").foreach { t =>
-      spark.read.format("graft").option("warehouse", wh).option("table", s"db.$t")
-        .load().createOrReplaceTempView(s"spj_ref_$t")
+      cat.loadTable(s"db.$t").scan().toDF(spark).createOrReplaceTempView(s"spj_ref_$t")
     }
     val ref = spark.sql(q.replace("spj.db.fact", "spj_ref_fact")
       .replace("spj.db.dim", "spj_ref_dim")).collect()

@@ -130,4 +130,27 @@ class DriverWriteParitySpec extends SparkSpec {
       case None => spark.conf.unset("graft.write.driver-max-bytes")
     }
   }
+
+  test("an all-local plan that expands past the row cap takes the job path without a driver collect") {
+    import spark.implicits._
+    // two 8k-row local frames cross-join to 64M rows: every leaf is a
+    // LocalRelation, so the driver path is considered, but its probe reads
+    // at most row-cap + 1 rows and the append falls back to the job write
+    // (a full collect would hold all 64M rows in driver memory)
+    val a = (0L until 8192L).toDF("a")
+    val b = (0L until 8192L).toDF("b")
+    val crossed = a.crossJoin(b).select(lit(1L).as("one"))
+    val cat = new GraftCatalog(
+      java.nio.file.Files.createTempDirectory("graft-dwcross").toString)
+    val t = cat.createTable("db.cross", crossed.schema)
+    t.append(spark, crossed)
+    assert(t.scan().dataFiles.map(_.recordCount).sum == 8192L * 8192L)
+    // job-written files carry the Hadoop .crc sidecars the driver path never writes
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(t.meta.location))
+    val crcs = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet.crc"))
+    } finally walk.close()
+    assert(crcs > 0, "the expanding append must have taken the job path")
+  }
 }

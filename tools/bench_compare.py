@@ -17,6 +17,11 @@ discipline the round-6 judge applied by hand:
   3. flag only queries whose normalized ratio exceeds the band (default
      1.5x) in either direction — those are real regressions/wins, not drift.
 
+Pairs captured at different core counts (`cpus`) are refused: no control
+probe normalizes a 4x change in parallelism. A gate timed in the old run
+that the new run lists under `failed` is reported as FAILED (exit 1), not
+as a missing gate.
+
 Accepts raw one-line bench JSON, sbt "[info] "-prefixed lines, and the
 driver's {n, rc, tail} wrapper (tail may be TRUNCATED mid-JSON — parse
 defensively and use whatever queries survive).
@@ -108,6 +113,13 @@ def load(path):
     if not qs:
         sys.exit(f"{path}: no bench JSON found")
     out = {"queries": qs}
+    mfl = re.search(r'"failed":\[(.*?)\](?=,"fixture_sec")', text)
+    if mfl:
+        out["failed"] = [{"name": n, "error": e} for n, e in re.findall(
+            r'"name":"([^"]+)","error":"([^"]*)"', mfl.group(1))]
+    mcpu = re.search(r'"cpus":(\d+)', text)
+    if mcpu:
+        out["cpus"] = int(mcpu.group(1))
     mv = re.search(r'"verdict":"([^"]+)"', text)
     if mv:
         out["verdict"] = mv.group(1)
@@ -145,7 +157,17 @@ def main(old_path, new_path, band=1.5):
         if v != "clean":
             print(f"WARNING: {path} verdict is '{v}' — its times are host-"
                   "contended; rerun it before trusting any flag below")
+    co, cn = old.get("cpus"), new.get("cpus")
+    if co is not None and cn is not None and co != cn:
+        sys.exit(f"refusing to compare: {old_path} ran on {co} cpus, "
+                 f"{new_path} on {cn} cpus")
+    if co is None or cn is None:
+        print("WARNING: a capture does not record its core count — make sure "
+              "both ran on the same number of cpus")
     qo, qn = old["queries"], new["queries"]
+    failed_new = {f["name"]: f for f in new.get("failed") or []}
+    newly_failed = sorted(k for k in qo if k in failed_new)
+    missing = sorted(k for k in qo if k not in qn and k not in failed_new)
     common = sorted(set(qo) & set(qn))
     if not common:
         sys.exit("no common queries")
@@ -206,6 +228,14 @@ def main(old_path, new_path, band=1.5):
     added = sorted(set(qn) - set(qo))
     if added:
         print(f"new queries (no baseline): {', '.join(added)}")
+    if missing:
+        print(f"missing from the new run (neither timed nor failed): {', '.join(missing)}")
+    for k in newly_failed:
+        f = failed_new[k]
+        why = ": ".join(x for x in (f.get("error"), f.get("message")) if x)
+        print(f"  FAILED     {k}: {qo[k]:.2f}s -> throws ({why or 'no error recorded'})")
+    if newly_failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
