@@ -2,6 +2,7 @@ package graft.io
 
 import graft.format.Canonical
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, XxHash64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,9 +18,10 @@ import org.apache.spark.sql.types._
   * = ~700 JSON chars per column per file). Each value probes two positions
   * derived from ONE xxhash64 of the value's canonical string — the classic
   * (h1 + i·h2) double-hashing split of the 64-bit hash — so the executor
-  * side is a single codegen'd hash call, and the driver side reproduces it
+  * side is a single codegen'd hash call, and the driver reproduces it
   * exactly by evaluating the SAME catalyst expressions (Cast to string,
-  * then XxHash64) on the probe literal. The hash pair is bitmap-size-free;
+  * then XxHash64, [[hashOf]]) on a probe literal or on the rows of a small
+  * append it reads back itself. The hash pair is bitmap-size-free;
   * positions are taken modulo the size of the bitmap being probed, so a
   * table whose `write.bloom-bits` changed over time stays consistent
   * per-file.
@@ -45,69 +47,37 @@ object Bloom {
     (pmod(h1, lit(bits.toLong)).cast("int"), pmod(h1 + h2, lit(bits.toLong)).cast("int"))
   }
 
-  /** Driver-side twin of [[positionColumns]]: the (h1, h2) hash pair of a
-    * probe value for a `dt`-typed column, from the same Cast+XxHash64
-    * catalyst evaluation. None when the value cannot be represented
-    * (null / unsupported type / conversion failure) — callers must not
-    * prune then.
+  /** The hash every bloom is built and probed with: xxhash64 (seed 42) of
+    * the value's string cast in UTC — the catalyst evaluation
+    * [[positionColumns]] codegens on executors, bound here to a probe
+    * literal ([[hashPair]]) or to a column of a row read on the driver.
     */
-  def hashPair(dt: DataType, value: Any): Option[(Long, Long)] = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
+  def hashOf(value: Expression): Expression =
+    XxHash64(Seq(Cast(value, StringType, Some("UTC"))), 42L)
+
+  /** The (h1, h2) double-hashing split of one 64-bit hash, as
+    * [[positionColumns]] computes it.
+    */
+  def pairOf(h: Long): (Long, Long) =
+    (java.lang.Long.remainderUnsigned(h, 0x100000000L),
+      java.lang.Long.remainderUnsigned(h >>> 32, 0x100000000L))
+
+  /** Probe side: the (h1, h2) hash pair of a predicate value for a
+    * `dt`-typed column. None when the value cannot be represented (null /
+    * unsupported type / conversion failure) — callers must not prune then.
+    */
+  def hashPair(dt: DataType, value: Any): Option[(Long, Long)] =
     external(dt, value).flatMap { ext =>
       val literal =
         try Literal.create(ext, dt)
         catch { case _: Exception => return None }
-      val cast = Cast(literal, StringType, Some("UTC"))
-      if (!cast.resolved) return None
-      XxHash64(Seq(cast), 42L).eval() match {
-        case l: java.lang.Long =>
-          val h = l.longValue()
-          Some((java.lang.Long.remainderUnsigned(h, 0x100000000L),
-            java.lang.Long.remainderUnsigned(h >>> 32, 0x100000000L)))
+      val h = hashOf(literal)
+      if (!h.resolved) None
+      else h.eval() match {
+        case l: java.lang.Long => Some(pairOf(l.longValue()))
         case _ => None
       }
     }
-  }
-
-  /** Reusable per-column hash evaluator for the DRIVER bloom-build hot
-    * loop (r18 ADVICE): [[hashPair]] constructs and interpreted-evaluates
-    * a fresh Literal+Cast+XxHash64 tree PER VALUE — near the driver-build
-    * cutover (millions of values) the tree construction dominates the
-    * hashing itself. This builds the SAME Cast→XxHash64 evaluation ONCE
-    * over a bound one-slot row and feeds values through it, so each value
-    * pays only the evaluation. Restricted to the exactly-representable
-    * driver read set (GraftWriter.driverReadable — integrals, float,
-    * double, string); bit-identity with [[hashPair]] and the executor
-    * path is pinned by BloomDriverParitySpec. NOT thread-safe (mutable
-    * row): build one per worker thread.
-    */
-  def hashPairEvaluator(dt: DataType): Any => Option[(Long, Long)] = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow, XxHash64}
-    val toInternal: Any => Any = dt match {
-      case ByteType => v => v.asInstanceOf[Number].byteValue()
-      case ShortType => v => v.asInstanceOf[Number].shortValue()
-      case IntegerType => v => v.asInstanceOf[Number].intValue()
-      case LongType => v => v.asInstanceOf[Number].longValue()
-      case FloatType => v => v.asInstanceOf[Number].floatValue()
-      case DoubleType => v => v.asInstanceOf[Number].doubleValue()
-      case StringType =>
-        v => org.apache.spark.unsafe.types.UTF8String.fromString(v.asInstanceOf[String])
-      case other => sys.error(s"hashPairEvaluator: unsupported type $other")
-    }
-    val hash = XxHash64(
-      Seq(Cast(BoundReference(0, dt, nullable = false), StringType, Some("UTC"))), 42L)
-    val row = new GenericInternalRow(1)
-    (v: Any) => {
-      row.update(0, toInternal(v))
-      hash.eval(row) match {
-        case l: java.lang.Long =>
-          val h = l.longValue()
-          Some((java.lang.Long.remainderUnsigned(h, 0x100000000L),
-            java.lang.Long.remainderUnsigned(h >>> 32, 0x100000000L)))
-        case _ => None
-      }
-    }
-  }
 
   /** Convert a raw predicate literal to the external JVM type
     * `Literal.create` expects for `dt`, via the canonical space (so e.g. an

@@ -1,61 +1,52 @@
 package graft.io
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.Row
+import org.apache.hadoop.fs.RawLocalFileSystem
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
+import scala.collection.mutable.ArrayBuffer
 
-/** Driver-side parquet writer for SMALL, DRIVER-LOCAL appends (opt guide
-  * §1.2 / §5): the per-append Spark write of a pinned micro-batch frame is
-  * a whole job — source task, exchange for partitioned tables, parquet
+/** Driver-side parquet write for SMALL, DRIVER-LOCAL appends (opt guide
+  * §1.2 / §5). Why it exists: the Spark write of a pinned micro-batch frame
+  * is a whole job — source task, exchange for partitioned tables, parquet
   * task init, commit-protocol renames — whose fixed cost dwarfs the KBs it
-  * writes, and the crawl loops pay it several times PER micro-batch. When
-  * the append's plan is provably driver-resident (every leaf a
-  * LocalRelation) and its types/partition values are in the
-  * exactly-mirrorable set below, the rows are written straight to parquet
-  * files on the driver with the SAME physical/logical types, directory
-  * layout and footer-statistics machinery (parquet-mr column writers —
-  * the identical code Spark's own parquet writer runs on executors), so
-  * the manifest stats, pruning behavior and read-back values are
-  * indistinguishable from the job path. DriverWriteParitySpec pins that
-  * file-by-file. Production-sized appends keep the distributed write: the
-  * decision is on BYTES and ROWS (conf `graft.write.driver-max-bytes`,
-  * default 8 MB; rows capped by the broadcast-row budget), both
-  * data-derived, never core-count-tuned.
+  * writes, and the crawl loops pay it several times PER micro-batch.
+  *
+  * What selects it: the append's plan is provably driver-resident (every
+  * leaf a LocalRelation) and a bounded probe finds at most [[MaxRows]] rows
+  * of at most [[MaxBytes]] in total. Both cutovers are data sizes, never
+  * core counts; anything larger keeps the distributed write.
+  *
+  * How it writes: through Spark's own parquet encoder — the
+  * `OutputWriterFactory` that `ParquetFileFormat.prepareWrite` hands the job
+  * path, fed the same `InternalRow`s on the driver — into Spark's
+  * dynamic-partition directory layout. Types, encodings, footer statistics
+  * and the compression codec (`spark.sql.parquet.compression.codec`) are
+  * therefore the job path's by construction; DriverWriteParitySpec compares
+  * the two callers file by file.
   */
 object DriverParquet {
 
-  /** Types this writer mirrors bit-exactly against Spark's parquet writer:
-    * plain primitives and strings/binary. Timestamps, dates and decimals
-    * are deliberately excluded (zone/encoding games live there) — appends
-    * carrying them keep the Spark write.
+  /** Total bytes (UnsafeRow sizes of the data columns) an append may carry
+    * and still be written on the driver.
     */
-  def eligibleTypes(schema: StructType): Boolean =
-    schema.fields.forall(_.dataType match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType | StringType | BooleanType | BinaryType => true
-      case _ => false
-    })
+  private val MaxBytes: Long = 8L * 1024 * 1024
 
-  /** Partition FIELD names must survive the directory round-trip without
-    * escaping (the writer mirrors Spark's layout only on the unescaped
-    * alphabet).
-    */
-  def safeName(s: String): Boolean =
-    s.nonEmpty && s.forall(c => c.isLetterOrDigit && c < 0x80 || c == '_' || c == '-' || c == '.')
+  /** Rows an append may carry and still be written on the driver. */
+  private val MaxRows: Int = 100000
 
   /** Is every leaf of this plan a LocalRelation (the pinned batch plane),
     * reached only through driver-safe operators? Such a plan's collect is
     * a small single-task job at most — the cost class the append already
     * pays for its source — so hoisting it to the driver is sound.
     */
-  def isLocalPlan(p: LogicalPlan): Boolean = p match {
+  private def isLocalPlan(p: LogicalPlan): Boolean = p match {
     case _: LocalRelation => true
     case _: Project | _: Filter | _: Repartition | _: SubqueryAlias |
          _: Join | _: Aggregate | _: Union | _: GlobalLimit | _: LocalLimit |
@@ -64,159 +55,73 @@ object DriverParquet {
     case _ => false
   }
 
-  /** Render one partition VALUE to its directory token, mirroring Spark's
-    * dynamic-partition naming for the restricted value set; None = a value
-    * outside the mirrorable set (caller falls back to the Spark write).
-    * Null and the empty string both land in the Hive default partition —
-    * Spark's own rule.
-    */
-  private def partToken(v: Any): Option[String] = v match {
-    case null => Some("__HIVE_DEFAULT_PARTITION__")
-    case s: String =>
-      if (s.isEmpty) Some("__HIVE_DEFAULT_PARTITION__")
-      else if (safeName(s)) Some(s)
-      else None
-    case l: Long => Some(l.toString)
-    case i: Int => Some(i.toString)
-    case sh: Short => Some(sh.toString)
-    case b: Byte => Some(b.toString)
-    case b: Boolean => Some(b.toString)
-    case _ => None
-  }
-
-  /** The parquet MessageType Spark's SparkToParquetSchemaConverter would
-    * produce for this (restricted) schema — same physical types and
-    * logical annotations, so the vectorized reader, the footer-stats
-    * decode and the driver bloom reader all see files identical in kind
-    * to job-written ones.
-    */
-  private def messageTypeOf(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val rep = if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
-      val t = f.dataType match {
-        case ByteType => Types.primitive(PrimitiveTypeName.INT32, rep)
-          .as(LogicalTypeAnnotation.intType(8, true)).named(f.name)
-        case ShortType => Types.primitive(PrimitiveTypeName.INT32, rep)
-          .as(LogicalTypeAnnotation.intType(16, true)).named(f.name)
-        case IntegerType => Types.primitive(PrimitiveTypeName.INT32, rep).named(f.name)
-        case LongType => Types.primitive(PrimitiveTypeName.INT64, rep).named(f.name)
-        case FloatType => Types.primitive(PrimitiveTypeName.FLOAT, rep).named(f.name)
-        case DoubleType => Types.primitive(PrimitiveTypeName.DOUBLE, rep).named(f.name)
-        case BooleanType => Types.primitive(PrimitiveTypeName.BOOLEAN, rep).named(f.name)
-        case StringType => Types.primitive(PrimitiveTypeName.BINARY, rep)
-          .as(LogicalTypeAnnotation.stringType()).named(f.name)
-        case BinaryType => Types.primitive(PrimitiveTypeName.BINARY, rep).named(f.name)
-        case other => sys.error(s"DriverParquet: ineligible type $other")
-      }
-      b.addField(t)
-    }
-    b.named("spark_schema")
-  }
-
-  private def rowBytes(r: Row, dts: Array[DataType]): Long = {
-    var total = 16L
-    var i = 0
-    while (i < dts.length) {
-      dts(i) match {
-        case StringType => val v = r.get(i); if (v != null) total += v.asInstanceOf[String].length + 8
-        case BinaryType => val v = r.get(i); if (v != null) total += v.asInstanceOf[Array[Byte]].length + 8
-        case _ => total += 8
-      }
-      i += 1
-    }
-    total
-  }
-
-  /** Write `rows` (data columns followed by the partition-value columns)
-    * under `writeDir` in Spark's dynamic-partition layout. File sizing
-    * honors BOTH `maxRecordsPerFile` (the TARGET_FILE_SIZE contract) and
+  /** Write `df` — its first `nData` columns are the data, the rest are the
+    * partition columns, named as their directories — under `writeDir` when
+    * it is driver-local and within the caps. File sizing honors BOTH
+    * `maxRecordsPerFile` (the TARGET_FILE_SIZE contract) and
     * `advisoryBytes` (the AQE rebalance contract the distributed path
     * keeps: a hot partition value fans out across files instead of
-    * concentrating in one — GraftTableSpec pins it). Returns false —
-    * having written NOTHING — when any row/value/size check fails, so the
-    * caller can fall back to the Spark write.
+    * concentrating in one — GraftTableSpec pins it). Returns false — having
+    * written NOTHING — when the plan is not local or the probe exceeds a
+    * cap, so the caller falls back to the Spark write.
     */
-  def tryWrite(rows: Array[Row], schema: StructType, partDirNames: Seq[String],
-               writeDir: String, maxRecordsPerFile: Option[Long],
-               advisoryBytes: Long, maxBytes: Long, maxRows: Long,
-               conf: Configuration): Boolean = {
-    if (!eligibleTypes(schema)) return false
-    if (rows.length > maxRows) return false
-    val dts = schema.fields.map(_.dataType)
-    if (rows.iterator.map(rowBytes(_, dts)).sum > maxBytes) return false
-    val nData = schema.fields.length
-    // group by rendered partition path; any unrenderable value aborts
-    val grouped = scala.collection.mutable.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[Row]]()
-    rows.foreach { r =>
-      val toks = partDirNames.indices.map { k =>
-        partToken(r.get(nData + k)) match {
-          case Some(t) => s"${partDirNames(k)}=$t"
-          case None => return false
-        }
-      }
-      grouped.getOrElseUpdate(toks.mkString("/"), scala.collection.mutable.ArrayBuffer[Row]()) += r
+  def tryWrite(spark: SparkSession, df: DataFrame, nData: Int, writeDir: String,
+               maxRecordsPerFile: Option[Long], advisoryBytes: Long): Boolean = {
+    if (!isLocalPlan(df.queryExecution.optimizedPlan)) return false
+    // a bounded probe, never a full collect: a local plan may still expand
+    // (a join or generator over local leaves) far past the caps, and one
+    // row over the row cap already means the job path
+    val probe = df.limit(MaxRows + 1).queryExecution
+    val rows = SQLExecution.withNewExecutionId(probe, Some("collect"))(
+      probe.executedPlan.executeCollect())
+    if (rows.length > MaxRows) return false
+    val fields = df.schema.fields
+    val dataSchema = StructType(fields.take(nData))
+    val toData = UnsafeProjection.create(dataSchema)
+    val data: Array[UnsafeRow] = rows.map(r => toData(r).copy())
+    if (data.iterator.map(_.getSizeInBytes.toLong).sum > MaxBytes) return false
+
+    // Spark's dynamic-partition directory rule (FileFormatDataWriter): each
+    // value cast to a string in the session zone, then Hive-escaped, with
+    // null and "" both in the default partition
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val partValues = (nData until fields.length).map { i =>
+      fields(i).name -> Cast(BoundReference(i, fields(i).dataType, nullable = true), StringType, tz)
     }
-    val msg = messageTypeOf(schema)
-    val writeConf = new Configuration(conf)
-    GroupWriteSupport.setSchema(msg, writeConf)
-    val factory = new SimpleGroupFactory(msg)
+    val byDir = rows.indices.groupBy { j =>
+      partValues.map { case (name, v) =>
+        ExternalCatalogUtils.getPartitionPathString(name, Option(v.eval(rows(j))).map(_.toString).orNull)
+      }.mkString("/")
+    }
+
+    // The writer's filesystem is the raw local one: Hadoop's checksum layer
+    // costs ~10x per small file (measured 10.7 vs 1.0 ms/file) writing .crc
+    // sidecars every reader and listing filter ignores (dot-prefixed).
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set("fs.file.impl", classOf[RawLocalFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val job = Job.getInstance(conf)
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
     val maxRecs = maxRecordsPerFile.filter(_ > 0).getOrElse(Long.MaxValue)
-    grouped.foreach { case (rel, rs) =>
+    byDir.foreach { case (rel, js) =>
       val dir = if (rel.isEmpty) writeDir else s"$writeDir/$rel"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
       // greedy size-bounded chunks: ≥1 row each, cut at either contract
-      val chunks = scala.collection.mutable.ArrayBuffer[Seq[Row]]()
-      var cur = scala.collection.mutable.ArrayBuffer[Row]()
-      var curBytes = 0L
-      rs.foreach { r =>
-        val b = rowBytes(r, dts)
-        if (cur.nonEmpty && (curBytes + b > advisoryBytes || cur.length >= maxRecs)) {
-          chunks += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer[Row](); curBytes = 0L
+      val chunks = ArrayBuffer(ArrayBuffer[UnsafeRow]())
+      var chunkBytes = 0L
+      js.foreach { j =>
+        val r = data(j)
+        if (chunks.last.nonEmpty &&
+            (chunkBytes + r.getSizeInBytes > advisoryBytes || chunks.last.length >= maxRecs)) {
+          chunks += ArrayBuffer[UnsafeRow](); chunkBytes = 0L
         }
-        cur += r; curBytes += b
+        chunks.last += r; chunkBytes += r.getSizeInBytes
       }
-      if (cur.nonEmpty) chunks += cur.toSeq
       chunks.zipWithIndex.foreach { case (chunk, ci) =>
-        // NIO output, not a Hadoop Path: this writer only ever targets the
-        // driver's local filesystem (the method already creates `dir` via
-        // java.nio above), and Hadoop's ChecksumFileSystem layer costs
-        // ~10x per small file (measured 10.7 vs 1.0 ms/file) writing .crc
-        // sidecars every reader and listing filter ignores (dot-prefixed).
-        // The parquet bytes come from the same parquet-mr column writers
-        // either way — DriverWriteParitySpec pins the file-level identity.
-        val file = new org.apache.parquet.io.LocalOutputFile(
-          java.nio.file.Paths.get(
-            s"$dir/part-${"%05d".format(ci)}-${java.util.UUID.randomUUID()}.parquet"))
-        val writer = ExampleParquetWriter.builder(file)
-          .withConf(writeConf)
-          .withType(msg)
-          .withCompressionCodec(CompressionCodecName.SNAPPY)
-          .build()
-        try {
-          chunk.foreach { r =>
-            val g = factory.newGroup()
-            var i = 0
-            while (i < nData) {
-              val v = r.get(i)
-              if (v != null) schema.fields(i).dataType match {
-                case ByteType => g.add(i, v.asInstanceOf[Byte].toInt)
-                case ShortType => g.add(i, v.asInstanceOf[Short].toInt)
-                case IntegerType => g.add(i, v.asInstanceOf[Int])
-                case LongType => g.add(i, v.asInstanceOf[Long])
-                case FloatType => g.add(i, v.asInstanceOf[Float])
-                case DoubleType => g.add(i, v.asInstanceOf[Double])
-                case BooleanType => g.add(i, v.asInstanceOf[Boolean])
-                case StringType => g.add(i, v.asInstanceOf[String])
-                case BinaryType =>
-                  g.add(i, Binary.fromConstantByteArray(v.asInstanceOf[Array[Byte]]))
-                case other => sys.error(s"DriverParquet: ineligible type $other")
-              }
-              i += 1
-            }
-            writer.write(g)
-          }
-        } finally writer.close()
+        val path = s"$dir/part-${"%05d".format(ci)}-${java.util.UUID.randomUUID()}" +
+          factory.getFileExtension(ctx)
+        val writer = factory.newInstance(path, dataSchema, ctx)
+        try chunk.foreach(writer.write) finally writer.close()
       }
     }
     true

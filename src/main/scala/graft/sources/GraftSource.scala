@@ -50,9 +50,16 @@ class GraftSource extends TableProvider with CreatableRelationProvider
       case _ => sys.error(s"graft table ${options.get("table")} does not exist")
     }
 
+  // Spark's getTableFromProvider calls inferSchema and then getTable with the
+  // same options on this instance: load each table (one metadata read) once
+  private val loaded = new java.util.concurrent.ConcurrentHashMap[Map[String, String], GraftSparkTable]()
+
   override def getTable(schema: StructType, partitioning: Array[VTransform],
                         properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
+    val key = opts.asScala.toMap
+    val memo = loaded.get(key)
+    if (memo != null) return memo
     val cat = new GraftCatalog(required(opts, "warehouse"))
     val tableName = required(opts, "table")
     if (!cat.tableExists(tableName)) {
@@ -74,7 +81,9 @@ class GraftSource extends TableProvider with CreatableRelationProvider
         .orElse(Option(opts.get("asOfTimestampMs")).map(ts => TimeTravel.AsOf(ts.toLong)))
         .orElse(Option(opts.get("ref")).map(TimeTravel.AtRef))
         .getOrElse(TimeTravel.None)
-    new GraftSparkTable(cat.loadTable(tableName), travel)
+    val t = new GraftSparkTable(cat.loadTable(tableName), travel)
+    loaded.put(key, t)
+    t
   }
 
   override def createRelation(ctx: SQLContext, mode: SaveMode,

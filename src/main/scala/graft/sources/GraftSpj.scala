@@ -62,20 +62,33 @@ object GraftSpj {
   def readerFactory(dataSchema: StructType, pushed: Array[Filter],
                     required: StructType): PartitionReaderFactory = {
     val spark = SparkSession.active
-    val strip = (s: StructType) =>
-      StructType(s.fields.map(_.copy(metadata = Metadata.empty)))
-    val fmt = new ParquetFileFormat()
-    val columnar = fmt.supportBatch(spark, strip(required))
-    val readFunc = fmt.buildReaderWithPartitionValues(
+    val columnar = new ParquetFileFormat().supportBatch(spark, strip(required))
+    GraftSpjReaderFactory(readFunc(spark, dataSchema, required, pushed.toSeq, columnar), columnar)
+  }
+
+  /** Spark's parquet read function: `required`'s columns of files written
+    * with `dataSchema`, as whole `ColumnarBatch`es behind the row type when
+    * `columnar`, else as rows. Shared by the DSv2 reader factory and the
+    * driver-side bloom build, so both decode exactly like the native scan.
+    */
+  def readFunc(spark: SparkSession, dataSchema: StructType, required: StructType,
+               pushed: Seq[Filter], columnar: Boolean): PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(
       sparkSession = spark,
       dataSchema = strip(dataSchema),
       partitionSchema = new StructType(),
       requiredSchema = strip(required),
-      filters = pushed.toSeq,
+      filters = pushed,
       options = Map(FileFormat.OPTION_RETURNING_BATCH -> columnar.toString),
       hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty))
-    GraftSpjReaderFactory(readFunc, columnar)
-  }
+
+  /** A `[start, start + len)` slice of a `total`-byte parquet file. */
+  def slice(path: String, start: Long, len: Long, total: Long): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
+      start, len, Array.empty, 0L, total, Map.empty)
+
+  private def strip(s: StructType): StructType =
+    StructType(s.fields.map(_.copy(metadata = Metadata.empty)))
 }
 
 /** An input partition that is a plain list of parquet slices
@@ -102,9 +115,7 @@ case class GraftSpjReaderFactory(read: PartitionedFile => Iterator[InternalRow],
 
   private def raw(partition: InputPartition): Iterator[InternalRow] =
     partition.asInstanceOf[GraftFilesPartition].files.iterator.flatMap {
-      case (path, start, len, total) =>
-        read(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
-          start, len, Array.empty, 0L, total, Map.empty))
+      case (path, start, len, total) => read(GraftSpj.slice(path, start, len, total))
     }
 
   // a batch-decoding readFunc hands out ColumnarBatches behind the row type;

@@ -3,6 +3,9 @@ package graft.table
 import graft.format._
 import graft.io.ParquetStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Paths
@@ -13,7 +16,9 @@ import scala.util.chaining._
   *
   * Scale design:
   *   - data files are written by executors via the normal parquet sink
-  *     (whole-stage codegen, vectorized writers);
+  *     (whole-stage codegen, vectorized writers) — except small
+  *     driver-local appends, which the same parquet encoder writes on the
+  *     driver ([[graft.io.DriverParquet]]);
   *   - rows are clustered to their partition with ONE hash shuffle on the
   *     derived partition columns, so each partition value is produced by a
   *     single task -> no small-file explosion (docs/09:129-137). With AQE on,
@@ -32,7 +37,10 @@ object GraftWriter {
   private val PartPrefix = "_gp_"
 
   /** Write `df` under `<root>/data/<uuid>/` partitioned per `spec`; returns
-    * manifest entries for the new files.
+    * manifest entries for the new files. A driver-resident `df` within
+    * [[graft.io.DriverParquet]]'s caps is written on the driver, skipping
+    * the per-append Spark job; anything else, and every clustered write,
+    * runs the Spark write job. Both call Spark's parquet writer.
     */
   def write(
       spark: SparkSession,
@@ -113,40 +121,12 @@ object GraftWriter {
       else withParts
 
     try {
-      // Driver-side write for SMALL DRIVER-LOCAL appends (opt guide
-      // §1.2/§5, the driver-bloom fold's twin): a per-micro-batch append
-      // of a pinned batch frame pays a whole Spark write job — source
-      // task, exchange, parquet task init, commit-protocol renames — for
-      // KBs of data, several times per batch across the crawl loops. When
-      // the plan is provably driver-resident (all leaves LocalRelation)
-      // and types/partition values are in [[graft.io.DriverParquet]]'s
-      // exactly-mirrorable set, the rows are written to parquet on the
-      // driver through the same parquet-mr machinery the executor path
-      // uses (same physical/logical types, layout and footer stats —
-      // DriverWriteParitySpec pins it); everything downstream
-      // (collectDataFiles, stats, blooms) is the unchanged common path.
-      // Bytes/rows cutovers are data-derived confs; production appends
-      // keep the distributed write.
-      val driverMaxBytes = spark.conf
-        .getOption("graft.write.driver-max-bytes").map(_.toLong)
-        .getOrElse(8L * 1024 * 1024)
-      val driverMaxRows = spark.conf.getOption("graft.write.driver-max-rows")
-        .map(_.toLong).getOrElse(100000L)
-      val driverWritten =
-        driverMaxBytes > 0 && clusterBy.isEmpty &&
-        graft.io.DriverParquet.eligibleTypes(schema) &&
-        spec.fields.forall(pf => graft.io.DriverParquet.safeName(pf.name)) &&
-        graft.io.DriverParquet.isLocalPlan(withParts.queryExecution.optimizedPlan) && {
-          // a bounded probe, never a full collect: a local plan may still
-          // expand (a join or generator over local leaves) far past the
-          // caps, and one row over the row cap already means the job path
-          val rows = withParts.limit((driverMaxRows + 1).min(Int.MaxValue).toInt).collect()
-          val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
-          graft.io.DriverParquet.tryWrite(rows, schema, partNames, writeDir,
-            maxRecordsPerFile(meta), advisory, driverMaxBytes, driverMaxRows,
-            spark.sparkContext.hadoopConfiguration)
-        }
+      // everything downstream of either write (collectDataFiles, stats,
+      // blooms) is the common path
+      val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
+      val driverWritten = clusterBy.isEmpty && graft.io.DriverParquet.tryWrite(
+        spark, withParts, schema.fields.length, writeDir, maxRecordsPerFile(meta), advisory)
       if (!driverWritten) {
         var writer = arranged.write.mode("append")
         maxRecordsPerFile(meta).foreach(n => writer = writer.option("maxRecordsPerFile", n))
@@ -271,15 +251,26 @@ object GraftWriter {
     }.seq.pipe(fs => attachBlooms(spark, fs, meta, schema))
   }
 
+  /** Bytes written up to which an append's blooms are built on the driver. */
+  private val BloomDriverMaxBytes = 64L * 1024 * 1024
+
   /** Equality-skipping bloom filters for the columns in `write.bloom-columns`
-    * (see [[graft.io.Bloom]]): ONE extra Spark job over the just-written
-    * files, reading ONLY the bloom columns (column-pruned scan) and reducing
-    * to per-file distinct bit positions — a map-side-combined set bounded by
-    * the bitmap size, never the values themselves. Opt-in by property, so
-    * tables that don't point-look-up pay nothing.
+    * (see [[graft.io.Bloom]]). Small writes — at most `driverMaxBytes` of
+    * files — build them on the driver ([[driverBlooms]]): the per-append
+    * bloom pass was a whole extra Spark job whose fixed cost dwarfs the KBs
+    * it reads on a micro-batch append (opt guide §1.2), and a streaming
+    * state commit paid it per batch. Larger writes run ONE Spark job over
+    * the just-written files, reading ONLY the bloom columns (column-pruned
+    * scan) and reducing to per-file distinct bit positions — a
+    * map-side-combined set bounded by the bitmap size, never the values
+    * themselves. Both sides hash through the same catalyst expressions, so
+    * their bitmaps are bit-identical (BloomDriverParitySpec pins it per
+    * type). Opt-in by property, so tables that don't point-look-up pay
+    * nothing.
     */
-  private def attachBlooms(spark: SparkSession, files: Seq[DataFile],
-                           meta: TableMetadata, schema: StructType): Seq[DataFile] = {
+  private[table] def attachBlooms(spark: SparkSession, files: Seq[DataFile],
+                                  meta: TableMetadata, schema: StructType,
+                                  driverMaxBytes: Long = BloomDriverMaxBytes): Seq[DataFile] = {
     // Instant timestamps hash through the SESSION zone on executors but UTC
     // on the driver probe side (Bloom.hashPair), so blooming them in a
     // non-UTC session would prune unsoundly — fall back to stats-only there.
@@ -296,33 +287,13 @@ object GraftWriter {
     val bits = meta.property(TableProperties.BloomBits, graft.io.Bloom.DefaultBits.toString).toInt
     require(bits >= 64 && bits % 8 == 0, s"${TableProperties.BloomBits}=$bits (need >=64, /8)")
 
-    // Small writes build their blooms ON THE DRIVER (opt guide §1.2: the
-    // per-append bloom pass was a whole extra Spark job whose fixed cost —
-    // plan + schedule + stage — dwarfs the KBs it reads on a micro-batch
-    // append; a streaming state commit paid it per batch). The driver path
-    // reads back just the bloom columns via parquet-hadoop and hashes each
-    // value through [[graft.io.Bloom.hashPair]] — the SAME Cast+XxHash64
-    // catalyst evaluation [[graft.io.Bloom.positionColumns]] codegens on
-    // executors, so the bitmaps are bit-identical by construction
-    // (BloomDriverParitySpec pins it per type). Scale-adaptive, not
-    // core-count-tuned: the cutover is on BYTES WRITTEN (default 64 MB,
-    // `graft.write.bloom-driver-max-bytes`), so production-sized appends
-    // keep the distributed column-pruned pass. Types outside the exact
-    // driver read set (timestamps, decimals, booleans) also fall back.
-    val driverMaxBytes = spark.conf
-      .getOption("graft.write.bloom-driver-max-bytes").map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
-    val driverReadable = cols.forall(_.dataType match {
-      case ByteType | ShortType | IntegerType | LongType |
-           FloatType | DoubleType | StringType => true
-      case _ => false
-    })
-    if (driverReadable && files.map(_.fileSizeBytes).sum <= driverMaxBytes) {
-      val conf = spark.sparkContext.hadoopConfiguration
+    if (files.map(_.fileSizeBytes).sum <= driverMaxBytes) {
+      val read = graft.sources.GraftSpj.readFunc(spark, schema, StructType(cols),
+        Nil, columnar = false)
       import scala.collection.parallel.CollectionConverters._
       return files.par.map { df =>
-        val p = GraftUtil.resolve(meta.location, df.path)
-        val blooms = driverBlooms(p, cols, bits, conf)
+        val blooms = driverBlooms(read, GraftUtil.resolve(meta.location, df.path),
+          df.fileSizeBytes, cols, bits)
         val merged = blooms.foldLeft(df.stats) { case (st, (id, b)) =>
           st.updated(id, st.getOrElse(id, ColStats(None, None, None)).copy(bloom = Some(b)))
         }
@@ -360,69 +331,32 @@ object GraftWriter {
     }
   }
 
-  /** One file's bloom bitmaps, built on the driver: a column-pruned
-    * parquet-hadoop read of exactly the bloom columns, each non-null
-    * value hashed through [[graft.io.Bloom.hashPair]] — the catalyst
-    * Cast+XxHash64 evaluation shared with the executor write path and
-    * the probe side, so driver- and job-built bitmaps cannot diverge.
-    * Callers restrict to the exactly-representable driver read set
-    * (integrals, float/double, string).
+  /** One file's bloom bitmaps, built on the driver: `read` yields the
+    * bloom columns of each row (Spark's parquet read function, column-pruned),
+    * and each non-null value is hashed by [[graft.io.Bloom.hashOf]] bound to
+    * its ordinal — the Cast+XxHash64 evaluation shared with the executor
+    * pass and the probe side, so driver- and job-built bitmaps cannot
+    * diverge.
     */
-  private def driverBlooms(path: String, cols: Seq[StructField], bits: Int,
-      conf: org.apache.hadoop.conf.Configuration): Map[Int, String] = {
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
-    import org.apache.parquet.hadoop.api.ReadSupport
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.hadoop.fs.{Path => HPath}
-    val hp = new HPath(path)
-    // projection: just the bloom columns, from the file's own schema
-    val footerReader = ParquetFileReader.open(HadoopInputFile.fromPath(hp, conf))
-    val fileSchema = try footerReader.getFooter.getFileMetaData.getSchema
-      finally footerReader.close()
-    val wanted = cols.map(_.name).filter(fileSchema.containsField)
-    val projection = new org.apache.parquet.schema.MessageType("graft_bloom",
-      wanted.map(n => fileSchema.getType(Seq(n): _*)): _*)
-    val readConf = new org.apache.hadoop.conf.Configuration(conf)
-    readConf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val positions: Map[String, scala.collection.mutable.BitSet] =
-      wanted.map(_ -> scala.collection.mutable.BitSet.empty).toMap
-    val byName = cols.map(f => f.name -> f).toMap
-    // ONE Cast→XxHash64 evaluator per column for the whole file (r18
-    // ADVICE): hashPair rebuilt the expression tree per VALUE, which
-    // dominates near the bytes cutover; parity with the executor path is
-    // pinned by BloomDriverParitySpec
-    val evaluator: Map[String, Any => Option[(Long, Long)]] =
-      wanted.map(n => n -> graft.io.Bloom.hashPairEvaluator(byName(n).dataType)).toMap
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(), hp).withConf(readConf).build()
-    try {
-      var g = reader.read()
-      while (g != null) {
-        wanted.foreach { n =>
-          if (g.getFieldRepetitionCount(n) > 0) {
-            val raw: Any = byName(n).dataType match {
-              case LongType => g.getLong(n, 0)
-              case IntegerType => g.getInteger(n, 0)
-              case ShortType => g.getInteger(n, 0)
-              case ByteType => g.getInteger(n, 0)
-              case FloatType => g.getFloat(n, 0)
-              case DoubleType => g.getDouble(n, 0)
-              case _ => g.getString(n, 0)
-            }
-            evaluator(n)(raw).foreach {
-              case (h1, h2) =>
-                positions(n) += (h1 % bits).toInt
-                positions(n) += ((h1 + h2) % bits).toInt
-            }
-          }
+  private def driverBlooms(read: PartitionedFile => Iterator[InternalRow], path: String,
+                           size: Long, cols: Seq[StructField], bits: Int): Map[Int, String] = {
+    val hashes = cols.zipWithIndex.map { case (f, i) =>
+      graft.io.Bloom.hashOf(BoundReference(i, f.dataType, nullable = true))
+    }
+    val positions = cols.map(_ => scala.collection.mutable.BitSet.empty)
+    read(graft.sources.GraftSpj.slice(path, 0L, size, size)).foreach { row =>
+      var i = 0
+      while (i < cols.length) {
+        if (!row.isNullAt(i)) {
+          val (h1, h2) = graft.io.Bloom.pairOf(hashes(i).eval(row).asInstanceOf[Long])
+          positions(i) += (h1 % bits).toInt
+          positions(i) += ((h1 + h2) % bits).toInt
         }
-        g = reader.read()
+        i += 1
       }
-    } finally reader.close()
-    wanted.map { n =>
-      GraftSchema.fieldId(byName(n)) -> graft.io.Bloom.encode(positions(n), bits)
+    }
+    cols.zip(positions).map { case (f, ps) =>
+      GraftSchema.fieldId(f) -> graft.io.Bloom.encode(ps, bits)
     }.toMap
   }
 }

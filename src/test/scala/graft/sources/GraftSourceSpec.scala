@@ -91,4 +91,23 @@ class GraftSourceSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(out == Seq(("a", 1L), ("b", 2L), ("c", 1L)))
   }
+
+  test("getTable after inferSchema with the same options returns the same table instance") {
+    val wh = tempWarehouse()
+    mk(base).write.format("graft")
+      .option("warehouse", wh).option("table", "db.memo").save()
+    // Spark's provider protocol: inferSchema on the case-insensitive options,
+    // then getTable on their original-case map, on one provider instance
+    val src = new GraftSource
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      Map("Warehouse" -> wh, "table" -> "db.memo").asJava)
+    val inferred = src.inferSchema(opts)
+    val t = src.getTable(inferred, Array.empty, opts.asCaseSensitiveMap())
+    assert(t.isInstanceOf[GraftSparkTable])
+    assert(src.getTable(inferred, Array.empty, opts.asCaseSensitiveMap()) eq t)
+    // other options (a time-travel read) load their own table
+    val s1 = new GraftCatalog(wh).loadTable("db.memo").meta.currentSnapshotId.get
+    val travel = Map("warehouse" -> wh, "table" -> "db.memo", "snapshotId" -> s1.toString).asJava
+    assert(!(src.getTable(inferred, Array.empty, travel) eq t))
+  }
 }
