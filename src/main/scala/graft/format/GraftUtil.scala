@@ -89,13 +89,12 @@ object GraftUtil {
 
   /** Canonical comparison form for file locations: URI scheme plus duplicate
     * leading slashes collapse to a single "/", so `_metadata.file_path` URIs
-    * ("file:///x") and filesystem paths ("/x") compare equal. The Scala and
-    * Column variants MUST stay in lockstep — the MOR delete pre-filter
-    * (GraftScan.materialize) is sound only because both sides of its
-    * membership test go through this one function.
+    * ("file:///x") and filesystem paths ("/x") compare equal. Both sides of
+    * every file match go through this one function: a position-delete
+    * row's `file_path` against the data file a scan task reads
+    * (`GraftSpjReaderFactory`), and a bloom row's file against its manifest
+    * entry.
     */
   private val FileUriSchemeRe = "^[A-Za-z][A-Za-z0-9+.-]*:/+"
   def normFileLoc(s: String): String = s.replaceFirst(FileUriSchemeRe, "/")
-  def normFileLoc(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.regexp_replace(c, FileUriSchemeRe, "/")
 }

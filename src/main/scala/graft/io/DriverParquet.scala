@@ -3,7 +3,7 @@ package graft.io
 import org.apache.hadoop.fs.RawLocalFileSystem
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -70,8 +70,11 @@ object DriverParquet {
     if (!isLocalPlan(df.queryExecution.optimizedPlan)) return false
     // a bounded probe, never a full collect: a local plan may still expand
     // (a join or generator over local leaves) far past the caps, and one
-    // row over the row cap already means the job path
-    val probe = df.limit(MaxRows + 1).queryExecution
+    // row over the row cap already means the job path. Repartitions cannot
+    // change the row multiset, but a coalesce(n) over local leaves still
+    // plans as a Spark job, so the probe reads the plan without them
+    val unpartitioned = df.queryExecution.analyzed.transformUp { case r: Repartition => r.child }
+    val probe = GraftSqlShim.ofRows(spark, unpartitioned).limit(MaxRows + 1).queryExecution
     val rows = SQLExecution.withNewExecutionId(probe, Some("collect"))(
       probe.executedPlan.executeCollect())
     if (rows.length > MaxRows) return false

@@ -34,9 +34,8 @@ object Extensions
 
   /** Above this many candidate pairs, the pair-verification joins fall
     * back from forced broadcasts to plain (stats-planned, usually shuffled)
-    * joins — the MOR read path's byte-threshold discipline
-    * ([[graft.table.GraftScan.MorBroadcastMaxBytes]]) applied to candidate
-    * sets. Candidate counts grow ~linearly with corpus size (df/bucket caps
+    * joins: a forced broadcast must be bounded by size, never assumed
+    * small. Candidate counts grow ~linearly with corpus size (df/bucket caps
     * bound the per-gram fanout, but the number of grams scales), so at some
     * corpus size a forced broadcast stops fitting the driver/executor
     * budget — and a query that DIES there is worse than one that shuffles.
@@ -1603,11 +1602,11 @@ object Extensions
         "vec_id", "v", 10, 50, "codes")
       // the facts are about the INDEX TABLE's scans — the executed plans
       // also contain the query vector's own (float) scan, filtered out
-      // here by table location
+      // here by table name
       def indexScans(df: DataFrame): List[String] =
         df.queryExecution.executedPlan.toString
           .linesIterator.filter(l =>
-            l.contains("FileScan") && l.contains(t.location)).toList
+            l.contains("graft-dpp") && l.contains(t.name)).toList
       val cs = indexScans(coarseExec)
       val coarseCodesOnly = cs.nonEmpty && cs.forall(l =>
         l.contains("codes:array<int>") && !l.contains("v:array<double>"))
@@ -2089,8 +2088,9 @@ object Extensions
     * before any text bytes are read. Per-batch fetch cost is therefore
     * candidate-sized, not corpus-sized — the shape that survives 100 TB,
     * where the corpus text dwarfs every batch. Each fetch's ScanMetrics
-    * is surfaced through `onFetchMetrics`; the gate REQUIREs
-    * filesScanned < filesTotal on every batch. Reading the corpus
+    * and its nominated ids are surfaced through `onFetch`; the gate
+    * REQUIREs that no batch reads a file the nominated key set excludes.
+    * Reading the corpus
     * (= results) inside the batch is safe under replay: the reject set
     * is pinned BEFORE this batch's results commit, and on a crash-replay
     * the extra already-committed rows are never nominated (their
@@ -2112,7 +2112,7 @@ object Extensions
       schema: org.apache.spark.sql.types.StructType,
       state: graft.table.GraftTable, corpus: graft.table.GraftTable,
       filesPerTrigger: Int = 1,
-      onFetchMetrics: graft.table.ScanMetrics => Unit = _ => (),
+      onFetch: (graft.table.ScanMetrics, DataFrame) => Unit = (_, _) => (),
       onStateScanMetrics: graft.table.ScanMetrics => Unit = _ => ()): Int =
     runMicroBatched(s, stage, schema, filesPerTrigger) { (b, batchId) =>
       neardupAdmitAndAppend(s, state, corpus.toDF(s), b,
@@ -2122,7 +2122,7 @@ object Extensions
         fetchCandidates = Some { cand =>
           val sc = corpus.scanWithRuntimeFilter(
             cand.select("doc_b"), "doc_b", "doc_id")
-          onFetchMetrics(sc.metrics)
+          onFetch(sc.metrics, cand.select("doc_b"))
           sc.toDF(s).select("doc_id", "text")
         },
         onStateScanMetrics = onStateScanMetrics): Unit

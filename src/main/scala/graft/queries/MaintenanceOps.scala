@@ -979,7 +979,7 @@ object MaintenanceOps {
           s"SELECT count(*) AS n_click FROM graft_sql.db.$tbl WHERE event_type = 'click'")
         val metadataOnly = Seq(q1, q2).forall { q =>
           val p = q.queryExecution.executedPlan.toString
-          p.contains("LocalTableScan") && !p.contains("FileScan")
+          p.contains("LocalTableScan") && !p.contains("BatchScan")
         }
         q1.crossJoin(q2).withColumn("metadata_only", lit(metadataOnly))
       },

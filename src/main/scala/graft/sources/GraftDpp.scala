@@ -9,11 +9,14 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, In => SourceIn}
 import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StructType}
 import java.util.OptionalLong
 
-import graft.format.{Canonical, DataFile, GraftSchema, GraftUtil, TableProperties}
+import graft.format.{Canonical, DataFile, GraftSchema, GraftUtil, TableMetadata, TableProperties}
 import graft.table.GraftScan
 
-/** The one DSv2 batch read of a Graft table, for every table shape:
-  * plan-time manifest/file pruning, execution-time runtime filtering for
+/** The one DSv2 batch read of a Graft snapshot, for every table shape and
+  * every caller: catalog SQL, time travel and `format("graft")` reads
+  * through [[GraftSparkTable]], and `GraftTable.toDF`, DML candidate
+  * reads, compaction and the change feed through [[GraftFilesTable]].
+  * Plan-time manifest/file pruning, execution-time runtime filtering for
   * any partition layout, and storage-partitioned joins for bucketed
   * tables. The reference's medallion pattern — a date- or
   * identity-partitioned fact joined to a selective dim
@@ -21,10 +24,10 @@ import graft.table.GraftScan
   * prune the fact read INSIDE the executing plan, which only a scan that
   * stays in the plan can receive.
   *
-  * The scan serves every snapshot whose files can be read verbatim
-  * ([[planEligible]]); the rest (position deletes, files under an older
-  * write schema, no files) fall back to the substituted native plan. Which
-  * columns take runtime filters is a metadata-shape rule with no knob
+  * The reader ([[GraftSpj.readerFactory]]) resolves each file's columns by
+  * field ID under its own write schema and applies merge-on-read position
+  * deletes per task, so no snapshot needs another plan. Which columns take
+  * runtime filters is a metadata-shape rule with no knob
   * ([[runtimePrunable]]): a bare table offers none, so its plans never
   * carry a dynamic-pruning subquery that could not drop a file.
   *
@@ -32,62 +35,47 @@ import graft.table.GraftScan
   * reports `KeyGroupedPartitioning(bucket(n, col))` with one input
   * partition per bucket value, so co-bucketed joins plan without
   * exchanges; every other snapshot range-splits and bin-packs its files
-  * like the native plan. Both layouts share one eligibility rule, one
-  * runtime keep rule, one metrics record and one reader factory.
+  * like Spark's file scan. Both layouts share one runtime keep rule, one
+  * metrics record and one reader factory.
   */
 object GraftDpp {
   /** Does the table carry a plane a runtime key set could prune on — a
     * partition spec, clustering (range-disjoint stats) or bloom columns?
     */
-  def runtimePrunable(tbl: GraftSparkTable): Boolean = {
-    val meta = tbl.graftTable.meta
+  def runtimePrunable(meta: TableMetadata): Boolean =
     meta.defaultSpec.isPartitioned ||
       meta.properties.get(TableProperties.ClusterBy).exists(_.nonEmpty) ||
       meta.properties.get(TableProperties.BloomColumns).exists(_.nonEmpty)
-  }
-
-  /** The planned files must be readable VERBATIM under the scan's OWN
-    * resolved schema (the snapshot's schema for travel, the current schema
-    * otherwise) and carry no position deletes. Mixed partition spec IDs are
-    * fine: specs are metadata-plane only, every data file physically
-    * carries all its columns, and [[graft.table.GraftScan.keepForKeys]]
-    * prunes each file under the spec it was written with.
-    */
-  def planEligible(scan: graft.table.GraftScan): Option[Seq[DataFile]] = {
-    val (files, deletes, _) = scan.plan
-    val ok = deletes.isEmpty && files.nonEmpty &&
-      files.forall(_.schemaId == scan.scanSchemaId)
-    if (ok) Some(files) else None
-  }
 }
 
-/** DSv2 Batch scan over one pinned Graft snapshot with execution-time
-  * runtime filtering. Key-grouped snapshots plan one [[GraftBucketPartition]]
-  * per bucket value (whole files: a bucket group must stay one partition);
-  * otherwise surviving files are range-split by
-  * `spark.sql.files.maxPartitionBytes` into packed [[GraftDppPartition]]s.
-  * Either way each partition decodes columnar through Spark's own
-  * vectorized reader.
+/** DSv2 Batch scan over `files` of one pinned Graft snapshot, with
+  * `deletes` applied as it reads. Key-grouped snapshots (`bucketing`) plan
+  * one [[GraftBucketPartition]] per bucket value (whole files: a bucket
+  * group must stay one partition); otherwise surviving files are
+  * range-split by `spark.sql.files.maxPartitionBytes` into packed
+  * [[GraftDppPartition]]s. Runtime filters are offered only when
+  * `runtimeFiltering`.
   */
 class GraftDppScan(
-    val tbl: GraftSparkTable,
     val native: GraftScan,
     val files: Seq[DataFile],
+    val deletes: Seq[DataFile],
     val pushed: Array[Filter],
-    val required: StructType) extends Scan with Batch
+    val required: StructType,
+    bucketing: Option[GraftSpj.SpjInfo],
+    runtimeFiltering: Boolean) extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics
     with SupportsReportPartitioning {
 
-  /** The bucket layout, when the snapshot is key-grouped. */
-  private val bucketing: Option[GraftSpj.SpjInfo] =
-    GraftSpj.shapeOf(SparkSession.active, tbl, files)
+  private def name: String = native.table.name
+
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def description(): String = bucketing match {
-    case Some(b) => s"graft-spj ${tbl.name()} bucket(${b.numBuckets}, ${b.colName})"
-    case None => s"graft-dpp ${tbl.name()} [${pushed.mkString(", ")}]"
-  }
+  override def description(): String = (bucketing match {
+    case Some(b) => s"graft-spj $name bucket(${b.numBuckets}, ${b.colName})"
+    case None => s"graft-dpp $name [${pushed.mkString(", ")}]"
+  }) + s" ReadSchema: ${required.catalogString}"
 
   /** Files surviving the runtime filter; None until [[filter]] runs. */
   @volatile private var allowed: Option[Seq[DataFile]] = None
@@ -110,7 +98,7 @@ class GraftDppScan(
     * prunes under the snapshot's schema/spec.
     */
   private lazy val prunableCols: Set[String] = {
-    val meta = tbl.graftTable.meta
+    val meta = native.meta
     val byId = native.scanSchema.fields
       .map(f => GraftSchema.fieldId(f) -> f.name).toMap
     // the UNION over the planned files' specs (partition-evolved tables
@@ -133,10 +121,10 @@ class GraftDppScan(
     * against the scan relation's output, so a projected-away column would
     * fail analysis). A join key is always in the read schema, so the
     * medallion fact-dim shapes are always served. None for a bare table
-    * ([[GraftDpp.runtimePrunable]]).
+    * ([[GraftDpp.runtimePrunable]]) or a pinned file list.
     */
   override def filterAttributes(): Array[NamedReference] =
-    if (!GraftDpp.runtimePrunable(tbl)) Array.empty
+    if (!runtimeFiltering) Array.empty
     else required.fields.collect {
       case f if !f.dataType.isInstanceOf[StructType] &&
         !f.dataType.isInstanceOf[ArrayType] &&
@@ -179,7 +167,7 @@ class GraftDppScan(
       }.distinct.mkString(",")
       val partsOf = (fs: Seq[DataFile]) => fs.map(_.partition).distinct.size.toLong
       pendingMetrics.set(graft.table.ScanMetrics(
-        tbl.graftTable.name,
+        name,
         // the scan's PINNED snapshot: a traveled read attributes the prune
         // to the snapshot actually read
         native.snapshot.map(_.snapshotId).getOrElse(-1L),
@@ -227,11 +215,13 @@ class GraftDppScan(
       GraftBucketPartition(
         new GenericInternalRow(Array[Any](key)),
         fs.filter(f => keep.forall(_(f.path))).map(f =>
-          (GraftUtil.resolve(native.meta.location, f.path), 0L, f.fileSizeBytes, f.fileSizeBytes)))
+          GraftSlice(location(f), 0L, f.fileSizeBytes, f.fileSizeBytes, f.schemaId)))
     }.toArray
   }
 
-  /** The native plan's split-and-pack rule (FileSourceScanExec /
+  private def location(f: DataFile): String = GraftUtil.resolve(native.meta.location, f.path)
+
+  /** Spark's file-scan split-and-pack rule (FileSourceScanExec /
     * FilePartition semantics), re-derived for this scan's slice shape:
     * maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
     * totalBytes/defaultParallelism)), big files range-split at it, then
@@ -253,32 +243,30 @@ class GraftDppScan(
     val maxSplit = math.min(maxBytes,
       math.max(openCost, totalBytes / minPartitionNum)).max(1L)
     val slices = read.flatMap { f =>
-      val path = GraftUtil.resolve(native.meta.location, f.path)
+      val path = location(f)
       val n = math.max(1L, (f.fileSizeBytes + maxSplit - 1) / maxSplit)
       (0L until n).map { i =>
         val start = i * maxSplit
-        (path, start, math.min(maxSplit, f.fileSizeBytes - start), f.fileSizeBytes)
+        GraftSlice(path, start, math.min(maxSplit, f.fileSizeBytes - start), f.fileSizeBytes,
+          f.schemaId)
       }
-    }.sortBy(-_._3)
+    }.sortBy(-_.len)
     val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    val cur = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Long)]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[GraftSlice]
     var curSize = 0L
     def close(): Unit = if (cur.nonEmpty) {
       out += GraftDppPartition(cur.toSeq); cur.clear(); curSize = 0L
     }
     slices.foreach { s =>
-      if (curSize + s._3 > maxSplit) close()
-      cur += s; curSize += s._3 + openCost
+      if (curSize + s.len > maxSplit) close()
+      cur += s; curSize += s.len + openCost
     }
     close()
     out.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // the SCAN's resolved schema: a time-traveled read decodes under the
-    // snapshot's schema, which eligibility pinned as every file's write
-    // schema (the current schema for a head read)
-    GraftSpj.readerFactory(native.scanSchema, pushed, required)
+    GraftSpj.readerFactory(native, files, deletes, pushed, required)
 
   /** Post-filter size/rows from the manifests' own accounting — after a
     * runtime prune AQE sees the PRUNED size, so a fact cut to broadcast
@@ -292,7 +280,7 @@ class GraftDppScan(
     private val fs = allowed.getOrElse(files)
     private val bytes = fs.map(_.fileSizeBytes).sum
     override def sizeInBytes(): OptionalLong = OptionalLong.of(
-      if (GraftDpp.runtimePrunable(tbl)) bytes
+      if (runtimeFiltering) bytes
       else (SparkSession.active.sessionState.conf.fileCompressionFactor * bytes /
         native.scanSchema.defaultSize * required.defaultSize).toLong)
     override def numRows(): OptionalLong =
@@ -300,6 +288,6 @@ class GraftDppScan(
   }
 }
 
-/** One range slice of a runtime-filtered scan file. */
-case class GraftDppPartition(files: Seq[(String, Long, Long, Long)])
+/** Packed range slices of the scan's files. */
+case class GraftDppPartition(files: Seq[GraftSlice])
     extends GraftFilesPartition

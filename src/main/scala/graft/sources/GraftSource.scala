@@ -25,8 +25,8 @@ import scala.jdk.CollectionConverters._
   *
   * Reads are DSv2: `getTable` hands Spark the same [[GraftSparkTable]] the
   * catalog serves, pinned by the time-travel options, so `format("graft")`
-  * and catalog SQL share one scan builder, one runtime-filtering scan and
-  * one substitution fallback. Writes stay on `createRelation(mode)`: the
+  * and catalog SQL share one scan builder and one runtime-filtering scan.
+  * Writes stay on `createRelation(mode)`: the
   * table reports only `V1_BATCH_WRITE`, so Spark's writer falls back to
   * this provider's V1 path in every save mode.
   */

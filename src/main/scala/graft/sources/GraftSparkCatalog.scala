@@ -33,17 +33,16 @@ import scala.jdk.CollectionConverters._
   * spark.sql("ALTER TABLE g.db.events ADD COLUMN note STRING")
   * }}}
   *
-  * Read-path design: every read of a snapshot whose files can be read
-  * verbatim — catalog SQL, time travel and `format("graft")` alike — is
-  * served by one DSv2 batch scan, [[GraftDppScan]]: manifest/file pruning
-  * happens driver-side with the pushed filters, each partition decodes
-  * through Spark's own vectorized parquet reader, and the scan stays in the
+  * Read-path design: every read of a snapshot — catalog SQL, time travel
+  * and `format("graft")` alike — is served by one DSv2 batch scan,
+  * [[GraftDppScan]]: manifest/file pruning happens driver-side with the
+  * pushed filters, each file decodes through Spark's own vectorized
+  * parquet reader under its write schema with columns resolved by field
+  * ID, position deletes are applied per task, and the scan stays in the
   * plan so it can take runtime filters and, for bucketed tables, report
-  * storage partitioning. A snapshot that cannot be read verbatim (position
-  * deletes, files under an older write schema, no files) is rewritten by
-  * [[GraftScanSubstitution]] — installed when the catalog or source is
-  * first used in a session — into the native [[graft.table.GraftScan]]
-  * plan, which merges deletes and resolves columns by field id.
+  * storage partitioning. [[GraftSqlRewrites]], installed when the catalog
+  * or source is first used in a session, translates SQL DML and answers
+  * exact global aggregates from metadata.
   */
 class GraftTableCatalog extends TableCatalog with SupportsNamespaces with ProcedureCatalog
     with FunctionCatalog with StagingTableCatalog {
@@ -349,9 +348,9 @@ object TimeTravel {
 }
 
 /** DSv2 Table over a [[GraftTable]], pinned in time: batch read (the DSv2
-  * scan, or the substitution fallback — see [[GraftV2ScanBuilder.build]]),
-  * V1 batch write (append/overwrite), filter-based DELETE, truncate. Both
-  * the catalog and the `format("graft")` source serve this table.
+  * scan over the pinned snapshot), V1 batch write (append/overwrite),
+  * filter-based DELETE, truncate. Both the catalog and the
+  * `format("graft")` source serve this table.
   */
 class GraftSparkTable(val graftTable: GraftTable, val travel: TimeTravel) extends Table
     with SupportsRead with SupportsWrite with SupportsDelete {
@@ -406,8 +405,18 @@ class GraftSparkTable(val graftTable: GraftTable, val travel: TimeTravel) extend
     case TimeTravel.None => graftTable.scan(preds: _*)
   }
 
+  /** ONE pinned native scan per build plans the snapshot: its files and
+    * deletes feed the DSv2 scan, with runtime filters for tables that
+    * carry a prunable plane and key-grouped partitions for bucketed ones.
+    */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftV2ScanBuilder(this)
+    new GraftScanBuilder(schema(), (preds, accepted, required) => {
+      val native = nativeScan(preds) // cheap: planning is lazy inside
+      val (files, deletes, _) = native.plan
+      new GraftDppScan(native, files, deletes, accepted, required,
+        GraftSpj.shapeOf(SparkSession.active, this, files),
+        GraftDpp.runtimePrunable(native.meta))
+    })
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {
@@ -432,8 +441,13 @@ class GraftSparkTable(val graftTable: GraftTable, val travel: TimeTravel) extend
       filters.flatMap(f => CatalystPredicates.toPredicate(f)).toSeq)
 }
 
-class GraftV2ScanBuilder(val tbl: GraftSparkTable) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
+/** Pushed filters and pruned columns of one Graft read; `scan` builds the
+  * DSv2 scan from the translated predicates, the accepted filters and the
+  * pruned read schema.
+  */
+class GraftScanBuilder(schema: StructType,
+                       scan: (Seq[Predicate], Array[Filter], StructType) => Scan)
+    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
   private var preds: Seq[Predicate] = Nil
   private var accepted: Array[Filter] = Array.empty
   private var required: Option[StructType] = None
@@ -442,44 +456,54 @@ class GraftV2ScanBuilder(val tbl: GraftSparkTable) extends ScanBuilder
     accepted = filters.filter(f => CatalystPredicates.toPredicate(f).isDefined)
     preds = accepted.flatMap(f => CatalystPredicates.toPredicate(f)).toSeq
     // every filter stays post-scan (Spark re-applies them all): the pushed
-    // predicates only drive Graft's driver-side manifest/file pruning, so
-    // soundness never depends on the translation.
+    // predicates only drive Graft's driver-side manifest/file pruning and
+    // row-group skipping, so soundness never depends on the translation.
     filters
   }
   override def pushedFilters(): Array[Filter] = accepted
 
-  // Column pruning is consumed by the DSv2 batch scan; the substituted
-  // native plan does its own, so GraftV2Scan keeps reporting the full
-  // schema (Spark projects above it either way).
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = Some(requiredSchema)
 
-  /** One route for every table shape: the runtime-filtering batch scan
-    * ([[GraftDppScan]]) whenever the pinned snapshot's files can be read
-    * verbatim ([[GraftDpp.planEligible]]); otherwise a [[GraftV2Scan]]
-    * whose relation the substitution rule replaces with the native plan.
-    * ONE pinned native scan serves either: the fallback carries it, so the
-    * rule reuses the already-planned snapshot instead of planning (and
-    * QUERY_HISTORY-recording) a second one.
-    */
-  override def build(): Scan = {
-    val native = tbl.nativeScan(preds) // cheap: planning is lazy inside
-    GraftDpp.planEligible(native) match {
-      case Some(files) =>
-        new GraftDppScan(tbl, native, files, accepted, required.getOrElse(tbl.schema()))
-      case None => new GraftV2Scan(tbl, native)
-    }
-  }
+  override def build(): Scan = scan(preds, accepted, required.getOrElse(schema))
 }
 
-/** A snapshot the DSv2 scan cannot read verbatim. Never executed:
-  * [[GraftScanSubstitution]] replaces its relation with the native plan of
-  * the ScanBuilder's pinned scan, `native`.
+/** A read of an explicit file list of one pinned [[GraftScan]] — the
+  * relation behind `GraftScan.toDF` and `materialize` (DML candidate reads,
+  * compaction, the change feed). The files are already planned, so pushed
+  * filters only reach the parquet reader, and no runtime filter is
+  * offered. With `withFileMeta` the rows carry `_gf_file` (the data file's
+  * URI, as `_metadata.file_path` gives it) and `_gf_pos` (the row's
+  * position in that file), which MOR deletes are written from.
   */
-class GraftV2Scan(val tbl: GraftSparkTable, val native: GraftScan) extends Scan {
-  override def readSchema(): StructType = tbl.schema()
-  override def description(): String =
-    s"graft ${tbl.name()} [${native.predicates.mkString(", ")}]"
+class GraftFilesTable(native: GraftScan, files: Seq[graft.format.DataFile],
+                      deletes: Seq[graft.format.DataFile], withFileMeta: Boolean)
+    extends Table with SupportsRead {
+  override def name(): String = native.table.name
+  // column IDs stay table metadata: the frame's top-level fields carry none
+  override def schema(): StructType = {
+    val cols = StructType(native.scanSchema.fields.map(_.copy(
+      metadata = org.apache.spark.sql.types.Metadata.empty)))
+    if (!withFileMeta) cols
+    else cols.add(GraftSpj.FileCol, org.apache.spark.sql.types.StringType)
+      .add(GraftSpj.PosCol, org.apache.spark.sql.types.LongType)
+  }
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftScanBuilder(schema(), (_, accepted, required) =>
+      new GraftDppScan(native, files, deletes, accepted, required,
+        bucketing = None, runtimeFiltering = false))
+
+  // identity by content, so Spark's cache manager recognizes a second read
+  // of the same files (ResultCache serves repeated reads through it)
+  private lazy val key = (native.meta.location, native.scanSchema, files.map(_.path),
+    deletes.map(_.path), withFileMeta)
+  override def equals(o: Any): Boolean = o match {
+    case t: GraftFilesTable => t.key == key
+    case _ => false
+  }
+  override def hashCode(): Int = key.hashCode()
 }
 
 /** Spark → Graft predicate translation, for both shapes Spark hands a
@@ -558,14 +582,9 @@ object CatalystPredicates {
 }
 
 /** Optimizer rule for Graft relations: SQL DML becomes native commands,
-  * exact global aggregates collapse to metadata, and a [[GraftV2Scan]] — a
-  * snapshot the DSv2 scan cannot read verbatim — is replaced by the native
-  * GraftScan logical plan (driver-side manifest/file pruning with the
-  * pushed predicates, deletes merged, then Spark's own vectorized parquet
-  * scan + codegen). Output attributes are aliased back to the original
-  * relation's exprIds so upstream references stay bound.
+  * and exact global aggregates collapse to metadata.
   */
-case class GraftScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] {
+case class GraftSqlRewrites(spark: SparkSession) extends Rule[LogicalPlan] {
 
   import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, MergeIntoTable, UpdateTable}
 
@@ -584,10 +603,6 @@ case class GraftScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] 
     case _ => plan.transformWithSubqueries {
       case agg: Aggregate if agg.groupingExpressions.isEmpty =>
         tryMetadataAggregate(agg).getOrElse(agg)
-      // the DSv2 batch scan stays v2; only the non-verbatim fallback is
-      // rewritten to the native plan
-      case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[GraftV2Scan] =>
-        substitute(r.output, r.scan.asInstanceOf[GraftV2Scan].native)
     }
   }
 
@@ -596,7 +611,7 @@ case class GraftScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] 
     * column-pruning Project) answered from manifest record counts and file
     * stats via [[graft.table.GraftScan.metadataCount]] — the whole subtree
     * collapses to a one-row LocalRelation, zero data-file I/O. Bails (and
-    * the normal scan substitution proceeds) whenever any part is not
+    * the DSv2 scan reads the data) whenever any part is not
     * provably exact: residual filters, deletes, distinct/filtered
     * aggregates, or non-identity-partition predicate columns.
     */
@@ -661,35 +676,23 @@ case class GraftScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] 
     Some(LocalRelation(agg.aggregateExpressions.map(_.toAttribute),
       Seq(InternalRow.fromSeq(values.map(_.get)))))
   }
-
-  private def substitute(out: Seq[AttributeReference], scan: GraftScan): LogicalPlan = {
-    // independently optimized so the native subplan (casts, unions, MOR
-    // anti-join) gets the full standard batch treatment even though the
-    // outer plan is already past those batches
-    val inner = scan.toDF(spark).queryExecution.optimizedPlan
-    val byName = inner.output.map(a => a.name -> a).toMap
-    Project(out.map { a =>
-      Alias(byName(a.name), a.name)(exprId = a.exprId, qualifier = a.qualifier)
-    }, inner)
-  }
 }
 
-/** Installs [[GraftScanSubstitution]] into a session at runtime (idempotent).
+/** Installs [[GraftSqlRewrites]] into a session at runtime (idempotent).
   * Invoked by [[GraftTableCatalog.initialize]] and [[GraftSource.getTable]],
   * both of which run while the reading session analyzes its first Graft
   * relation, so every session that can name a Graft table also has the
-  * rule that SQL DML, metadata aggregates and the non-verbatim fallback
-  * ([[GraftV2Scan]], which cannot execute on its own) depend on.
+  * rule that SQL DML and metadata aggregates depend on.
   */
 object GraftExtensions {
   def install(spark: SparkSession): Unit = synchronized {
     val already = spark.experimental.extraOptimizations.exists {
-      case GraftScanSubstitution(s) => s eq spark
+      case GraftSqlRewrites(s) => s eq spark
       case _ => false
     }
     if (!already)
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GraftScanSubstitution(spark)
+        spark.experimental.extraOptimizations :+ GraftSqlRewrites(spark)
     // SQL names for the pipeline functions ride along with the catalog:
     // any session that can see graft tables can also call graft_minhash(...)
     graft.functions.SqlFunctions.install(spark)

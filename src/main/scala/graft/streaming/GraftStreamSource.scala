@@ -75,7 +75,7 @@ object GraftStreamSource {
     // BOTH sides resolve to the TO side's schema: with per-side schema
     // resolution an evolution between the snapshots would give the two
     // scans different column counts and exceptAll would refuse. ID-based
-    // per-file resolution (readResolved) makes this exact across
+    // per-file resolution (GraftSpj.layoutOf) makes this exact across
     // add/drop/rename — old files project missing columns as NULL.
     val toSid = toSnapshotId.orElse(m.currentSnapshotId)
     val toSchemaId =

@@ -164,7 +164,7 @@ trait GraftDml { self: GraftTable =>
 
   // -------------------------------------------------------------------
   // Merge-on-read DELETE (docs/08:104-116): write position-delete files
-  // instead of rewriting data; readers anti-join them (GraftScan).
+  // instead of rewriting data; each scan task skips the deleted positions.
   // -------------------------------------------------------------------
 
   /** Position-delete file schema (docs/08:171-177). Fields carry reserved

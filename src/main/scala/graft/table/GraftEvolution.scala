@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 /** Metadata-only schema evolution (reference docs/06-schema-evolution.md:9-51):
   * every change creates a NEW schema version in the metadata file; no data file
   * is touched. Columns are tracked by stable IDs (docs/06:55-73): rename keeps
-  * the ID, drop retires it forever, and the read path (GraftScan.readResolved)
+  * the ID, drop retires it forever, and the read path (GraftSpj.layoutOf)
   * maps each file's write-schema to the current schema by ID so files written
   * under schema v1 stay readable under v4 (docs/06:75-90).
   */

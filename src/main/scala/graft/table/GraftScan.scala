@@ -34,13 +34,6 @@ case class ScanMetrics(
     rowsInScannedFiles: Long,
     timestampMs: Long)
 
-object GraftScan {
-  /** Above this manifest-recorded delete-file byte total, MOR reads fall back
-    * from a broadcast anti-join to a shuffled one (see materialize).
-    */
-  val MorBroadcastMaxBytes: Long = 64L * 1024 * 1024
-}
-
 /** In-process QUERY_HISTORY (docs/09:180-194): the newest [[Capacity]]
   * scans, oldest dropped first, so a long-lived session holds a bounded
   * ledger.
@@ -806,138 +799,14 @@ class GraftScan(
     predicates.foldLeft(df)((d, p) => d.filter(p.toColumn))
   }
 
-  /** Materialize an explicit file set of this snapshot (resolved to the
-    * current schema, position deletes applied) — the COW/MOR rewrite entry
-    * point used by DML, which needs candidate files only.
+  /** Read an explicit file set of this snapshot — resolved by field ID to
+    * this scan's schema, position deletes applied — through the one DSv2
+    * scan ([[graft.sources.GraftFilesTable]]). The entry point of DML
+    * candidate reads, compaction and the change feed.
     */
   private[graft] def materialize(spark: SparkSession, files: Seq[DataFile],
-                                 deletes: Seq[DataFile], withFileMeta: Boolean): DataFrame = {
-    val current = scanSchema
-    val df0 = readResolved(spark, files, withFileMeta || deletes.nonEmpty)
-    val merged =
-      if (deletes.nonEmpty) {
-        // MOR read merge: data rows minus position deletes (docs/08:104-116).
-        val delPaths = deletes.map(d => GraftUtil.resolve(meta.location, d.path))
-        val delAll = spark.read.parquet(delPaths: _*)
-          .select(col("file_path").as("_gd_file"), col("pos").as("_gd_pos"))
-        // Prune delete rows to THIS scan's data files: deletes accumulate
-        // table-wide, but only rows keyed by a candidate file's path can
-        // match the anti-join. Both sides of the membership test go through
-        // GraftUtil.normFileLoc (one shared scheme-stripping function), so
-        // the pre-filter cannot disagree with itself; the anti-join below
-        // stays representation-exact (raw recorded URIs on both sides).
-        // Skipped for very large file lists, where the InSet literal itself
-        // would bloat the plan.
-        val delDF =
-          if (files.size <= 10000) {
-            val cand = files.map(f =>
-              GraftUtil.normFileLoc(GraftUtil.resolve(meta.location, f.path)))
-            delAll.filter(GraftUtil.normFileLoc(col("_gd_file")).isin(cand: _*))
-          } else delAll
-        // The <10% delete-ratio health target (docs/10:123) is advisory, not
-        // a guarantee: broadcast only when the manifest-recorded delete bytes
-        // are small; otherwise let Spark shuffle the anti-join — 10% of a
-        // 100 TB table is not a broadcast.
-        val delBytes = deletes.map(_.fileSizeBytes).sum
-        val maxBroadcast = spark.conf.getOption("graft.mor.broadcast-max-bytes")
-          .map(_.toLong).getOrElse(GraftScan.MorBroadcastMaxBytes)
-        val delSide = if (delBytes <= maxBroadcast) broadcast(delDF) else delDF
-        df0.join(delSide,
-          df0("_gf_file") === delSide("_gd_file") && df0("_gf_pos") === delSide("_gd_pos"),
-          "left_anti")
-      } else df0
-    if (withFileMeta)
-      merged.select((current.fieldNames.map(col) :+ col("_gf_file") :+ col("_gf_pos")): _*)
-    else merged.select(current.fieldNames.map(col): _*)
-  }
-
-  /** Read files grouped by write-schema, resolving each group to the current
-    * schema by column ID (docs/06-schema-evolution.md:75-90): renamed columns
-    * are re-aliased, widened types cast, added columns appear as NULL in
-    * files written before the add. This is the custom read-path resolution
-    * Spark's by-name parquet merging cannot provide.
-    */
-  private def readResolved(spark: SparkSession, files: Seq[DataFile],
-                           fileMeta: Boolean): DataFrame = {
-    val current = scanSchema
-    val outSchema =
-      if (fileMeta) StructType(current.fields :+
-        StructField("_gf_file", StringType) :+ StructField("_gf_pos", LongType))
-      else current
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-
-    val groups = files.groupBy(_.schemaId)
-    val dfs = groups.toSeq.sortBy(_._1).map { case (schemaId, fs) =>
-      val writeSchema = meta.schemas.getOrElse(schemaId, current)
-      val paths = fs.map(f => GraftUtil.resolve(meta.location, f.path))
-      val raw = spark.read.schema(writeSchema).parquet(paths: _*)
-      val byId = GraftSchema.idToField(writeSchema)
-      val cols = current.fields.map { cur =>
-        val id = GraftSchema.fieldId(cur)
-        byId.get(id) match {
-          case Some(w) => resolveValue(w.dataType, cur.dataType, Cols.q(w.name)).as(cur.name)
-          case None => lit(null).cast(cur.dataType).as(cur.name) // added after this file
-        }
-      }
-      val metaCols =
-        if (fileMeta) Seq(col("_metadata.file_path").as("_gf_file"),
-          col("_metadata.row_index").as("_gf_pos"))
-        else Nil
-      raw.select(cols ++ metaCols: _*)
-    }
-    dfs.reduce(_.unionByName(_))
-  }
-
-  /** Column-ID resolution INSIDE nested types (docs/06:114-118): a struct
-    * subfield renamed/dropped/widened/added since this file was written is
-    * re-projected by ID, recursing through array elements and map values.
-    * When the nested shape is unchanged this collapses to a plain cast, so
-    * un-evolved columns keep parquet nested-field pruning and codegen.
-    */
-  private def resolveValue(write: DataType, cur: DataType, src: Column): Column =
-    if (!needsRebuild(write, cur)) src.cast(cur)
-    else (write, cur) match {
-      case (w: StructType, c: StructType) =>
-        val byId = GraftSchema.idToField(w)
-        val children = c.fields.map { cf =>
-          byId.get(GraftSchema.fieldId(cf)) match {
-            case Some(wf) => resolveValue(wf.dataType, cf.dataType, src.getField(wf.name)).as(cf.name)
-            case None => lit(null).cast(cf.dataType).as(cf.name)
-          }
-        }
-        // struct() of null children is a non-null row; a null parent struct
-        // must stay null through resolution.
-        when(src.isNotNull, struct(children: _*)).otherwise(lit(null).cast(c))
-      case (w: ArrayType, c: ArrayType) =>
-        transform(src, x => resolveValue(w.elementType, c.elementType, x))
-      case (w: MapType, c: MapType) =>
-        transform_values(src.cast(MapType(c.keyType, w.valueType, w.valueContainsNull)),
-          (_, v) => resolveValue(w.valueType, c.valueType, v))
-      case _ => src.cast(cur)
-    }
-
-  /** True when positional cast is NOT enough: some nested struct level has a
-    * different ID list (rename keeps IDs but changes names — also a rebuild,
-    * since parquet wrote the old names). Fields without IDs (pre-nested-ID
-    * metadata) fall back to cast, preserving old tables' behavior.
-    */
-  private def needsRebuild(write: DataType, cur: DataType): Boolean = {
-    def idOf(f: StructField): Option[Int] =
-      if (f.metadata.contains(GraftSchema.IdKey)) Some(GraftSchema.fieldId(f)) else None
-    (write, cur) match {
-      case (w: StructType, c: StructType) =>
-        val wIds = w.fields.map(idOf).toSeq
-        val cIds = c.fields.map(idOf).toSeq
-        // Equal ID lists mean positional correspondence: cast covers renames
-        // (it adopts target names) and leaf widening. Only a changed ID list
-        // (add/drop/reorder) or a deeper rebuild forces re-projection.
-        if (wIds.contains(None) || cIds.contains(None)) false
-        else wIds != cIds ||
-          w.fields.zip(c.fields).exists { case (wf, cf) => needsRebuild(wf.dataType, cf.dataType) }
-      case (w: ArrayType, c: ArrayType) => needsRebuild(w.elementType, c.elementType)
-      case (w: MapType, c: MapType) => needsRebuild(w.valueType, c.valueType)
-      case _ => false
-    }
-  }
+                                 deletes: Seq[DataFile], withFileMeta: Boolean): DataFrame =
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new graft.sources.GraftFilesTable(this, files, deletes, withFileMeta), None, None))
 }

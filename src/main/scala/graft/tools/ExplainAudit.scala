@@ -42,14 +42,15 @@ object ExplainAudit {
         .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
     }
 
-    // Graft table scan: predicate must still push into the parquet reader
-    // AFTER driver-side file pruning + column-ID projection.
+    // Graft table scan (`toDF`): the same DSv2 scan over the pinned file
+    // list; the predicate must still push into the parquet reader AFTER
+    // driver-side file pruning, and the read schema stays pruned.
     val cat = new GraftCatalog(java.nio.file.Files.createTempDirectory("graft-audit").toString)
     val events = graft.queries.Tables.events(spark, d)
     val t = cat.createTable("db.events", events.schema,
       partitionBy = Seq("ts" -> Transform.Day))
     t.append(spark, events)
-    audit("graft scan w/ predicate (expect PushedFilters on surviving files)") {
+    audit("graft scan w/ predicate (expect graft-dpp BatchScan, pushed EqualTo(event_type) + pruned ReadSchema on surviving files)") {
       t.toDF(spark, Predicate.Eq("event_type", "click"))
         .select("event_id", "event_type", "value")
     }

@@ -1733,7 +1733,7 @@ object ScaleSmoke {
         val fetches = scala.collection.mutable.Buffer.empty[(Long, Long)]
         val (batches, secs) = timed(Extensions.streamIncrementalNeardup(
           spark, stage, docs.schema, state, corpus,
-          onFetchMetrics = sm => fetches += ((sm.filesScanned, sm.filesTotal))))
+          onFetch = (sm, _) => fetches += ((sm.filesScanned, sm.filesTotal))))
         // sequential stateless oracle: slice k admits what has no
         // verified (band-collision, jaccard >= 0.5) partner among the
         // admissions of slices < k — within-slice docs never nominate

@@ -117,8 +117,8 @@ class DppSpec extends SparkSpec {
 
   /** The native-path control leg: runs `sqlText` with `table` (as written
     * in the SQL, `<catalog>.db.<name>`) read through the native
-    * `GraftTable.scan` / `atSnapshot` API in a temp view — Spark's own
-    * parquet scan over the pruned file list, never the DSv2 scan.
+    * `GraftTable.scan` / `atSnapshot` API in a temp view — a read of the
+    * pruned file list that takes no runtime filter.
     */
   private def nativeRows(sqlText: String, table: String,
                          snapshot: Option[Long] = None): Seq[org.apache.spark.sql.Row] = {
@@ -250,7 +250,7 @@ class DppSpec extends SparkSpec {
     val without =
       try spark.sql(q).collect()
       finally spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-    val native = nativeRows(q, "dppg.db.factm") // substituted path, no DPP scan at all
+    val native = nativeRows(q, "dppg.db.factm") // pinned file list, no runtime filter
     assert(withDpp.toSeq == without.toSeq)
     assert(withDpp.toSeq == native)
   }
@@ -380,7 +380,7 @@ class DppSpec extends SparkSpec {
       s"AS-OF runtime filter must prune files: ${m.filesScanned}/${m.filesTotal}")
     assert(m.partitionsScanned <= 3,
       s"Q2 dates land in 3 months: ${m.partitionsScanned}/${m.partitionsTotal}")
-    // triple equality: DPP route == DPP-subquery off == native substitution
+    // triple equality: DPP route == DPP-subquery off == native file-list read
     spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
     val noSubquery =
       try spark.sql(sql).collect()
@@ -391,13 +391,12 @@ class DppSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM dppt.db.factt WHERE v < 0").head().getLong(0) == 1L)
   }
 
-  test("MOR position deletes route the substitution path (the documented DPP fallback)") {
-    // The one structural fallback left on the default DSv2 route (r18):
-    // planEligible refuses scans with position deletes because the DPP
-    // reader decodes files verbatim — applying deletes belongs to the
-    // substitution path's merge-read anti-join. This leg makes the
-    // fallback DELIBERATE: a MOR star join must (a) not serve graft-dpp,
-    // (b) return delete-correct rows.
+  test("MOR position deletes: the star join serves graft-dpp and prunes at runtime") {
+    // The DSv2 reader applies position deletes per task, so a MOR snapshot
+    // takes the same runtime-filtered scan as any other: the star join must
+    // (a) serve graft-dpp, (b) read fewer files than it plans, (c) return
+    // delete-correct rows, and (d) run no more Spark jobs than the
+    // broadcast anti-join read it replaced.
     dppGeneralReady
     spark.sql(
       "CREATE TABLE dppg.db.factmor (d DATE, v DOUBLE) PARTITIONED BY (months(d)) " +
@@ -416,19 +415,46 @@ class DppSpec extends SparkSpec {
       """SELECT count(*) AS n
         |FROM dppg.db.factmor f JOIN dppg_dates d ON f.d = d.d_date
         |WHERE d.d_quarter = '2023Q2'""".stripMargin
+    graft.table.QueryHistory.clear()
     // ids 0..99 delete one copy of each of the first 100 dates; Q2 loses
     // Apr 1-10 once each: 1820 - 10
     val q = spark.sql(sql)
     assert(q.collect().head.getLong(0) == 1810L,
       "the MOR read must apply position deletes")
-    assert(!allPlans(q.queryExecution.executedPlan)
+    assert(allPlans(q.queryExecution.executedPlan)
         .exists(_.toString.contains("graft-dpp")),
-      s"MOR scans must fall back to substitution:\n${q.queryExecution.executedPlan}")
+      s"MOR scans must serve the DSv2 scan:\n${q.queryExecution.executedPlan}")
+    val m = lastRuntimeIn("db.factmor")
+    assert(m.filesScanned < m.filesTotal,
+      s"the MOR read must prune at runtime: ${m.filesScanned}/${m.filesTotal}")
+
+    // (d) the whole-table MOR read against the read it replaced: Spark's
+    // parquet scan of the data files with their row positions, anti-joined
+    // to the broadcast delete rows
+    val t = new graft.catalog.GraftCatalog(
+      spark.conf.get("spark.sql.catalog.dppg.warehouse")).loadTable("db.factmor")
+    val scan = t.scan()
+    val loc = (p: String) => graft.format.GraftUtil.resolve(t.meta.location, p)
+    var perTask = 0L
+    val jobs = jobsDuring { perTask = scan.toDF(spark).count() }
+    var antiJoin = 0L
+    val antiJoinJobs = jobsDuring {
+      import org.apache.spark.sql.functions.{broadcast, col}
+      val data = spark.read.parquet(scan.dataFiles.map(f => loc(f.path)): _*)
+        .select(col("d"), col("_metadata.file_path").as("f"), col("_metadata.row_index").as("p"))
+      val dels = spark.read.parquet(scan.deleteFiles.map(f => loc(f.path)): _*)
+      antiJoin = data.join(broadcast(dels),
+        col("f") === col("file_path") && col("p") === col("pos"), "left_anti").count()
+    }
+    assert(perTask == 14300L && antiJoin == perTask, s"$perTask vs $antiJoin rows")
+    assert(jobs.size <= antiJoinJobs.size,
+      s"per-task deletes ran ${jobs.size} jobs (${jobs.mkString("; ")}), " +
+        s"the anti-join ${antiJoinJobs.size} (${antiJoinJobs.mkString("; ")})")
   }
 
   test("partition evolution: mixed-spec files keep execution-time pruning on the default route") {
     // r18: a long-lived table that moved from months() to days() used to
-    // fall back to the substitution path (planEligible required ONE spec)
+    // fall back to a separate native plan (eligibility required ONE spec)
     // and silently lose DPP. Specs are metadata-plane only — data files
     // carry all columns and keepForKeys prunes each file under the spec it
     // was written with — so the DPP route now serves both epochs: the 2023
@@ -469,7 +495,7 @@ class DppSpec extends SparkSpec {
     val m = lastRuntimeIn("db.factpe")
     assert(m.filesTotal > 1 && m.filesScanned < m.filesTotal,
       s"mixed-spec runtime filter must prune files: ${m.filesScanned}/${m.filesTotal}")
-    // no over-pruning: row-identical to the substitution path
+    // no over-pruning: row-identical to the native file-list read
     val native = nativeRows(sql, "dppe.db.factpe")
     assert(Seq(row) == native,
       s"mixed-spec DPP route diverged from the native path: $row vs $native")

@@ -82,7 +82,7 @@ class StreamIncrementalNeardupSpec extends SparkSpec {
     val (state, corpus) = newTables()
     val fetches = scala.collection.mutable.Buffer.empty[graft.table.ScanMetrics]
     val batches = Extensions.streamIncrementalNeardup(
-      spark, stageSlices(), docsSchema, state, corpus, onFetchMetrics = fetches += _)
+      spark, stageSlices(), docsSchema, state, corpus, onFetch = (m, _) => fetches += m)
 
     assert(batches == 2, s"expected 2 micro-batches, got $batches")
     val admitted = admittedIds(corpus)

@@ -3,7 +3,6 @@ package graft.table
 import graft.SparkSpec
 import graft.catalog.GraftCatalog
 import graft.format.{DataFile, GraftUtil, TableProperties, Transform}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -83,34 +82,6 @@ class DriverWriteParitySpec extends SparkSpec {
     val pa = driver.scan(graft.format.Predicate.Eq("s", "alpha")).dataFiles.map(_.path).size
     val pb = job.scan(graft.format.Predicate.Eq("s", "alpha")).dataFiles.map(_.path).size
     assert(pa == pb, s"pruning diverges: $pa vs $pb files kept")
-  }
-
-  /** Stage names (call sites) of the Spark jobs started while `body` ran. Listener events
-    * arrive in order, so the jobs are taken between two marker jobs.
-    */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.put(Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .getOrElse(e.stageInfos.map(_.name).mkString("; ")))
-    }
-    def marker(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("graft-jobs-begin")
-      body
-      marker("graft-jobs-end")
-      Iterator.continually {
-        val d = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-        assert(d != null, "the listener never saw the end marker job")
-        d
-      }.takeWhile(_ != "graft-jobs-end").toVector.dropWhile(_ != "graft-jobs-begin").drop(1)
-    } finally sc.removeSparkListener(listener)
   }
 
   private def footerOf(path: String) = {
@@ -293,6 +264,18 @@ class DriverWriteParitySpec extends SparkSpec {
       .toSeq == (0L until 20000L).map(i => (1000L + i, "x" * 500 + i)))
     // job-written files carry the Hadoop .crc sidecars the driver path never writes
     assert(parquetCrcs(t) > before, "the oversize append must have taken the job path")
+  }
+
+  test("a coalesce(1)'d local append takes the driver path without a Spark job") {
+    import spark.implicits._
+    // the crawl loops pin each micro-batch as coalesce(1) over local rows
+    val local = (0L until 50L).map(i => (i, s"v$i")).toDF("id", "s").coalesce(1)
+    val t = new GraftCatalog(tmp("graft-dwcoal")).createTable("db.coal", local.schema)
+    val jobs = jobsDuring(t.append(spark, local))
+    assert(jobs.isEmpty, s"the coalesce(1)'d local append ran Spark jobs: $jobs")
+    assert(t.toDF(spark).orderBy("id").as[(Long, String)].collect().toSeq ==
+      (0L until 50L).map(i => (i, s"v$i")))
+    assert(parquetCrcs(t) == 0, "the append must have taken the driver path")
   }
 
   test("an all-local plan that expands past the row cap takes the job path without a driver collect") {

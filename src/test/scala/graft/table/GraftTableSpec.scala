@@ -380,30 +380,6 @@ class GraftTableSpec extends SparkSpec {
       (1L, "a", 100.0), (2L, "a", 2.0), (3L, "b", 3.0), (4L, "b", 4.0), (5L, "c", 500.0)))
   }
 
-  test("MOR read falls back to a shuffled anti-join above the broadcast threshold") {
-    val cow = newTable("t_big_cow")
-    val mor = newTable("t_big_mor", props = Map("enable-iceberg-merge-on-read" -> "true"))
-    spark.conf.set("graft.mor.broadcast-max-bytes", "0") // drop the broadcast hint
-    // also silence Spark's own size-based auto-broadcast so the plan shows
-    // what the guard alone dictates (at real scale the delete side would
-    // exceed that threshold too)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      for (t <- Seq(cow, mor)) {
-        t.append(spark, mkDf(base))
-        t.delete(spark, Seq(Predicate.Gt("v", 2.5), Predicate.Lt("v", 4.5)))
-      }
-      assert(mor.scan().deleteFiles.nonEmpty)
-      assert(contents(cow) == contents(mor))
-      // the plan really is shuffle-based: no broadcast exchange on the delete side
-      val plan = mor.toDF(spark).queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastExchange"), s"expected shuffled anti-join:\n$plan")
-    } finally {
-      spark.conf.unset("graft.mor.broadcast-max-bytes")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
-  }
-
   test("rewritten manifests are partition-clustered chunks that phase-1 pruning can skip") {
     val t = newTable("t_mfchunk", partitioned = true)
     // interleaved appends: each manifest spans several partition values

@@ -128,20 +128,18 @@ class MetadataAggSpec extends SparkSpec {
     val q1 = spark.sql("SELECT count(*) AS n, min(id) AS lo, max(id) AS hi FROM gmeta.db.t")
     assert(q1.head() == Row(100L, 0L, 99L))
     val p1 = q1.queryExecution.executedPlan.toString
-    assert(!p1.contains("FileScan") && p1.contains("LocalTableScan"),
+    assert(!p1.contains("BatchScan") && p1.contains("LocalTableScan"),
       s"expected metadata-only answer:\n$p1")
 
     val q2 = spark.sql("SELECT count(*) AS n FROM gmeta.db.t WHERE cat = 'a'")
     assert(q2.head().getLong(0) == 60L)
     val p2 = q2.queryExecution.executedPlan.toString
-    assert(!p2.contains("FileScan") && p2.contains("LocalTableScan"),
+    assert(!p2.contains("BatchScan") && p2.contains("LocalTableScan"),
       s"expected metadata-only answer under identity-partition filter:\n$p2")
 
     // a filter on a data column must NOT collapse (and must stay correct);
-    // the real scan is the substituted FileScan or — for this partitioned
-    // table since r17 — the default-routed DSv2 graft-dpp batch scan
-    def realScan(p: String): Boolean =
-      p.contains("FileScan") || p.contains("graft-dpp")
+    // the real scan is the DSv2 graft-dpp batch scan
+    def realScan(p: String): Boolean = p.contains("graft-dpp")
     val q3 = spark.sql("SELECT count(*) FROM gmeta.db.t WHERE v >= 50.0")
     assert(q3.head().getLong(0) == 50L)
     assert(realScan(q3.queryExecution.executedPlan.toString),

@@ -142,6 +142,16 @@ class PlanAuditSpec extends SparkSpec {
         s"rank window not partitioned by query id: $w"))
   }
 
+  /** The read layouts (one per write schema) the Graft scans of `df` hand
+    * their readers: where the by-ID nested rebuild now lives.
+    */
+  private def layoutsOf(df: org.apache.spark.sql.DataFrame): Seq[graft.sources.ReadLayout] =
+    df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.collect { case g: graft.sources.GraftDppScan =>
+      g.createReaderFactory().asInstanceOf[graft.sources.GraftSpjReaderFactory].layouts.values
+    }.flatten
+
   test("nested-evolution read path: un-evolved struct columns stay on the cast fast path") {
     val schema = StructType(Seq(
       StructField("id", LongType),
@@ -153,9 +163,9 @@ class PlanAuditSpec extends SparkSpec {
     val a = cat.createTable("db.audit_flat", schema)
     a.append(spark, spark.createDataFrame(
       Seq(Row(1L, Row(10, "x"))).asJava, a.meta.currentSchema))
-    val planA = planOf(a.toDF(spark))
-    assert(!planA.contains("CASE WHEN"),
-      s"un-evolved struct should be a plain cast, not a rebuild:\n$planA")
+    val layoutsA = layoutsOf(a.toDF(spark))
+    assert(layoutsA.nonEmpty && layoutsA.forall(_.ordinals.isDefined),
+      s"un-evolved struct should be read as is, not rebuilt:\n$layoutsA")
 
     // table B: nested evolution — old files must be re-projected by ID
     val b = cat.createTable("db.audit_evolved", schema)
@@ -163,12 +173,17 @@ class PlanAuditSpec extends SparkSpec {
       Seq(Row(1L, Row(10, "x"))).asJava, b.meta.currentSchema))
     b.dropColumn("meta.tag")
     b.addColumn("meta.note", StringType)
-    val planB = planOf(b.toDF(spark))
-    assert(planB.contains("CASE WHEN") && planB.contains("struct(uid"),
-      s"evolved struct read must re-project by ID:\n$planB")
+    val layoutsB = layoutsOf(b.toDF(spark))
+    val rebuild = layoutsB.flatMap(_.exprs).mkString("\n")
+    assert(rebuild.contains("if (isnull(") && rebuild.contains("named_struct(uid"),
+      s"evolved struct read must re-project by ID:\n$rebuild")
     // dropped subfield is pruned out of the parquet read entirely
-    assert(planB.contains("meta:struct<uid:int>"),
-      s"dropped subfield should not be read:\n$planB")
+    assert(layoutsB.exists(_.request.catalogString.contains("meta:struct<uid:int>")),
+      s"dropped subfield should not be read:\n${layoutsB.map(_.request.catalogString)}")
+    assert(b.toDF(spark).collect().toSeq == Seq(Row(1L, Row(10, null))))
+    // nested-pruned reads rebuild only the subfields they ask for
+    assert(b.toDF(spark).select(col("meta.uid")).collect().toSeq == Seq(Row(10)))
+    assert(b.toDF(spark).select(col("meta.note")).collect().toSeq == Seq(Row(null)))
     // and the rebuild disappears again for files written under the NEW shape
     val c = cat.loadTable("db.audit_evolved")
     val newOnly = c.toDF(spark).filter(col("meta.note").isNotNull)
@@ -290,11 +305,11 @@ class PlanAuditSpec extends SparkSpec {
       .select("vec_id", "qsim")
       .orderBy(col("qsim").desc, col("vec_id")).limit(50)
     val plan = planOf(coarse)
-    // the CORPUS scan (the qcorpus table's FileScan) must read codes only;
-    // the 1-row query side reads its float vector from the raw fixture
+    // the CORPUS scan (the qcorpus table's graft-dpp scan) must read codes
+    // only; the 1-row query side reads its float vector from the raw fixture
     val corpusScans = plan.linesIterator.filter(l =>
-      l.contains("FileScan") && l.contains("qcorpus")).toList
-    assert(corpusScans.nonEmpty, s"no corpus FileScan found:\n$plan")
+      l.contains("graft-dpp") && l.contains("qcorpus")).toList
+    assert(corpusScans.nonEmpty, s"no corpus graft-dpp scan found:\n$plan")
     assert(corpusScans.forall(l =>
       l.contains("ReadSchema: struct<vec_id:bigint,codes:array<int>>")),
       s"coarse corpus scan must read codes, not the float embedding column:\n$corpusScans")
@@ -316,7 +331,7 @@ class PlanAuditSpec extends SparkSpec {
     // bytes than floats alone, making the 4x cut fake. The coarse pass
     // collapses to a driver-side winner-id list inside quantizedTopK, so
     // its scan is pinned on the projection it plans from (identical
-    // FileScan — projection pruning is select-driven), and the returned
+    // graft-dpp scan — projection pruning is select-driven), and the returned
     // df's lineage IS the re-rank.
     val d = "/root/testdata/sf0.001"
     val e = graft.queries.Tables.embeddings(spark, d)
@@ -327,7 +342,7 @@ class PlanAuditSpec extends SparkSpec {
     t.append(spark, e)
     val corpus = t.toDF(spark).filter(col("vec_id") =!= 0)
     val coarseScans = planOf(corpus.select(col("vec_id"), col("codes")))
-      .linesIterator.filter(l => l.contains("FileScan") && l.contains("qapi")).toList
+      .linesIterator.filter(l => l.contains("graft-dpp") && l.contains("qapi")).toList
     assert(coarseScans.nonEmpty && coarseScans.forall(_.contains(
       "ReadSchema: struct<vec_id:bigint,codes:array<int>>")),
       s"coarse projection must scan codes only:\n$coarseScans")
@@ -335,7 +350,7 @@ class PlanAuditSpec extends SparkSpec {
     val topk = graft.functions.VectorFunctions.quantizedTopK(
       corpus, q, "vec_id", "embedding", 10, 50, codesCol = Some("codes"))
     val rerankScans = planOf(topk).linesIterator.filter(l =>
-      l.contains("FileScan") && l.contains("qapi")).toList
+      l.contains("graft-dpp") && l.contains("qapi")).toList
     assert(rerankScans.exists(l =>
       l.contains("embedding:array<float>") && l.contains("In(vec_id")),
       s"re-rank must fetch floats under the pushed winner-id In filter:\n$rerankScans")
