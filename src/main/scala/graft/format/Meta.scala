@@ -50,11 +50,14 @@ object GraftSchema {
     case other => other
   }
 
-  /** Assign fresh IDs to fields that do not have one yet — at every nesting
-    * level (struct fields inside structs, array elements, map values), so
-    * nested evolution (docs/06:114-118) can rename/drop/widen by stable ID
-    * exactly like top-level columns. Returns the new schema and the new
-    * last-column-id.
+  /** Assign fresh IDs, numbered on from `lastColumnId`, to every field —
+    * at every nesting level (struct fields inside structs, array elements,
+    * map values), so nested evolution (docs/06:114-118) can rename/drop/
+    * widen by stable ID exactly like top-level columns. An ID the incoming
+    * field already carries is replaced: a schema taken from a read of
+    * another Graft table carries that table's IDs, which would collide
+    * with the fresh ones and leave last-column-id understated. Returns the
+    * new schema and the new last-column-id.
     */
   def assignIds(schema: StructType, lastColumnId: Int): (StructType, Int) = {
     var next = lastColumnId
@@ -66,8 +69,8 @@ object GraftSchema {
     }
     def walkField(f: StructField): StructField = {
       val withType = f.copy(dataType = walkType(f.dataType))
-      if (withType.metadata.contains(IdKey)) withType
-      else { next += 1; withId(withType, next) }
+      next += 1
+      withId(withType, next)
     }
     (StructType(schema.fields.map(walkField)), next)
   }

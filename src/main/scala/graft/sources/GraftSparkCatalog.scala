@@ -349,11 +349,12 @@ object TimeTravel {
 
 /** DSv2 Table over a [[GraftTable]], pinned in time: batch read (the DSv2
   * scan over the pinned snapshot), V1 batch write (append/overwrite),
-  * filter-based DELETE, truncate. Both the catalog and the
-  * `format("graft")` source serve this table.
+  * truncate. SQL DELETE, UPDATE and MERGE never reach it: `GraftSqlRewrites`
+  * turns them into native DML commands before planning. Both the catalog
+  * and the `format("graft")` source serve this table.
   */
 class GraftSparkTable(val graftTable: GraftTable, val travel: TimeTravel) extends Table
-    with SupportsRead with SupportsWrite with SupportsDelete {
+    with SupportsRead with SupportsWrite {
 
   override def name(): String = graftTable.name
   // a time-traveled relation reports the PINNED snapshot's schema — the
@@ -432,13 +433,6 @@ class GraftSparkTable(val graftTable: GraftTable, val travel: TimeTravel) extend
         }
       }
     }
-
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(f => CatalystPredicates.toPredicate(f).isDefined)
-
-  override def deleteWhere(filters: Array[Filter]): Unit =
-    graftTable.delete(SparkSession.active,
-      filters.flatMap(f => CatalystPredicates.toPredicate(f)).toSeq)
 }
 
 /** Pushed filters and pruned columns of one Graft read; `scan` builds the
@@ -507,8 +501,8 @@ class GraftFilesTable(native: GraftScan, files: Seq[graft.format.DataFile],
 }
 
 /** Spark → Graft predicate translation, for both shapes Spark hands a
-  * Graft read: `sources.Filter`s (pushed into the scan builder, DELETE's
-  * `SupportsDelete`, the DSv2 scan's runtime filters) and Catalyst
+  * Graft read: `sources.Filter`s (pushed into the scan builder, the DSv2
+  * scan's runtime filters) and Catalyst
   * expressions (SQL DML conditions, metadata aggregates). Partial on
   * purpose: untranslatable conjuncts just don't prune — Spark re-applies
   * the full filter, so soundness never depends on the translation.

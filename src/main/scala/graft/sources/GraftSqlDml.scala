@@ -62,8 +62,8 @@ object GraftSqlDml {
       GraftUpdateCommand(tbl, set, cond, prune)
     }
 
-  /** DeleteFromTable → command (covers conditions SupportsDelete cannot
-    * translate — subqueries excluded).
+  /** DeleteFromTable → command (any condition but subqueries; the
+    * translatable conjuncts drive pruning).
     */
   def translateDelete(d: DeleteFromTable): Option[GraftDeleteCommand] =
     graftTableOf(d.table).map { tbl =>

@@ -38,63 +38,58 @@ trait GraftMaintenance { self: GraftTable =>
     * docs/09:156-168).
     */
   def compact(spark: SparkSession, targetFileSizeBytes: Option[Long] = None,
-              where: Seq[Predicate] = Nil, statementId: Option[String] = None): Snapshot = {
-    val (_, m0) = load()
-    val scan0 = new GraftScan(this, m0, m0.currentSnapshot, where)
-    val target = targetFileSizeBytes
-      .orElse(m0.properties.get(TableProperties.TargetFileSize).map(_.toLong))
-      .getOrElse(128L * 1024 * 1024) // docs/10:40-41 example target
-    // Binpack: only undersized files that share their partition with
-    // another undersized file are rewritten — a compact of a huge,
-    // mostly-healthy table must be O(small files), not O(table), and a
-    // file alone in its partition has nothing to merge with. Exceptions
-    // that force a full rewrite of the scan's files: outstanding position
-    // deletes (folding them rewrites their targets) and CLUSTER BY (the
-    // point is re-sorting everything).
-    val clustered = m0.property(TableProperties.ClusterBy, "").trim.nonEmpty
-    val rewriteAll = clustered || scan0.deleteFiles.nonEmpty
-    val candidates =
-      if (rewriteAll) scan0.dataFiles
+              where: Seq[Predicate] = Nil, statementId: Option[String] = None): Snapshot =
+    commitChange(statementId) { m0 =>
+      val scan0 = new GraftScan(this, m0, m0.currentSnapshot, where)
+      val target = targetFileSizeBytes
+        .orElse(m0.properties.get(TableProperties.TargetFileSize).map(_.toLong))
+        .getOrElse(128L * 1024 * 1024) // docs/10:40-41 example target
+      // Binpack: only undersized files that share their partition with
+      // another undersized file are rewritten — a compact of a huge,
+      // mostly-healthy table must be O(small files), not O(table), and a
+      // file alone in its partition has nothing to merge with. Exceptions
+      // that force a full rewrite of the scan's files: outstanding position
+      // deletes (folding them rewrites their targets) and CLUSTER BY (the
+      // point is re-sorting everything).
+      val clustered = m0.property(TableProperties.ClusterBy, "").trim.nonEmpty
+      val rewriteAll = clustered || scan0.deleteFiles.nonEmpty
+      val candidates =
+        if (rewriteAll) scan0.dataFiles
+        else {
+          val small = scan0.dataFiles.filter(_.fileSizeBytes < (target * 3) / 4)
+          val shared = small.groupBy(f => (f.specId, f.partition))
+            .filter(_._2.size > 1).keySet
+          small.filter(f => shared((f.specId, f.partition)))
+        }
+      if (candidates.isEmpty) DataChange("replace", summary = Map("compacted-data-files" -> "0"))
       else {
-        val small = scan0.dataFiles.filter(_.fileSizeBytes < (target * 3) / 4)
-        val shared = small.groupBy(f => (f.specId, f.partition))
-          .filter(_._2.size > 1).keySet
-        small.filter(f => shared((f.specId, f.partition)))
-      }
-    if (candidates.isEmpty)
-      return commitSnapshot("replace", statementId, Map("compacted-data-files" -> "0")) { m =>
-        m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil)
-      }
-    val totalBytes = candidates.map(_.fileSizeBytes).sum
-    val totalRows = candidates.map(_.recordCount).sum.max(1L)
-    val rowBytes = (totalBytes / totalRows).max(1L)
+        val totalBytes = candidates.map(_.fileSizeBytes).sum
+        val totalRows = candidates.map(_.recordCount).sum.max(1L)
+        val rowBytes = (totalBytes / totalRows).max(1L)
 
-    val rows = scan0.materialize(spark, candidates, scan0.deleteFiles, withFileMeta = false)
-    // observed row width feeds future writes' maxRecordsPerFile estimate
-    val m1 = m0.copy(properties = m0.properties +
-      ("write.estimated-row-size-bytes" -> rowBytes.toString) +
-      (TableProperties.TargetFileSize -> target.toString))
-    val numFiles = math.max(1L, totalBytes / target).toInt
-    val arranged = if (m0.defaultSpec.isPartitioned) rows else rows.repartition(numFiles)
-    val newFiles = GraftWriter.write(spark, arranged, m1, m0.currentSchemaId, m0.defaultSpecId)
-    val newManifests = if (newFiles.isEmpty) Nil else Seq(writeManifest(m0, newFiles))
-    val candidatePaths = candidates.map(_.path).toSet
-    val compactedAll = where.isEmpty
-
-    val seenDeletePaths = scan0.deleteFiles.map(_.path).toSet
-    val snap = commitSnapshot("replace", statementId, Map(
-      "compacted-data-files" -> candidates.size.toString,
-      "added-data-files" -> newFiles.size.toString)) { m =>
-      val kept = replaceFiles(m, candidatePaths, newManifests, requireAllLive = true,
-        expectedDeletePaths = Some(seenDeletePaths))
-      // deletes were folded into the rewrite; drop delete manifests when the
-      // whole table was compacted (their rows now reference only dead paths)
-      if (compactedAll) kept.filter(_.content == "data") else kept
+        val rows = scan0.materialize(spark, candidates, scan0.deleteFiles, withFileMeta = false)
+        // observed row width feeds future writes' maxRecordsPerFile estimate
+        val rowSize = "write.estimated-row-size-bytes" -> rowBytes.toString
+        val m1 = m0.copy(properties = m0.properties + rowSize +
+          (TableProperties.TargetFileSize -> target.toString))
+        val numFiles = math.max(1L, totalBytes / target).toInt
+        val arranged = if (m0.defaultSpec.isPartitioned) rows else rows.repartition(numFiles)
+        val newFiles = GraftWriter.write(spark, arranged, m1, m0.currentSchemaId, m0.defaultSpecId)
+        val seenDeletes = scan0.deleteFiles.map(_.path).toSet
+        DataChange("replace", addedData = newFiles,
+          // a whole-table compaction folded every delete into the rewrite,
+          // so it removes the delete files too (their rows now reference
+          // only dead paths)
+          removed = candidates.map(_.path).toSet ++ (if (where.isEmpty) seenDeletes else Nil),
+          seenDeletes = Some(seenDeletes),
+          summary = Map(
+            "compacted-data-files" -> candidates.size.toString,
+            "added-data-files" -> newFiles.size.toString),
+          // persist the observed row width so future writes size files
+          // correctly, in the same commit
+          metadata = m => m.copy(properties = m.properties + rowSize))
+      }
     }
-    // persist the observed row width so future writes size files correctly
-    setProperty("write.estimated-row-size-bytes", rowBytes.toString)
-    snap
-  }
 
   /** ALTER TABLE ... REWRITE MANIFESTS (docs/10:80-95): consolidate many
     * small manifests — metadata-only, no data IO. Entries are sorted by
@@ -105,19 +100,20 @@ trait GraftMaintenance { self: GraftTable =>
     */
   def rewriteManifests(statementId: Option[String] = None,
                        maxEntriesPerManifest: Int = 5000): Snapshot =
-    commitSnapshot("replace", statementId, Map("manifests-rewritten" -> "true")) { m =>
-      val existing = m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil)
-      val (dataMfs, delMfs) = existing.partition(_.content == "data")
-      val regrouped = dataMfs.flatMap(readManifest(m, _))
-        .groupBy(_.specId).toSeq.sortBy(_._1)
-        .flatMap { case (_, files) =>
-          val clustered = files.sortBy(f =>
-            f.partition.toSeq.sortBy(_._1).map { case (k, v) => s"$k=${v.getOrElse("\u0000")}" }
-              .mkString("|"))
-          clustered.grouped(maxEntriesPerManifest).map(writeManifest(m, _)).toSeq
-        }
-      regrouped ++ delMfs
-    }
+    commitChange(statementId)(_ => DataChange("replace",
+      summary = Map("manifests-rewritten" -> "true"),
+      manifests = Some { m =>
+        val (dataMfs, delMfs) = currentManifests(m).partition(_.content == "data")
+        val regrouped = dataMfs.flatMap(readManifest(m, _))
+          .groupBy(_.specId).toSeq.sortBy(_._1)
+          .flatMap { case (_, files) =>
+            val clustered = files.sortBy(f =>
+              f.partition.toSeq.sortBy(_._1).map { case (k, v) => s"$k=${v.getOrElse("\u0000")}" }
+                .mkString("|"))
+            clustered.grouped(maxEntriesPerManifest).map(writeManifest(m, _)).toSeq
+          }
+        regrouped ++ delMfs
+      }))
 
   /** EXPIRE SNAPSHOTS (docs/05-snapshots-time-travel.md:101-119, docs/10:53-78):
     * drop snapshots older than `olderThanMs` (always retaining the current one,
@@ -172,7 +168,7 @@ trait GraftMaintenance { self: GraftTable =>
         // statementId-keyed commits, and pruning an entry just because its
         // snapshot expired would let a stream that resumes after the data
         // window re-apply an already-committed micro-batch — a silent
-        // double-ingest (commitSnapshot replays such entries as no-ops).
+        // double-ingest (the snapshot producer replays such entries as no-ops).
         // Entries for retained snapshots always survive; expired-snapshot
         // entries survive within the newest `statement-log.retain-last`
         // tail of the EXPIRED entries only (append order), so the ledger
@@ -239,7 +235,7 @@ trait GraftMaintenance { self: GraftTable =>
   /** O6: current health vs the reference's thresholds (docs/10:113-139). */
   def health(): TableHealth = {
     val m = meta
-    val mfs = m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil)
+    val mfs = currentManifests(m)
     val (dataMfs, delMfs) = mfs.partition(_.content == "data")
     val dataFiles = dataMfs.map(_.fileCount.toLong).sum
     val delFiles = delMfs.map(_.fileCount.toLong).sum

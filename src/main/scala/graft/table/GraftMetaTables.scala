@@ -43,7 +43,7 @@ trait GraftMetaTables { self: GraftTable =>
       StructField("record_count", LongType),
       StructField("spec_id", IntegerType),
       StructField("partition_summaries", MapType(StringType, StringType))))
-    val rows = m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil).map { mf =>
+    val rows = currentManifests(m).map { mf =>
       Row(mf.path, mf.content, mf.fileCount, mf.recordCount, mf.specId,
         mf.partitionSummaries.map { case (k, v) =>
           k -> s"[${v.lower.getOrElse("")}..${v.upper.getOrElse("")}]${if (v.containsNull) "+null" else ""}"
@@ -69,7 +69,7 @@ trait GraftMetaTables { self: GraftTable =>
       StructField("lower_bounds", MapType(StringType, StringType)),
       StructField("upper_bounds", MapType(StringType, StringType)),
       StructField("null_value_counts", MapType(StringType, LongType))))
-    val rows = m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil)
+    val rows = currentManifests(m)
       .flatMap(readManifest(m, _)).map { f =>
         def statMap[T](g: ColStats => Option[T]): Map[String, T] =
           f.stats.flatMap { case (id, st) => idToName.get(id).flatMap(n => g(st).map(n -> _)) }
@@ -97,7 +97,7 @@ trait GraftMetaTables { self: GraftTable =>
       StructField("file_count", IntegerType),
       StructField("total_size_in_bytes", LongType),
       StructField("position_delete_file_count", IntegerType)))
-    val files = m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil)
+    val files = currentManifests(m)
       .flatMap(readManifest(m, _))
     val rows = files
       .groupBy(f => (f.partition.map { case (k, v) => k -> v.orNull }, f.specId))
@@ -151,7 +151,7 @@ trait GraftMetaTables { self: GraftTable =>
     val fieldId = m.currentSchema.fields.find(_.name == column)
       .map(GraftSchema.fieldId).getOrElse(sys.error(s"unknown column $column"))
     val dt = m.currentSchema(column).dataType
-    val files = m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil)
+    val files = currentManifests(m)
       .filter(_.content == "data").flatMap(readManifest(m, _))
     val byPart = files.groupBy(_.partition)
     val schema = StructType(Seq(

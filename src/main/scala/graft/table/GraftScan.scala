@@ -4,7 +4,6 @@ import graft.format._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Paths
 import scala.jdk.CollectionConverters._
 
 /** Name-safe column references: schema field names are LITERAL (a name may
@@ -78,16 +77,6 @@ class GraftScan(
   def withFilter(more: Predicate*): GraftScan =
     new GraftScan(table, meta, snapshot, predicates ++ more, branchHead, tagPin,
       schemaOverrideId)
-
-  private def readManifestList(s: Snapshot): Seq[ManifestMeta] = {
-    val p = GraftUtil.resolve(meta.location, s.manifestListPath)
-    ManifestCache.get(p)(MetaJson.manifestListFromJson(GraftUtil.readString(Paths.get(p))))
-  }
-
-  private def readManifest(m: ManifestMeta): Seq[DataFile] = {
-    val p = GraftUtil.resolve(meta.location, m.path)
-    ManifestCache.get(p)(MetaJson.manifestFromJson(GraftUtil.readString(Paths.get(p))))
-  }
 
   /** Look up the source field for a partition field, preferring `schemaId`. */
   private def sourceField(sourceId: Int, schemaId: Int): Option[StructField] =
@@ -535,7 +524,7 @@ class GraftScan(
           System.currentTimeMillis())
         (Nil, Nil, m)
       case Some(s) =>
-        val manifests = readManifestList(s)
+        val manifests = table.readManifestList(meta, s)
         val (dataMfs, delMfs) = manifests.partition(_.content == "data")
         // phase 1: manifest pruning via partition summaries
         val survivingMfs = dataMfs.filter(mf => Predicate.mayMatch(pred, manifestCtx(mf)))
@@ -545,10 +534,10 @@ class GraftScan(
         // planning latency O(manifests)).
         val candidates = {
           import scala.collection.parallel.CollectionConverters._
-          survivingMfs.par.flatMap(readManifest).seq
+          survivingMfs.par.flatMap(table.readManifest(meta, _)).seq
         }
         val files = candidates.filter(f => Predicate.mayMatch(pred, fileCtx(f)))
-        val deletes = delMfs.flatMap(readManifest)
+        val deletes = delMfs.flatMap(table.readManifest(meta, _))
 
         val allFilesCount = dataMfs.map(_.fileCount.toLong).sum
         val prunedMfFiles = allFilesCount - candidates.size
@@ -592,11 +581,11 @@ class GraftScan(
   private lazy val exactFileMatches: Option[Seq[(DataFile, Boolean)]] = snapshot match {
     case None => Some(Nil)
     case Some(s) =>
-      val manifests = readManifestList(s)
+      val manifests = table.readManifestList(meta, s)
       if (manifests.exists(_.content != "data")) None
       else {
         import scala.collection.parallel.CollectionConverters._
-        val files = manifests.par.flatMap(readManifest).seq
+        val files = manifests.par.flatMap(table.readManifest(meta, _)).seq
         val verdicts = files.map(f => exactEval(pred, f))
         if (verdicts.exists(_.isEmpty)) None
         else Some(files.zip(verdicts.flatten))

@@ -5,6 +5,34 @@ import graft.format._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.Paths
 
+/** One data commit's change, stated as a value for
+  * [[GraftTable.commitChange]]: what it adds and removes, what it read
+  * that must still hold when it commits (docs/08:71-78), and its summary.
+  *
+  * @param addedData    data files written for this commit (one new manifest)
+  * @param addedDeletes position-delete files written for it (one new manifest)
+  * @param removed      paths it removes; each must still be live
+  * @param live         further paths that must still be live
+  * @param absent       paths that must not be live
+  * @param seenDeletes  the delete files its scan saw; no other may have appeared
+  * @param summary      operation-specific snapshot summary entries
+  * @param metadata     a metadata change committed with the snapshot
+  * @param manifests    the base manifest list, when it is not the head's
+  * @param branch       advance this branch instead of main
+  */
+private[table] case class DataChange(
+    operation: String,
+    addedData: Seq[DataFile] = Nil,
+    addedDeletes: Seq[DataFile] = Nil,
+    removed: Set[String] = Set.empty,
+    live: Set[String] = Set.empty,
+    absent: Set[String] = Set.empty,
+    seenDeletes: Option[Set[String]] = None,
+    summary: Map[String, String] = Map.empty,
+    metadata: TableMetadata => TableMetadata = identity,
+    manifests: Option[TableMetadata => Seq[ManifestMeta]] = None,
+    branch: Option[String] = None)
+
 /** A Graft table: the user-facing handle over the metadata tree.
   *
   * Handles are stateless — every operation loads the current metadata
@@ -216,7 +244,7 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
     * window (the log entry outlives its snapshot for exactly this case —
     * see TableProperties.StatementLogRetainLast).
     */
-  private[table] def replayedSnapshot(m: TableMetadata,
+  private def replayedSnapshot(m: TableMetadata,
       statementId: Option[String]): Option[Snapshot] =
     statementId.flatMap(stmt => m.statementLog.find(_._1 == stmt).map {
       case (_, sid) =>
@@ -225,63 +253,40 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
             "table has no current snapshot to stand in as the no-op result"))
     })
 
-  /** Assemble + commit a snapshot from a full manifest set. Retries CAS
-    * conflicts by re-running `manifestsFor` against the fresh base
-    * (docs/08:55-69); `manifestsFor` may throw CommitConflictException to
-    * abort (e.g. a COW rewrite whose source files were concurrently removed).
+  /** The manifest list of the current snapshot (empty before the first commit). */
+  private[table] def currentManifests(m: TableMetadata): Seq[ManifestMeta] =
+    m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil)
+
+  /** The one snapshot producer (docs/08:16-78): every data commit goes
+    * through here. It loads the base and answers a replayed `statementId`
+    * before any data work. `stage` then does the operation's data work
+    * against that base and states its [[DataChange]]. The change's new
+    * files get one manifest per content, written once. Each CAS attempt
+    * re-derives the manifest set from a fresh base through the delta rule
+    * ([[deltaManifests]], which also checks the change's conflicts and
+    * throws CommitConflictException to abort), writes the snapshot and
+    * swaps the pointer; a lost race retries (docs/08:55-69).
     */
-  private[table] def commitSnapshot(
-      operation: String,
-      statementId: Option[String],
-      extraSummary: Map[String, String] = Map.empty,
-      maxAttempts: Int = 5,
-      branch: Option[String] = None)(
-      manifestsFor: TableMetadata => Seq[ManifestMeta]): Snapshot = {
+  private[table] def commitChange(statementId: Option[String], maxAttempts: Int = 5)(
+      stage: TableMetadata => DataChange): Snapshot = {
+    val (_, m0) = load()
+    // Idempotent replay: a statement that already committed (a streaming
+    // micro-batch retried by the checkpoint machinery, docs/08:154 "each
+    // DML = one commit") returns its snapshot instead of re-writing its
+    // files only to orphan them. Each attempt re-checks against its fresh
+    // base, which catches the same statement committed concurrently.
+    replayedSnapshot(m0, statementId).foreach(snap => return snap)
+    val c = stage(m0)
+    val fresh = Seq(c.addedData -> "data", c.addedDeletes -> "position-deletes").collect {
+      case (files, content) if files.nonEmpty => writeManifest(m0, files, content)
+    }
     var attempt = 0
     while (true) {
       attempt += 1
       val (v, m) = load()
-      // Idempotent replay: a statement that already committed (streaming
-      // micro-batch retried by the checkpoint machinery, docs/08:154 "each
-      // DML = one commit") returns its snapshot instead of double-applying.
       replayedSnapshot(m, statementId).foreach(snap => return snap)
-      val manifests = manifestsFor(m)
-      val snapId = m.lastSequenceNumber + 1
-      val dataMfs = manifests.filter(_.content == "data")
-      val mlPath = writeManifestList(m, snapId, manifests)
-      val stmt = statementId.getOrElse(java.util.UUID.randomUUID().toString)
-      // a branch commit's parent is the branch head (falling back to main's
-      // head when the branch is being created by this very commit)
-      val parentId = branch.flatMap(m.refs.get).map(_.snapshotId).orElse(m.currentSnapshotId)
-      val snap = Snapshot(
-        snapshotId = snapId,
-        parentId = parentId,
-        sequenceNumber = snapId,
-        timestampMs = System.currentTimeMillis(),
-        operation = operation,
-        summary = extraSummary ++ Map(
-          "statement-id" -> stmt,
-          "total-data-files" -> dataMfs.map(_.fileCount.toLong).sum.toString,
-          "total-records" -> dataMfs.map(_.recordCount).sum.toString,
-          "total-delete-files" ->
-            manifests.filter(_.content == "position-deletes").map(_.fileCount.toLong).sum.toString),
-        manifestListPath = mlPath,
-        schemaId = m.currentSchemaId,
-        specId = m.defaultSpecId)
-      val next = branch match {
-        // branch commit: the snapshot lands in history and advances ONLY the
-        // ref — main (current-snapshot-id) does not see it until publish
-        case Some(b) => m.copy(
-          lastSequenceNumber = snapId,
-          snapshots = m.snapshots :+ snap,
-          refs = m.refs + (b -> graft.format.Ref(snapId, isBranch = true)),
-          statementLog = m.statementLog :+ (stmt -> snapId))
-        case None => m.copy(
-          lastSequenceNumber = snapId,
-          snapshots = m.snapshots :+ snap,
-          currentSnapshotId = Some(snapId),
-          statementLog = m.statementLog :+ (stmt -> snapId))
-      }
+      val (next, snap) = withSnapshot(c.metadata(m), c.operation, statementId, c.summary,
+        deltaManifests(m, c, fresh), c.branch)
       try {
         catalog.commit(name, v, next)
         return snap
@@ -292,6 +297,92 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
       }
     }
     sys.error("unreachable")
+  }
+
+  /** The delta rule: the base manifest list (the head's, or the one the
+    * change states) minus the change's removed paths, plus its new
+    * manifests. Untouched manifests are kept by path (no IO); a manifest
+    * that loses files is rewritten without them, or dropped when it loses
+    * them all. Position-delete manifests follow the same rule, so a data
+    * rewrite carries them forward: delete rows keyed by (file_path, pos)
+    * can only match files that still exist (compaction garbage-collects
+    * them, docs/10:30-36). The base's files are read only when the change
+    * removes files or has conflicts to check (docs/08:71-78):
+    *   - a removed or `live` path that is gone means a concurrent commit
+    *     rewrote what this change read;
+    *   - an `absent` path that is live means the change is already applied;
+    *   - a delete file beyond `seenDeletes` would be silently undone by a
+    *     rewrite that folded the deletes it saw.
+    */
+  private[table] def deltaManifests(m: TableMetadata, c: DataChange,
+                                    fresh: Seq[ManifestMeta]): Seq[ManifestMeta] = {
+    val base = c.manifests.fold {
+      c.branch.flatMap(m.refs.get).flatMap(r => m.snapshot(r.snapshotId)).orElse(m.currentSnapshot)
+        .map(readManifestList(m, _)).getOrElse(Nil)
+    }(_(m))
+    if (c.removed.isEmpty && c.live.isEmpty && c.absent.isEmpty && c.seenDeletes.isEmpty)
+      return base ++ fresh
+    // read each manifest exactly once per attempt
+    val contents = base.map(mf => mf -> readManifest(m, mf))
+    val livePaths = contents.flatMap(_._2.map(_.path)).toSet
+    def conflict(msg: String) = throw new CommitConflictException(s"$name: $msg")
+    val gone = (c.removed ++ c.live).diff(livePaths)
+    if (gone.nonEmpty)
+      conflict(s"${gone.size} file(s) this ${c.operation} read were concurrently rewritten " +
+        s"(e.g. ${gone.head})")
+    val dup = c.absent.intersect(livePaths)
+    if (dup.nonEmpty)
+      conflict(s"${c.operation} would double-apply ${dup.size} file(s) already live (e.g. ${dup.head})")
+    c.seenDeletes.foreach { seen =>
+      val added = contents.filter(_._1.content == "position-deletes")
+        .flatMap(_._2.map(_.path)).filterNot(seen)
+      if (added.nonEmpty)
+        conflict(s"${added.size} position-delete file(s) committed concurrently with this " +
+          s"${c.operation} (e.g. ${added.head}); retrying would lose those deletes")
+    }
+    contents.flatMap { case (mf, files) =>
+      val remaining = files.filterNot(f => c.removed(f.path))
+      if (remaining.size == files.size) Some(mf) // reuse as-is
+      else if (remaining.isEmpty) None
+      else Some(writeManifest(m, remaining, mf.content))
+    } ++ fresh
+  }
+
+  /** Append one snapshot over `manifests` to `m`: write its manifest
+    * list, record the totals its manifests hold, and advance main — or
+    * only `branch`, whose head is the parent (main's head when this very
+    * commit creates the branch). The one place a [[Snapshot]] is built.
+    */
+  private def withSnapshot(m: TableMetadata, operation: String, statementId: Option[String],
+                           extraSummary: Map[String, String], manifests: Seq[ManifestMeta],
+                           branch: Option[String]): (TableMetadata, Snapshot) = {
+    val snapId = m.lastSequenceNumber + 1
+    val dataMfs = manifests.filter(_.content == "data")
+    val mlPath = writeManifestList(m, snapId, manifests)
+    val stmt = statementId.getOrElse(java.util.UUID.randomUUID().toString)
+    val snap = Snapshot(
+      snapshotId = snapId,
+      parentId = branch.flatMap(m.refs.get).map(_.snapshotId).orElse(m.currentSnapshotId),
+      sequenceNumber = snapId,
+      timestampMs = System.currentTimeMillis(),
+      operation = operation,
+      summary = extraSummary ++ branch.map("branch" -> _) ++ Map(
+        "statement-id" -> stmt,
+        "total-data-files" -> dataMfs.map(_.fileCount.toLong).sum.toString,
+        "total-records" -> dataMfs.map(_.recordCount).sum.toString,
+        "total-delete-files" ->
+          manifests.filter(_.content == "position-deletes").map(_.fileCount.toLong).sum.toString),
+      manifestListPath = mlPath,
+      schemaId = m.currentSchemaId,
+      specId = m.defaultSpecId)
+    val logged = m.copy(lastSequenceNumber = snapId, snapshots = m.snapshots :+ snap,
+      statementLog = m.statementLog :+ (stmt -> snapId))
+    (branch match {
+      // a branch commit lands in history and advances ONLY the ref — main
+      // (current-snapshot-id) does not see it until publish
+      case Some(b) => logged.copy(refs = m.refs + (b -> graft.format.Ref(snapId, isBranch = true)))
+      case None => logged.copy(currentSnapshotId = Some(snapId))
+    }, snap)
   }
 
   /** Commit a metadata-only change (schema evolution, properties, refs). */
@@ -313,43 +404,24 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
   // -------------------------------------------------------------------
 
   /** INSERT INTO ... (append): write files once, commit with retry — disjoint
-    * appends always succeed (docs/08:83-96).
+    * appends always succeed (docs/08:83-96). Empty input still commits a
+    * (no-op) snapshot, so the statement is recorded.
     */
-  def append(spark: SparkSession, df: DataFrame, statementId: Option[String] = None): Snapshot = {
-    val (_, m0) = load()
-    // replay short-circuit BEFORE the write, not just inside the commit:
-    // append is the streaming sink's path, and a replayed micro-batch
-    // would otherwise re-write its whole batch of data files only to
-    // orphan them when commitSnapshot no-ops on the statement log — a
-    // crash-looping stream would grind disk for nothing (commitSnapshot
-    // still re-checks against a FRESH load, so a statement committed by a
-    // concurrent writer between here and the CAS is caught there).
-    replayedSnapshot(m0, statementId).foreach(snap => return snap)
+  def append(spark: SparkSession, df: DataFrame, statementId: Option[String] = None): Snapshot =
+    commitChange(statementId)(m0 => appended(spark, df, m0))
+
+  /** The change of an append of `df` onto `m0`. */
+  private def appended(spark: SparkSession, df: DataFrame, m0: TableMetadata): DataChange = {
     val newFiles = GraftWriter.write(spark, df, m0, m0.currentSchemaId, m0.defaultSpecId)
-    if (newFiles.isEmpty) {
-      // empty input: still a (no-op) snapshot so the statement is recorded
-      return commitSnapshot("append", statementId,
-        Map("added-data-files" -> "0", "added-records" -> "0")) { m =>
-        m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil)
-      }
-    }
-    val newManifest = writeManifest(m0, newFiles)
-    commitSnapshot("append", statementId, Map(
+    DataChange("append", addedData = newFiles, summary = Map(
       "added-data-files" -> newFiles.size.toString,
-      "added-records" -> newFiles.map(_.recordCount).sum.toString)) { m =>
-      m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil) :+ newManifest
-    }
+      "added-records" -> newFiles.map(_.recordCount).sum.toString))
   }
 
   /** INSERT OVERWRITE semantics: replace the whole table content. */
-  def overwrite(spark: SparkSession, df: DataFrame, statementId: Option[String] = None): Snapshot = {
-    val (_, m0) = load()
-    val newFiles = GraftWriter.write(spark, df, m0, m0.currentSchemaId, m0.defaultSpecId)
-    val manifests = if (newFiles.isEmpty) Nil else Seq(writeManifest(m0, newFiles))
-    commitSnapshot("overwrite", statementId, Map(
-      "added-data-files" -> newFiles.size.toString,
-      "added-records" -> newFiles.map(_.recordCount).sum.toString))(_ => manifests)
-  }
+  def overwrite(spark: SparkSession, df: DataFrame, statementId: Option[String] = None): Snapshot =
+    commitChange(statementId)(m0 =>
+      appended(spark, df, m0).copy(operation = "overwrite", manifests = Some(_ => Nil)))
 
   /** CREATE OR REPLACE body (docs/01:182) for an EXISTING table: one CAS
     * commit that installs a freshly-id'd schema (ids continue from
@@ -380,39 +452,13 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
         lastColumnId = lastCol,
         specs = m.specs + (newSpecId -> spec),
         defaultSpecId = newSpecId)
-      val manifests = data match {
-        case Some(df) =>
-          val files = GraftWriter.write(spark.getOrElse(df.sparkSession), df,
-            mNew, newSchemaId, newSpecId)
-          if (files.isEmpty) Nil else Seq(writeManifest(mNew, files))
-        case None => Nil
-      }
-      val snapId = m.lastSequenceNumber + 1
-      val mlPath = writeManifestList(mNew, snapId, manifests)
-      val stmt = java.util.UUID.randomUUID().toString
-      val dataMfs = manifests.filter(_.content == "data")
-      val snap = Snapshot(
-        snapshotId = snapId,
-        parentId = m.currentSnapshotId,
-        sequenceNumber = snapId,
-        timestampMs = System.currentTimeMillis(),
-        operation = "replace",
-        summary = Map(
-          // distinguishes TABLE replacement (fresh field-id space) from
-          // compaction's file-level "replace" operation — changelog's
-          // cross-replace guard keys on this
-          "table-replaced" -> "true",
-          "statement-id" -> stmt,
-          "total-data-files" -> dataMfs.map(_.fileCount.toLong).sum.toString,
-          "total-records" -> dataMfs.map(_.recordCount).sum.toString,
-          "total-delete-files" -> "0"),
-        manifestListPath = mlPath,
-        schemaId = newSchemaId,
-        specId = newSpecId)
-      mNew.copy(
-        lastSequenceNumber = snapId,
-        snapshots = m.snapshots :+ snap,
-        currentSnapshotId = Some(snapId),
+      val files = data.toSeq.flatMap(df =>
+        GraftWriter.write(spark.getOrElse(df.sparkSession), df, mNew, newSchemaId, newSpecId))
+      // "table-replaced" distinguishes TABLE replacement (fresh field-id
+      // space) from compaction's file-level "replace" operation —
+      // changelog's cross-replace guard keys on it
+      withSnapshot(mNew, "replace", None, Map("table-replaced" -> "true"),
+        if (files.isEmpty) Nil else Seq(writeManifest(mNew, files)), None)._1.copy(
         properties = properties,
         // surviving BRANCH refs demote to TAGS: the replace mints a fresh
         // field-id space, so a branch that kept following the live schema
@@ -420,8 +466,7 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
         // in an audit read). As tags they stay readable under their own
         // pinned schema; appends/publish through them are refused — stage
         // new work on a fresh branch of the replaced table.
-        refs = m.refs.map { case (n, r) => n -> r.copy(isBranch = false) },
-        statementLog = m.statementLog :+ (stmt -> snapId))
+        refs = m.refs.map { case (n, r) => n -> r.copy(isBranch = false) })
     }
 
   /** Live data files of the current (or given) snapshot. */
@@ -432,46 +477,38 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
   /** ROLLBACK: new snapshot whose content is an old snapshot's manifest list
     * (docs/05:151-160) — history is preserved, the rollback is itself a commit.
     */
-  def rollbackTo(snapshotId: Long, statementId: Option[String] = None): Snapshot = {
-    val (_, m0) = load()
-    val target = m0.snapshot(snapshotId).getOrElse(sys.error(s"snapshot $snapshotId not found"))
-    commitSnapshot("rollback", statementId,
-      Map("rolled-back-to" -> snapshotId.toString)) { m => readManifestList(m, target) }
-  }
+  def rollbackTo(snapshotId: Long, statementId: Option[String] = None): Snapshot =
+    commitChange(statementId) { m0 =>
+      val target = m0.snapshot(snapshotId).getOrElse(sys.error(s"snapshot $snapshotId not found"))
+      DataChange("rollback", summary = Map("rolled-back-to" -> snapshotId.toString),
+        manifests = Some(readManifestList(_, target)))
+    }
 
   /** CHERRY-PICK (docs/05:163-171, v2 branching): re-apply ONE snapshot's
     * changes on top of the current head — the classic "rolled back past a
     * good commit, replay it" move. Supported for additive snapshots
-    * (append / stream ingest): the manifests the snapshot added relative to
-    * its parent are appended to the current manifest set. Snapshots that
-    * removed or rewrote files (delete/update/merge/replace) are refused —
-    * replaying a rewrite against a diverged base silently resurrects or
-    * drops rows, so those need a fresh DML statement instead.
+    * (append / stream ingest): the files of the manifests the snapshot
+    * added relative to its parent are added again, and must not be live
+    * already (that would double-apply them). Snapshots that removed or
+    * rewrote files (delete/update/merge/replace) are refused — replaying a
+    * rewrite against a diverged base silently resurrects or drops rows, so
+    * those need a fresh DML statement instead.
     */
-  def cherryPick(snapshotId: Long, statementId: Option[String] = None): Snapshot = {
-    val (_, m0) = load()
-    val target = m0.snapshot(snapshotId).getOrElse(sys.error(s"snapshot $snapshotId not found"))
-    require(target.operation == "append",
-      s"cherry-pick supports append snapshots; snapshot $snapshotId is '${target.operation}'")
-    val parentMfs = target.parentId.flatMap(m0.snapshot)
-      .map(p => readManifestList(m0, p).map(_.path).toSet).getOrElse(Set.empty)
-    val added = readManifestList(m0, target).filterNot(mf => parentMfs.contains(mf.path))
-    require(added.nonEmpty, s"snapshot $snapshotId added no manifests; nothing to cherry-pick")
-    val addedPaths = added.flatMap(readManifest(m0, _)).map(_.path).toSet
-    commitSnapshot("append", statementId, Map(
-      "cherry-picked-from" -> snapshotId.toString,
-      "added-data-files" -> addedPaths.size.toString)) { m =>
-      val current = m.currentSnapshot.map(readManifestList(m, _)).getOrElse(Nil)
-      // double-apply guard: if any of the files are already live on the
-      // head, this snapshot's changes are (partially) present
-      val live = current.filter(_.content == "data").flatMap(readManifest(m, _)).map(_.path).toSet
-      val dup = addedPaths.intersect(live)
-      if (dup.nonEmpty)
-        throw new graft.catalog.CommitConflictException(
-          s"$name: cherry-pick of $snapshotId would double-apply ${dup.size} file(s) (e.g. ${dup.head})")
-      current ++ added
+  def cherryPick(snapshotId: Long, statementId: Option[String] = None): Snapshot =
+    commitChange(statementId) { m0 =>
+      val target = m0.snapshot(snapshotId).getOrElse(sys.error(s"snapshot $snapshotId not found"))
+      require(target.operation == "append",
+        s"cherry-pick supports append snapshots; snapshot $snapshotId is '${target.operation}'")
+      val parentMfs = target.parentId.flatMap(m0.snapshot)
+        .map(p => readManifestList(m0, p).map(_.path).toSet).getOrElse(Set.empty)
+      val added = readManifestList(m0, target).filterNot(mf => parentMfs.contains(mf.path))
+      require(added.nonEmpty, s"snapshot $snapshotId added no manifests; nothing to cherry-pick")
+      val files = added.flatMap(readManifest(m0, _))
+      DataChange("append", addedData = files, absent = files.map(_.path).toSet,
+        summary = Map(
+          "cherry-picked-from" -> snapshotId.toString,
+          "added-data-files" -> files.size.toString))
     }
-  }
 
   /** Write-audit-publish staging (docs/05:141-171's branching taken to its
     * standard lakehouse use): append on a branch — the snapshot enters
@@ -479,22 +516,14 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
     * — audit via `atRef(branch)`, then [[publish]] fast-forwards main.
     */
   def appendToBranch(spark: SparkSession, df: DataFrame, branch: String,
-                     statementId: Option[String] = None): Snapshot = {
-    val (_, m0) = load()
-    // a TAG is immutable by definition — appending through one would turn
-    // a pin into a movable head (Iceberg refuses this the same way)
-    m0.refs.get(branch).foreach(r =>
-      require(r.isBranch, s"$name: ref '$branch' is a tag — cannot append to a tag"))
-    val newFiles = GraftWriter.write(spark, df, m0, m0.currentSchemaId, m0.defaultSpecId)
-    val newManifest = if (newFiles.isEmpty) None else Some(writeManifest(m0, newFiles))
-    commitSnapshot("append", statementId, Map(
-      "added-data-files" -> newFiles.size.toString,
-      "added-records" -> newFiles.map(_.recordCount).sum.toString,
-      "branch" -> branch), branch = Some(branch)) { m =>
-      val base = m.refs.get(branch).map(_.snapshotId).flatMap(m.snapshot).orElse(m.currentSnapshot)
-      base.map(readManifestList(m, _)).getOrElse(Nil) ++ newManifest
+                     statementId: Option[String] = None): Snapshot =
+    commitChange(statementId) { m0 =>
+      // a TAG is immutable by definition — appending through one would turn
+      // a pin into a movable head (Iceberg refuses this the same way)
+      m0.refs.get(branch).foreach(r =>
+        require(r.isBranch, s"$name: ref '$branch' is a tag — cannot append to a tag"))
+      appended(spark, df, m0).copy(branch = Some(branch))
     }
-  }
 
   /** Publish a staged branch: fast-forward main to the branch head and DROP
     * the branch ref — its commits are main history now, so keeping the ref

@@ -9,8 +9,8 @@ import graft.format._
   * 50,000-file table costs milliseconds to build instead of the minutes
   * 50,000 real parquet writes would take, and the contract never scans a
   * data path. Lives in the table package to reuse the package-private
-  * manifest/commit internals instead of widening their visibility; the
-  * commit shape is exactly [[GraftTable.append]]'s (existing manifest list
+  * manifest/commit internals instead of widening their visibility; a
+  * fabricated append is an append's [[DataChange]] (existing manifest list
   * + one new manifest), so phase-1/phase-2 planning sees the real layout.
   */
 private[graft] object PlanningFixture {
@@ -19,10 +19,7 @@ private[graft] object PlanningFixture {
     * appended to the current manifest list.
     */
   def appendFabricated(t: GraftTable, files: Seq[DataFile]): Snapshot =
-    t.commitSnapshot("append", None) { m =>
-      val existing = m.currentSnapshot.map(t.readManifestList(m, _)).getOrElse(Nil)
-      existing :+ t.writeManifest(m, files)
-    }
+    t.commitChange(None)(_ => DataChange("append", addedData = files))
 
   /** One fabricated commit appending MANY manifests at once — the BULK
     * builder for order-of-magnitude planning contracts (contract 19's
@@ -32,10 +29,8 @@ private[graft] object PlanningFixture {
     * O(n²) manifest-list rewrites those commits would pay to build.
     */
   def appendFabricatedMany(t: GraftTable, manifests: Seq[Seq[DataFile]]): Snapshot =
-    t.commitSnapshot("append", None) { m =>
-      val existing = m.currentSnapshot.map(t.readManifestList(m, _)).getOrElse(Nil)
-      existing ++ manifests.map(t.writeManifest(m, _))
-    }
+    t.commitChange(None)(_ => DataChange("append",
+      manifests = Some(m => t.currentManifests(m) ++ manifests.map(t.writeManifest(m, _)))))
 
   /** (manifest-list bytes, per-manifest file bytes) of the CURRENT
     * snapshot's metadata tree — the contract-19 planning READ-VOLUME

@@ -436,4 +436,23 @@ class GraftSparkCatalogSpec extends SparkSpec {
     assert(spark.sql("SELECT * FROM galter.db.t").columns.toSeq ==
       Seq("id", "mid", "v", "a", "b", "c"))
   }
+
+  test("CTAS from a Graft table gets fresh, distinct field IDs; ADD COLUMN reads its own values") {
+    val wh = registerCatalog("gctas")
+    spark.sql("CREATE TABLE gctas.db.s (x BIGINT, y STRING, z BIGINT)")
+    spark.sql("INSERT INTO gctas.db.s VALUES (1, 'a', 100), (2, 'b', 200)")
+    // z and x arrive carrying the source's IDs 3 and 1, next to an ID-less w
+    spark.sql("CREATE TABLE gctas.db.t AS SELECT z, concat('w', y) AS w, x FROM gctas.db.s")
+    spark.sql("ALTER TABLE gctas.db.t ADD COLUMN n1 BIGINT")
+    spark.sql("ALTER TABLE gctas.db.t ADD COLUMN n2 BIGINT")
+    spark.sql("INSERT INTO gctas.db.t VALUES (300, 'wc', 3, 30, 3000)")
+    val m = new graft.catalog.GraftCatalog(wh).loadTable("db.t").meta
+    val ids = m.currentSchema.fields.map(graft.format.GraftSchema.fieldId).toSeq
+    assert(ids.distinct.size == ids.size, s"duplicate field IDs $ids")
+    assert(m.lastColumnId >= ids.max, s"last-column-id ${m.lastColumnId} below ${ids.max}")
+    val rows = spark.sql("SELECT z, w, x, n1, n2 FROM gctas.db.t ORDER BY x").collect()
+      .map(_.toSeq).toSeq
+    assert(rows == Seq(Seq(100L, "wa", 1L, null, null), Seq(200L, "wb", 2L, null, null),
+      Seq(300L, "wc", 3L, 30L, 3000L)))
+  }
 }

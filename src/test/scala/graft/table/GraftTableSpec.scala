@@ -178,8 +178,8 @@ class GraftTableSpec extends SparkSpec {
     t.delete(spark, Seq(Predicate.Eq("cat", "a"))) // concurrent MOR delete lands
     val (_, m1) = t.load()
     intercept[graft.catalog.CommitConflictException] {
-      t.replaceFiles(m1, t.scan().dataFiles.map(_.path).toSet, Nil,
-        requireAllLive = true, expectedDeletePaths = Some(seenDeletes))
+      t.deltaManifests(m1, DataChange("delete", removed = t.scan().dataFiles.map(_.path).toSet,
+        seenDeletes = Some(seenDeletes)), Nil)
     }
   }
 
@@ -189,13 +189,40 @@ class GraftTableSpec extends SparkSpec {
     val (_, m0) = t.load()
     val live = t.scan().dataFiles.map(_.path).toSet
     // all candidates still live -> guard passes
-    t.replaceFiles(m0, live.take(1), Nil, requireAllLive = true)
+    t.deltaManifests(m0, DataChange("delete", removed = live.take(1)), Nil)
     // a concurrent overwrite replaces every file; the stale rewrite must abort
     t.overwrite(spark, mkDf(base))
     val (_, m1) = t.load()
     intercept[graft.catalog.CommitConflictException] {
-      t.replaceFiles(m1, live.take(1), Nil, requireAllLive = true)
+      t.deltaManifests(m1, DataChange("delete", removed = live.take(1)), Nil)
     }
+  }
+
+  test("conflict guard: a MOR delete whose targets a concurrent compaction rewrote must abort (docs/08:71-78)") {
+    // the compaction lands after the delete wrote its position deletes and
+    // before its commit: the deletes would name dead files and vanish
+    var concurrent: () => Unit = () => ()
+    val cat = new GraftCatalog(tempWarehouse()) {
+      override def commit(name: String, expectedVersion: Int,
+                          newMeta: graft.format.TableMetadata): Int = {
+        val run = concurrent
+        concurrent = () => ()
+        run()
+        super.commit(name, expectedVersion, newMeta)
+      }
+    }
+    val t = cat.createTable("db.t_conf_mor", mkDf(Nil).schema,
+      properties = Map("enable-iceberg-merge-on-read" -> "true"))
+    base.grouped(2).foreach(rows => t.append(spark, mkDf(rows))) // three small files
+    val snaps = t.meta.snapshots.size
+    concurrent = () => t.compact(spark)
+    intercept[graft.catalog.CommitConflictException] {
+      t.delete(spark, Seq(Predicate.Eq("cat", "a")))
+    }
+    assert(t.meta.snapshots.size == snaps + 1)
+    assert(t.meta.currentSnapshot.get.operation == "replace")
+    assert(t.scan().deleteFiles.isEmpty)
+    assert(contents(t) == base.toSet)
   }
 
   test("AT(OFFSET) resolves a relative-time snapshot (docs/05:65-67)") {

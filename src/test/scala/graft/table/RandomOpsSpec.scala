@@ -11,16 +11,19 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** Model-based randomized DML and schema evolution (SURVEY §5.3): a seeded
-  * random sequence of append / COW-delete / MOR-delete / update / compact
-  * ops, interleaved with add-column, rename, widen (int→bigint,
-  * float→double, decimal precision) and drop-then-re-add-the-same-name,
-  * runs against both the Graft table and an in-memory model. Invariants
-  * after every op:
+  * random sequence of append / COW-delete / MOR-delete / update / compact /
+  * rewrite-manifests / rollback / cherry-pick ops, interleaved with
+  * add-column, rename, widen (int→bigint, float→double, decimal precision)
+  * and drop-then-re-add-the-same-name, runs against both the Graft table
+  * and an in-memory model. Invariants after every op:
   *   1. table contents == model contents, through `GraftTable.toDF`,
   *      catalog SQL and `format("graft")` alike;
   *   2. every earlier snapshot still re-reads its exact historical rows
   *      under its own schema, through `atSnapshot` and `VERSION AS OF`
-  *      (immutability, docs/05 + docs/08:30-49).
+  *      (immutability, docs/05 + docs/08:30-49);
+  *   3. snapshot accounting: the head's `total-data-files`,
+  *      `total-records` and `total-delete-files` equal what its live
+  *      manifests hold, and each manifest's counts equal its entries.
   */
 class RandomOpsSpec extends SparkSpec {
 
@@ -33,8 +36,28 @@ class RandomOpsSpec extends SparkSpec {
 
   private def rowsOf(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
 
+  /** Rows as `cols` read them: a value stored before its column was
+    * widened (a rolled-back or cherry-picked file) reads widened.
+    */
   private def expected(cols: Seq[MCol], rows: Set[MRow]): Set[Seq[Any]] =
-    rows.map(r => cols.map(c => r.getOrElse(c.key, null)))
+    rows.map(r => cols.map(c => widened(r.getOrElse(c.key, null), c.dt)))
+
+  /** Invariant 3: snapshot totals and manifest counts match the entries. */
+  private def checkAccounting(t: GraftTable, ctx: String): Unit = {
+    val m = t.meta
+    val summary = m.currentSnapshot.get.summary
+    val entries = t.currentManifests(m).map(mf => mf -> t.readManifest(m, mf))
+    entries.foreach { case (mf, files) =>
+      assert(mf.fileCount == files.size && mf.recordCount == files.map(_.recordCount).sum,
+        s"manifest ${mf.path} counts ${mf.fileCount}/${mf.recordCount} != its entries $ctx")
+    }
+    def filesOf(content: String) = entries.filter(_._1.content == content).flatMap(_._2)
+    assert(summary("total-data-files").toLong == filesOf("data").size, s"total-data-files $ctx")
+    assert(summary("total-records").toLong == filesOf("data").map(_.recordCount).sum,
+      s"total-records $ctx")
+    assert(summary("total-delete-files").toLong == filesOf("position-deletes").size,
+      s"total-delete-files $ctx")
+  }
 
   private def valueOf(rnd: Random, dt: DataType): Any =
     if (rnd.nextInt(6) == 0) null
@@ -74,6 +97,11 @@ class RandomOpsSpec extends SparkSpec {
       spark.read.format("graft").option("warehouse", wh).option("table", name).load()
 
     var model = Set.empty[MRow]
+    // rows of each append snapshot, and the appends a rollback undid (a
+    // cherry-pick may re-apply one)
+    var appended = Map.empty[Long, Set[MRow]]
+    var undone = Map.empty[Long, Set[MRow]]
+    val ran = scala.collection.mutable.Set.empty[String]
     var nextId = 0L
     var nextKey = 6
     // (snapshot id, columns at its commit, rows at its commit)
@@ -88,10 +116,23 @@ class RandomOpsSpec extends SparkSpec {
       if (cands.isEmpty) None else Some(cands(rnd.nextInt(cands.size)))
     }
 
-    for (step <- 1 to 18) {
+    // the 16 data ops in seeded order, so every kind runs; a rollback waits
+    // until it can undo an append, and a cherry-pick until one is undone
+    val dataOps = scala.collection.mutable.Buffer(rnd.shuffle(Vector.fill(5)("append") ++
+      Vector("delete", "delete", "update", "update", "compact", "compact", "rewrite-manifests",
+        "rollback", "rollback", "cherry-pick", "cherry-pick")): _*)
+    def rollbackTargets = history.filter(h => !t.meta.currentSnapshotId.contains(h._1) &&
+      appended.keys.exists(_ > h._1))
+    def nextDataOp(): String = dataOps.remove(math.max(0, dataOps.indexWhere {
+      case "rollback" => rollbackTargets.nonEmpty
+      case "cherry-pick" => undone.nonEmpty
+      case _ => true
+    }))
+    for (step <- 1 to 24) {
       val what =
         if (step % 3 == 0) evolutions((step / 3 - 1) % evolutions.size)
-        else Vector("append", "append", "delete", "update", "compact")(rnd.nextInt(5))
+        else nextDataOp()
+      ran += what
       what match {
         case "append" => // 1-20 rows in the current schema
           val rows = (0 until rnd.nextInt(20) + 1).map { _ =>
@@ -104,9 +145,10 @@ class RandomOpsSpec extends SparkSpec {
             })).toMap
           }
           val schema = StructType(cols.map(c => StructField(c.name, c.dt)))
-          t.append(spark, spark.createDataFrame(
+          val snap = t.append(spark, spark.createDataFrame(
             rows.map(r => Row.fromSeq(cols.map(c => r(c.key)))).asJava, schema))
           model ++= rows
+          appended += snap.snapshotId -> rows.toSet
         case "delete" => // a whole group
           val g = groups(rnd.nextInt(3))
           t.delete(spark, Seq(Predicate.Eq("grp", g)))
@@ -120,6 +162,27 @@ class RandomOpsSpec extends SparkSpec {
           })
         case "compact" =>
           t.compact(spark) // content-neutral
+        case "rewrite-manifests" =>
+          t.rewriteManifests() // content-neutral
+        case "rollback" => // to a random earlier snapshot that a later append follows
+          val earlier = rollbackTargets
+          if (earlier.isEmpty) ran -= what
+          else {
+            val (sid, _, rows) = earlier(rnd.nextInt(earlier.size))
+            t.rollbackTo(sid)
+            model = rows
+            // appends committed after the target are absent from it, and no
+            // live snapshot's deletes can name their files
+            undone = appended.filter(_._1 > sid)
+          }
+        case "cherry-pick" => // re-apply an append the last rollback undid
+          if (undone.isEmpty) ran -= what
+          else {
+            val (sid, rows) = undone.minBy(_._1)
+            t.cherryPick(sid)
+            model ++= rows
+            undone -= sid
+          }
         case "add" =>
           val c = MCol(nextKey, s"x$nextKey", Vector(StringType, IntegerType, FloatType)(rnd.nextInt(3)))
           nextKey += 1
@@ -161,6 +224,7 @@ class RandomOpsSpec extends SparkSpec {
       assert(rowsOf(t.toDF(spark)) == want, s"toDF diverges $ctx")
       assert(rowsOf(spark.sql(s"SELECT * FROM $sqlCat.$name")) == want, s"SQL diverges $ctx")
       assert(rowsOf(graftRead()) == want, s"format(graft) diverges $ctx")
+      checkAccounting(t, ctx)
       val head = t.meta.currentSnapshotId
       if (!history.exists(h => head.contains(h._1))) history += ((head.get, cols, model))
       // every earlier snapshot re-reads its exact historical rows; the
@@ -172,6 +236,8 @@ class RandomOpsSpec extends SparkSpec {
           s"VERSION AS OF $sid diverges $ctx")
       }
     }
+    assert(Set("compact", "rewrite-manifests", "rollback", "cherry-pick").subsetOf(ran),
+      s"ops that ran: $ran")
     spark.conf.unset(s"spark.sql.catalog.$sqlCat.warehouse")
     spark.conf.unset(s"spark.sql.catalog.$sqlCat")
   }
