@@ -225,7 +225,6 @@ object TableProperties {
   val ClusterBy = "cluster-by"                        // docs/09:156-168 (comma-sep col names)
   val ClusterStrategy = "write.cluster-strategy"      // "linear" (default) | "zorder"
   val BloomColumns = "write.bloom-columns"            // comma-sep cols to bloom-index
-  val BloomBits = "write.bloom-bits"                  // bitmap size (default 4096)
   /** How many statement-log entries survive snapshot expiry REGARDLESS of
     * whether their snapshot was expired (default 10000). The log is the
     * replay-idempotency ledger for statementId-keyed commits (streaming

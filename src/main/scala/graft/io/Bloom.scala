@@ -14,17 +14,28 @@ import org.apache.spark.sql.types._
   * a "definitely absent" answer is never wrong, and a saturated filter
   * (high-cardinality column in one file) merely degrades to "maybe".
   *
-  * Representation: a bits/8-byte bitmap, base64 in the manifest (4096 bits
-  * = ~700 JSON chars per column per file). Each value probes two positions
-  * derived from ONE xxhash64 of the value's canonical string — the classic
-  * (h1 + i·h2) double-hashing split of the 64-bit hash — so the executor
-  * side is a single codegen'd hash call, and the driver reproduces it
-  * exactly by evaluating the SAME catalyst expressions (Cast to string,
-  * then XxHash64, [[hashOf]]) on a probe literal or on the rows of a small
-  * append it reads back itself. The hash pair is bitmap-size-free;
-  * positions are taken modulo the size of the bitmap being probed, so a
-  * table whose `write.bloom-bits` changed over time stays consistent
-  * per-file.
+  * Representation: a power-of-two bitmap, base64 in the manifest. Each
+  * value probes two positions derived from ONE xxhash64 of the value's
+  * canonical string — the classic (h1 + i·h2) double-hashing split of the
+  * 64-bit hash — so the executor side is a single codegen'd hash call, and
+  * the driver reproduces it exactly by evaluating the SAME catalyst
+  * expressions (Cast to string, then XxHash64, [[hashOf]]) on a probe
+  * literal or on the rows of a small append it reads back itself.
+  *
+  * Sizing: every build sets its positions modulo [[MaxBits]] (2^18 bits,
+  * 32 KB), then [[Bitmap.result]] folds the bitmap — ORs its upper half
+  * into its lower half — while the folded bitmap keeps at most 30 % of its
+  * bits set, down to [[MinBits]]. A file whose values saturate MinBits thus
+  * gets the smallest power of two that keeps a probe's false-positive rate
+  * at most 0.3² = 9 %: one of 5,000 distinct keys ends at 32,768 bits
+  * (4 KB). A file of fewer values keeps MinBits, whose false-positive rate
+  * is far lower: a runtime filter probes a file with many keys at once, and
+  * a 9 % rate per key would keep most files for a few dozen of them.
+  * Because positions are `h mod 2^b`, a folded bitmap answers every probe
+  * exactly as a direct build at its final size would, and rules out every
+  * key a smaller fold of it rules out. The probe takes positions modulo the
+  * length of the bitmap it reads, so bitmaps of any power-of-two size,
+  * fixed-size ones written before sizing included, probe soundly.
   *
   * Instant-timestamp columns hash through the session time zone on
   * executors and UTC on the driver; Graft already requires UTC sessions
@@ -32,19 +43,36 @@ import org.apache.spark.sql.types._
   */
 object Bloom {
 
-  val DefaultBits = 4096
+  /** The size every bitmap is built at before [[Bitmap.result]] folds it. */
+  val MaxBits: Int = 1 << 18
 
-  /** Executor-side: the two probe positions of `c` in a `bits`-bit bitmap.
+  /** The size folding stops at, so a small file stays selective under a
+    * many-key IN list or runtime filter.
+    */
+  val MinBits: Int = 4096
+
+  /** Folding continues while at most this share of the folded bits is set. */
+  private val MaxFill = 0.3
+
+  /** Executor-side: the two positions of `c` in the [[MaxBits]]-bit bitmap.
     * NULLs yield NULL positions via the explicit guard — Spark's xxhash64
     * returns the SEED (42) for a NULL input, so without it every file
     * containing a null would set hash-42's bits and weaken the filter
     * (nulls are tracked by null-count, not bloom).
     */
-  def positionColumns(c: Column, bits: Int): (Column, Column) = {
+  def positionColumns(c: Column): (Column, Column) = {
     val h = when(c.isNotNull, xxhash64(c.cast("string")))
     val h1 = pmod(h, lit(0x100000000L))
     val h2 = pmod(shiftright(h, 32), lit(0x100000000L))
-    (pmod(h1, lit(bits.toLong)).cast("int"), pmod(h1 + h2, lit(bits.toLong)).cast("int"))
+    (pmod(h1, lit(MaxBits.toLong)).cast("int"), pmod(h1 + h2, lit(MaxBits.toLong)).cast("int"))
+  }
+
+  /** Driver-side twin of [[positionColumns]]: the two positions of a hash
+    * pair in the [[MaxBits]]-bit bitmap.
+    */
+  def positions(hashes: (Long, Long)): (Int, Int) = {
+    val (h1, h2) = hashes
+    ((h1 % MaxBits).toInt, ((h1 + h2) % MaxBits).toInt)
   }
 
   /** The hash every bloom is built and probed with: xxhash64 (seed 42) of
@@ -109,11 +137,37 @@ object Bloom {
       } catch { case _: Exception => None }
     }
 
-  /** Bitmap from set positions, base64-encoded. */
-  def encode(positions: Iterable[Int], bits: Int): String = {
-    val bytes = new Array[Byte](bits / 8)
-    positions.foreach { p => bytes(p >>> 3) = (bytes(p >>> 3) | (1 << (p & 7))).toByte }
-    java.util.Base64.getEncoder.encodeToString(bytes)
+  /** One file's bitmap for one column while it is built: [[MaxBits]] bits
+    * (32 KB) whatever the file holds, sized only when it is encoded.
+    */
+  final class Bitmap {
+    private val words = new Array[Long](MaxBits / 64)
+
+    /** Set a position below [[MaxBits]]. */
+    def add(p: Int): Unit = words(p >>> 6) |= 1L << (p & 63)
+
+    /** The folded bitmap, base64-encoded: bit `p` is bit `p & 7` of byte
+      * `p >>> 3`, the layout [[mayContainBits]] reads. Folds in place, so
+      * it is called once per bitmap.
+      */
+    def result(): String = {
+      def foldedSetBits(half: Int) =
+        (0 until half).iterator.map(i => java.lang.Long.bitCount(words(i) | words(i + half))).sum
+      var n = words.length // in 64-bit words
+      while (n > MinBits / 64 && foldedSetBits(n / 2) <= MaxFill * (n / 2) * 64) {
+        n /= 2
+        (0 until n).foreach(i => words(i) |= words(i + n))
+      }
+      val bytes = Array.tabulate[Byte](n * 8)(j => (words(j >>> 3) >>> ((j & 7) * 8)).toByte)
+      java.util.Base64.getEncoder.encodeToString(bytes)
+    }
+  }
+
+  /** The sized bitmap of a set of [[MaxBits]]-bit positions, base64-encoded. */
+  def encode(positions: Iterable[Int]): String = {
+    val b = new Bitmap
+    positions.foreach(b.add)
+    b.result()
   }
 
   /** Decoded bitmap, or None when the text is unusable (malformed/empty) —

@@ -916,7 +916,6 @@ object MaintenanceOps {
           val cat = newCatalog()
           val t = cat.createTable("db.li_bloom", li.schema)
           t.setProperty(graft.format.TableProperties.BloomColumns, "l_orderkey")
-          t.setProperty(graft.format.TableProperties.BloomBits, (1 << 18).toString)
           t.append(s, li)
           val ctrl = cat.createTable("db.li_nobloom", li.schema)
           ctrl.append(s, li)
@@ -1004,7 +1003,6 @@ object MaintenanceOps {
           val cat = newCatalog()
           val t = cat.createTable("db.li_rf", li.schema)
           t.setProperty(graft.format.TableProperties.BloomColumns, "l_orderkey")
-          t.setProperty(graft.format.TableProperties.BloomBits, (1 << 18).toString)
           t.append(s, li)
           t
         }

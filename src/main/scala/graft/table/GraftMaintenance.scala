@@ -97,6 +97,9 @@ trait GraftMaintenance { self: GraftTable =>
     * giant manifest would make every scan read the whole file inventory,
     * while partition-clustered chunks give each manifest a tight partition
     * summary, so phase-1 pruning skips whole manifests for selective scans.
+    * A lone data manifest that already fits one chunk is kept as it is:
+    * a copy would hold the same entries and the same summary, and the
+    * previous snapshot would keep the original alive beside it.
     */
   def rewriteManifests(statementId: Option[String] = None,
                        maxEntriesPerManifest: Int = 5000): Snapshot =
@@ -104,14 +107,16 @@ trait GraftMaintenance { self: GraftTable =>
       summary = Map("manifests-rewritten" -> "true"),
       manifests = Some { m =>
         val (dataMfs, delMfs) = currentManifests(m).partition(_.content == "data")
-        val regrouped = dataMfs.flatMap(readManifest(m, _))
+        val chunks = dataMfs.flatMap(readManifest(m, _))
           .groupBy(_.specId).toSeq.sortBy(_._1)
           .flatMap { case (_, files) =>
             val clustered = files.sortBy(f =>
               f.partition.toSeq.sortBy(_._1).map { case (k, v) => s"$k=${v.getOrElse("\u0000")}" }
                 .mkString("|"))
-            clustered.grouped(maxEntriesPerManifest).map(writeManifest(m, _)).toSeq
+            clustered.grouped(maxEntriesPerManifest).toSeq
           }
+        val regrouped =
+          if (dataMfs.size == 1 && chunks.size == 1) dataMfs else chunks.map(writeManifest(m, _))
         regrouped ++ delMfs
       }))
 

@@ -446,12 +446,15 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
       val newSchemaId = m.schemas.keys.max + 1
       val newSpecId = m.specs.keys.max + 1
       val spec = PartitionSpec(newSpecId, PartitionSpec.fieldsFor(schemaWithIds, partitionBy))
+      // the replacement data is written under the NEW properties (its
+      // bloom columns, cluster-by, target file size), not the replaced ones
       val mNew = m.copy(
         schemas = m.schemas + (newSchemaId -> schemaWithIds),
         currentSchemaId = newSchemaId,
         lastColumnId = lastCol,
         specs = m.specs + (newSpecId -> spec),
-        defaultSpecId = newSpecId)
+        defaultSpecId = newSpecId,
+        properties = properties)
       val files = data.toSeq.flatMap(df =>
         GraftWriter.write(spark.getOrElse(df.sparkSession), df, mNew, newSchemaId, newSpecId))
       // "table-replaced" distinguishes TABLE replacement (fresh field-id
@@ -459,7 +462,6 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
       // changelog's cross-replace guard keys on it
       withSnapshot(mNew, "replace", None, Map("table-replaced" -> "true"),
         if (files.isEmpty) Nil else Seq(writeManifest(mNew, files)), None)._1.copy(
-        properties = properties,
         // surviving BRANCH refs demote to TAGS: the replace mints a fresh
         // field-id space, so a branch that kept following the live schema
         // would resolve every pre-replace file to NULLs (silent data loss
@@ -488,17 +490,24 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
     * changes on top of the current head — the classic "rolled back past a
     * good commit, replay it" move. Supported for additive snapshots
     * (append / stream ingest): the files of the manifests the snapshot
-    * added relative to its parent are added again, and must not be live
-    * already (that would double-apply them). Snapshots that removed or
-    * rewrote files (delete/update/merge/replace) are refused — replaying a
-    * rewrite against a diverged base silently resurrects or drops rows, so
-    * those need a fresh DML statement instead.
+    * added relative to its parent are added again. Snapshots that removed
+    * or rewrote files (delete/update/merge/replace) are refused — replaying
+    * a rewrite against a diverged base silently resurrects or drops rows,
+    * so those need a fresh DML statement instead.
+    *
+    * A snapshot already applied to the head is refused, as Iceberg does,
+    * by lineage ([[appliedToHead]]): a compaction may have moved its rows
+    * into new files, so its own paths no longer show it. Its files must
+    * also not be live (the commit-time `absent` check).
     */
   def cherryPick(snapshotId: Long, statementId: Option[String] = None): Snapshot =
     commitChange(statementId) { m0 =>
       val target = m0.snapshot(snapshotId).getOrElse(sys.error(s"snapshot $snapshotId not found"))
       require(target.operation == "append",
         s"cherry-pick supports append snapshots; snapshot $snapshotId is '${target.operation}'")
+      require(!appliedToHead(m0, snapshotId),
+        s"snapshot $snapshotId is already applied to the current head; " +
+          "cherry-picking it would double-apply its rows")
       val parentMfs = target.parentId.flatMap(m0.snapshot)
         .map(p => readManifestList(m0, p).map(_.path).toSet).getOrElse(Set.empty)
       val added = readManifestList(m0, target).filterNot(mf => parentMfs.contains(mf.path))
@@ -509,6 +518,19 @@ class GraftTable(val catalog: GraftCatalog, val name: String)
           "cherry-picked-from" -> snapshotId.toString,
           "added-data-files" -> files.size.toString))
     }
+
+  /** Is `snapshotId`'s change part of the head's content? The walk goes
+    * from the current snapshot through parents, jumping from a rollback to
+    * the snapshot it restored (whose content it took), and answers yes when
+    * it reaches `snapshotId` or a cherry-pick of it. Snapshot ids only grow,
+    * so the walk ends; an expired snapshot ends it early.
+    */
+  private def appliedToHead(m: TableMetadata, snapshotId: Long): Boolean =
+    Iterator.iterate(m.currentSnapshot)(_.flatMap { s =>
+      (if (s.operation == "rollback") s.summary.get("rolled-back-to").map(_.toLong)
+       else s.parentId).flatMap(m.snapshot)
+    }).takeWhile(_.isDefined).flatten.exists(s =>
+      s.snapshotId == snapshotId || s.summary.get("cherry-picked-from").contains(snapshotId.toString))
 
   /** Write-audit-publish staging (docs/05:141-171's branching taken to its
     * standard lakehouse use): append on a branch — the snapshot enters

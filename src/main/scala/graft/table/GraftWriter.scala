@@ -262,11 +262,12 @@ object GraftWriter {
     * state commit paid it per batch. Larger writes run ONE Spark job over
     * the just-written files, reading ONLY the bloom columns (column-pruned
     * scan) and reducing to per-file distinct bit positions — a
-    * map-side-combined set bounded by the bitmap size, never the values
-    * themselves. Both sides hash through the same catalyst expressions, so
-    * their bitmaps are bit-identical (BloomDriverParitySpec pins it per
-    * type). Opt-in by property, so tables that don't point-look-up pay
-    * nothing.
+    * map-side-combined set bounded by [[graft.io.Bloom.MaxBits]], never the
+    * values themselves. Both sides hash through the same catalyst
+    * expressions and size through the same [[graft.io.Bloom.Bitmap]], so
+    * their bitmaps are bit-identical (BloomDriverParitySpec pins it per type
+    * and per size). Opt-in by property, so tables that don't point-look-up
+    * pay nothing.
     */
   private[table] def attachBlooms(spark: SparkSession, files: Seq[DataFile],
                                   meta: TableMetadata, schema: StructType,
@@ -284,8 +285,6 @@ object GraftWriter {
         case _ => true
       })
     if (cols.isEmpty || files.isEmpty) return files
-    val bits = meta.property(TableProperties.BloomBits, graft.io.Bloom.DefaultBits.toString).toInt
-    require(bits >= 64 && bits % 8 == 0, s"${TableProperties.BloomBits}=$bits (need >=64, /8)")
 
     if (files.map(_.fileSizeBytes).sum <= driverMaxBytes) {
       val read = graft.sources.GraftSpj.readFunc(spark, schema, StructType(cols),
@@ -293,7 +292,7 @@ object GraftWriter {
       import scala.collection.parallel.CollectionConverters._
       return files.par.map { df =>
         val blooms = driverBlooms(read, GraftUtil.resolve(meta.location, df.path),
-          df.fileSizeBytes, cols, bits)
+          df.fileSizeBytes, cols)
         val merged = blooms.foldLeft(df.stats) { case (st, (id, b)) =>
           st.updated(id, st.getOrElse(id, ColStats(None, None, None)).copy(bloom = Some(b)))
         }
@@ -303,7 +302,7 @@ object GraftWriter {
 
     val paths = files.map(f => GraftUtil.resolve(meta.location, f.path))
     val aggs = cols.flatMap { f =>
-      val (p1, p2) = graft.io.Bloom.positionColumns(Cols.q(f.name), bits)
+      val (p1, p2) = graft.io.Bloom.positionColumns(Cols.q(f.name))
       Seq(collect_set(p1).as(s"_b1_${f.name}"), collect_set(p2).as(s"_b2_${f.name}"))
     }
     val rows = spark.read.schema(schema).parquet(paths: _*)
@@ -314,7 +313,7 @@ object GraftWriter {
     val byPath: Map[String, Map[Int, String]] = rows.map { r =>
       val blooms = cols.zipWithIndex.map { case (f, i) =>
         val ps = r.getSeq[Int](1 + 2 * i) ++ r.getSeq[Int](2 + 2 * i)
-        GraftSchema.fieldId(f) -> graft.io.Bloom.encode(ps, bits)
+        GraftSchema.fieldId(f) -> graft.io.Bloom.encode(ps)
       }.toMap
       GraftUtil.normFileLoc(r.getString(0)) -> blooms
     }.toMap
@@ -339,24 +338,23 @@ object GraftWriter {
     * diverge.
     */
   private def driverBlooms(read: PartitionedFile => Iterator[InternalRow], path: String,
-                           size: Long, cols: Seq[StructField], bits: Int): Map[Int, String] = {
+                           size: Long, cols: Seq[StructField]): Map[Int, String] = {
     val hashes = cols.zipWithIndex.map { case (f, i) =>
       graft.io.Bloom.hashOf(BoundReference(i, f.dataType, nullable = true))
     }
-    val positions = cols.map(_ => scala.collection.mutable.BitSet.empty)
+    val blooms = cols.map(_ => new graft.io.Bloom.Bitmap)
     read(graft.sources.GraftSpj.slice(path, 0L, size, size)).foreach { row =>
       var i = 0
       while (i < cols.length) {
         if (!row.isNullAt(i)) {
-          val (h1, h2) = graft.io.Bloom.pairOf(hashes(i).eval(row).asInstanceOf[Long])
-          positions(i) += (h1 % bits).toInt
-          positions(i) += ((h1 + h2) % bits).toInt
+          val (p1, p2) = graft.io.Bloom.positions(
+            graft.io.Bloom.pairOf(hashes(i).eval(row).asInstanceOf[Long]))
+          blooms(i).add(p1)
+          blooms(i).add(p2)
         }
         i += 1
       }
     }
-    cols.zip(positions).map { case (f, ps) =>
-      GraftSchema.fieldId(f) -> graft.io.Bloom.encode(ps, bits)
-    }.toMap
+    cols.zip(blooms).map { case (f, b) => GraftSchema.fieldId(f) -> b.result() }.toMap
   }
 }

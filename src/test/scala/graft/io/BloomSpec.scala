@@ -87,8 +87,8 @@ class BloomSpec extends SparkSpec {
     for ((dt, v) <- cases) {
       val hp = Bloom.hashPair(dt, v)
       assert(hp.isDefined, s"hashPair must handle $dt")
-      val enc = Bloom.encode(
-        Seq((hp.get._1 % 4096).toInt, ((hp.get._1 + hp.get._2) % 4096).toInt), 4096)
+      val (p1, p2) = Bloom.positions(hp.get)
+      val enc = Bloom.encode(Seq(p1, p2))
       assert(Bloom.mayContain(enc, hp.get), s"false negative for $dt $v")
     }
     assert(Bloom.hashPair(LongType, null).isEmpty)
@@ -103,7 +103,7 @@ class BloomSpec extends SparkSpec {
     val df = spark.createDataFrame(
       Seq(Row(null), Row("x")).asJava,
       StructType(Seq(StructField("c", StringType))))
-    val (p1, p2) = Bloom.positionColumns(col("c"), 4096)
+    val (p1, p2) = Bloom.positionColumns(col("c"))
     val rows = df.select(col("c"), p1.as("a"), p2.as("b")).collect()
     val byVal = rows.map(r => Option(r.getString(0)) -> (r.isNullAt(1), r.isNullAt(2))).toMap
     assert(byVal(None) == ((true, true)), "null input must contribute no positions")
@@ -137,6 +137,72 @@ class BloomSpec extends SparkSpec {
         assert(n >= 1L, s"$dt: present value $v was lost (false negative)")
       }
     }
+  }
+
+  /** A bitmap of a fixed `bits` size with the two positions of each hash
+    * pair set, in the layout the probe reads: how blooms were encoded before
+    * they were sized from the data, and what a direct build at a folded
+    * bitmap's final size gives.
+    */
+  private def fixedBitmap(pairs: Seq[(Long, Long)], bits: Int): Array[Byte] = {
+    val bytes = new Array[Byte](bits / 8)
+    pairs.flatMap { case (h1, h2) => Seq(h1 % bits, (h1 + h2) % bits) }.foreach { pl =>
+      val p = pl.toInt
+      bytes(p >>> 3) = (bytes(p >>> 3) | (1 << (p & 7))).toByte
+    }
+    bytes
+  }
+
+  private def pairsOf(keys: Seq[Long]) = keys.map(k => Bloom.hashPair(LongType, k).get)
+
+  test("a file of 5,000 distinct keys gets a bitmap that skips absent in-range keys") {
+    val cat = new GraftCatalog(tempWarehouse())
+    val t = cat.createTable("db.bsz", schema)
+    t.setProperty(TableProperties.BloomColumns, "id")
+    // even keys 0..9998: every odd key in range is absent, and min/max keep it
+    t.append(spark, spark.createDataFrame(
+      (0 until 5000).map(i => Row(2L * i, s"t$i")).asJava, schema).coalesce(1))
+    val files = t.scan().dataFiles
+    assert(files.size == 1, s"expected one file, got ${files.size}")
+    val bitmap = Bloom.decode(files.head.stats.values.flatMap(_.bloom).head).get
+    val rng = new scala.util.Random(5)
+    val absent = Seq.fill(1000)(2L * rng.nextInt(5000) + 1)
+    val kept = pairsOf(absent).count(Bloom.mayContainBits(bitmap, _))
+    assert(kept <= 120, s"${bitmap.length * 8}-bit bitmap kept $kept of 1000 absent keys")
+    assert(pairsOf((0 until 5000).map(2L * _)).forall(Bloom.mayContainBits(bitmap, _)))
+    // the scan's bloom plane skips the file for an absent key it rules out
+    val ruledOut = absent.find(k => !Bloom.mayContainBits(bitmap, pairsOf(Seq(k)).head)).get
+    assert(t.scan(Predicate.Eq("id", ruledOut)).plan._1.isEmpty)
+  }
+
+  test("seeded: a folded bitmap equals a direct build at its size, with no false negative") {
+    val rng = new scala.util.Random(20261020L)
+    for (n <- Seq(0, 1, 5, 12, 40, 300, 2000, 5000, 20000, 60000, 200000) ++
+        Seq.fill(12)(rng.nextInt(30000))) {
+      val pairs = Seq.fill(n)(Bloom.pairOf(rng.nextLong()))
+      val folded = Bloom.decode(Bloom.encode(pairs.flatMap { hp =>
+        val (p1, p2) = Bloom.positions(hp); Seq(p1, p2)
+      })).get
+      val bits = folded.length * 8
+      assert(Integer.bitCount(bits) == 1 && bits >= Bloom.MinBits && bits <= Bloom.MaxBits,
+        s"n=$n: $bits bits")
+      assert(folded.sameElements(fixedBitmap(pairs, bits)), s"n=$n: fold differs from a direct build")
+      assert(pairs.forall(Bloom.mayContainBits(folded, _)), s"n=$n: false negative")
+      // the size rule: at most 30 % set, and one more fold would exceed it
+      def fill(b: Array[Byte]) = b.map(x => Integer.bitCount(x & 0xff)).sum.toDouble / (b.length * 8)
+      assert(bits == Bloom.MaxBits || fill(folded) <= 0.3, s"n=$n: ${fill(folded)} set")
+      assert(bits == Bloom.MinBits || fill(fixedBitmap(pairs, bits / 2)) > 0.3,
+        s"n=$n: $bits bits not minimal")
+    }
+  }
+
+  test("a fixed 4,096-bit bitmap written before sizing probes soundly") {
+    val present = (0 until 3000).map(i => 7L * i)
+    val enc = java.util.Base64.getEncoder.encodeToString(fixedBitmap(pairsOf(present), 4096))
+    assert(pairsOf(present).forall(Bloom.mayContain(enc, _)), "false negative on a 4,096-bit bitmap")
+    val sparse = java.util.Base64.getEncoder.encodeToString(fixedBitmap(pairsOf(Seq(1L, 2L)), 4096))
+    assert(pairsOf((3L until 203L)).exists(!Bloom.mayContain(sparse, _)),
+      "a sparse 4,096-bit bitmap still rules keys out")
   }
 
   test("compaction rewrites carry blooms forward") {

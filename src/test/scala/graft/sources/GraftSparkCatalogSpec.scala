@@ -294,6 +294,35 @@ class GraftSparkCatalogSpec extends SparkSpec {
     assert(viaSource.collect().map(_.getLong(0)).sorted.toSeq == (10L until 100L))
   }
 
+  test("CALL rewrite_manifests on a one-manifest table keeps its manifest and returns (1, 1)") {
+    val wh = registerCatalog("grm1")
+    spark.sql("CREATE TABLE grm1.db.one (id BIGINT, v DOUBLE)")
+    spark.sql("INSERT INTO grm1.db.one SELECT id, CAST(id AS DOUBLE) FROM range(10)")
+    val t = new graft.catalog.GraftCatalog(wh).loadTable("db.one")
+    def manifestPaths() = t.manifestsDF(spark).collect().map(_.getString(0)).toSeq
+    val before = manifestPaths()
+    val rm = spark.sql("CALL grm1.system.rewrite_manifests('db.one')").head()
+    assert((rm.getInt(0), rm.getInt(1)) == ((1, 1)))
+    assert(manifestPaths() == before)
+    assert(spark.sql("SELECT count(*) FROM grm1.db.one").head.getLong(0) == 10)
+  }
+
+  test("CREATE OR REPLACE ... TBLPROPERTIES AS SELECT writes under the new properties") {
+    val wh = registerCatalog("grepl")
+    spark.sql("CREATE TABLE grepl.db.r (id BIGINT, v DOUBLE)")
+    spark.sql("INSERT INTO grepl.db.r SELECT id, CAST(id AS DOUBLE) FROM range(5)")
+    spark.sql("""CREATE OR REPLACE TABLE grepl.db.r
+      |TBLPROPERTIES ('write.bloom-columns' = 'id')
+      |AS SELECT id, CAST(id AS DOUBLE) AS v FROM range(20)""".stripMargin)
+    val t = new graft.catalog.GraftCatalog(wh).loadTable("db.r")
+    val idField = graft.format.GraftSchema.fieldId(t.schema("id"))
+    val files = t.scan().dataFiles
+    assert(files.nonEmpty)
+    assert(files.forall(_.stats.get(idField).exists(_.bloom.isDefined)),
+      "the replacement data must carry a bloom on id")
+    assert(t.properties.get("write.bloom-columns").contains("id"))
+  }
+
   test("CALL procedures: the SQL maintenance surface (docs/03:184-206, docs/10)") {
     registerCatalog("gproc")
     spark.sql("CREATE TABLE gproc.db.m (id BIGINT, cat STRING) PARTITIONED BY (cat)")

@@ -74,4 +74,34 @@ class BloomDriverParitySpec extends SparkSpec {
     // and the bitmaps are non-trivial (some bits set)
     assert(driver.values.exists(b => java.util.Base64.getDecoder.decode(b).exists(_ != 0)))
   }
+
+  test("files whose distinct counts fold to different sizes get identical bitmaps on both paths") {
+    val schema = StructType(Seq(StructField("k", LongType), StructField("s", StringType)))
+    val cat = new GraftCatalog(
+      java.nio.file.Files.createTempDirectory("graft-bloomsize").toString)
+    val t = cat.createTable("db.bz", schema,
+      properties = Map(TableProperties.BloomColumns -> "k,s"))
+    // one file per append: 4,096, 16,384, 32,768 and 262,144 bits
+    val distinct = Seq(12, 2000, 5000, 40000)
+    distinct.foreach { n =>
+      t.append(spark, spark.range(0, 2L * n).selectExpr("id % " + n + " AS k",
+        "concat('v', CAST(id % " + n + " AS STRING)) AS s").coalesce(1))
+    }
+    val unbloomed = t.scan().dataFiles.map(df =>
+      df.copy(stats = df.stats.map { case (id, st) => id -> st.copy(bloom = None) }))
+    assert(unbloomed.size == distinct.size, s"expected one file per append, got ${unbloomed.size}")
+
+    def bloomsOf(driverMaxBytes: Long): Map[(String, Int), String] =
+      GraftWriter.attachBlooms(spark, unbloomed, t.meta, t.meta.currentSchema, driverMaxBytes)
+        .flatMap(df => df.stats.collect { case (id, st) if st.bloom.isDefined =>
+          (df.path, id) -> st.bloom.get })
+        .toMap
+
+    val driver = bloomsOf(64L * 1024 * 1024)
+    val job = bloomsOf(0L)
+    assert(driver.size == 2 * distinct.size, s"expected a bloom per file and column: ${driver.keySet}")
+    assert(driver == job, "driver- and job-built bitmaps diverge")
+    val sizes = driver.values.map(b => java.util.Base64.getDecoder.decode(b).length * 8).toSet
+    assert(sizes.size >= distinct.size, s"distinct counts should fold to different sizes: $sizes")
+  }
 }

@@ -293,6 +293,44 @@ class GraftTableSpec extends SparkSpec {
     assert(t.toDF(spark).count() == 20)
   }
 
+  test("rewriteManifests keeps a lone manifest that already fits and writes no copy") {
+    val t = newTable("t_rm_one")
+    t.append(spark, mkDf(base))
+    val metaDir = java.nio.file.Paths.get(t.location, "metadata")
+    def manifestFiles() = {
+      val ls = java.nio.file.Files.list(metaDir)
+      try ls.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("manifest-")).toSet
+      finally ls.close()
+    }
+    val before = t.currentManifests(t.meta).map(_.path)
+    val filesBefore = manifestFiles()
+    assert(before.size == 1)
+    t.rewriteManifests()
+    assert(t.meta.currentSnapshot.get.summary.get("manifests-rewritten").contains("true"))
+    assert(t.currentManifests(t.meta).map(_.path) == before, "the lone manifest must be kept")
+    assert(manifestFiles() == filesBefore, "no manifest file may be written")
+    assert(contents(t) == base.toSet)
+    // two manifests still consolidate into one new one
+    t.append(spark, mkDf(Seq((6L, "c", 6.0))))
+    t.rewriteManifests()
+    val after = t.currentManifests(t.meta).map(_.path)
+    assert(after.size == 1 && !before.contains(after.head))
+    assert(t.toDF(spark).count() == 6)
+  }
+
+  test("cherry-pick refuses an append a compaction already folded into the head") {
+    val t = newTable("t_cp_compact")
+    t.append(spark, mkDf(base.take(2)))
+    val s1 = t.meta.currentSnapshotId.get
+    t.append(spark, mkDf(base.drop(2)))
+    t.compact(spark)
+    // the first append's files are gone, but its rows are live: picking it
+    // again would duplicate them
+    val ex = intercept[IllegalArgumentException](t.cherryPick(s1))
+    assert(ex.getMessage.contains("already applied"))
+    assert(contents(t) == base.toSet && t.toDF(spark).count() == base.size)
+  }
+
   test("hidden partition pruning scans only the matching partition's files (docs/07:132-144)") {
     val t = newTable("t_prune", partitioned = true)
     t.append(spark, mkDf(base))

@@ -170,10 +170,11 @@ class KeepForKeysSpec extends SparkSpec {
       val bloom =
         if (bloomOf.isEmpty) None
         else Some(graft.io.Bloom.encode(bloomOf.flatMap { v =>
-          graft.io.Bloom.hashPair(LongType, v).toSeq.flatMap { case (h1, h2) =>
-            Seq((h1 % 512).toInt, ((h1 + h2) % 512).toInt)
+          graft.io.Bloom.hashPair(LongType, v).toSeq.flatMap { hp =>
+            val (p1, p2) = graft.io.Bloom.positions(hp)
+            Seq(p1, p2)
           }
-        }, 512))
+        }))
       ColStats(lo.map(_.toString), hi.map(_.toString), Some(nulls), bloom)
     }
     val files = Seq(
